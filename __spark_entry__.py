@@ -12,12 +12,13 @@ hash arithmetic (poly31 / MinHash / SimHash over BIGINT mod 2^31-1).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lsh_search_go_spark import gated  # noqa: E402
 

@@ -179,10 +179,9 @@ def leg_ann(spark) -> dict:
 
 
 def leg_ivf(spark) -> dict:
-    import numpy as np
     from pyspark.sql import functions as F
 
-    from lsh_search_go_spark.operators import ivf
+    from lsh_search_go_spark.operators import ann, ivf
 
     ph = Phases()
     ann_n = int(os.environ.get("SPARK_GRAFT_ANN_N", "1000000"))
@@ -196,9 +195,9 @@ def leg_ivf(spark) -> dict:
     queries.count()
     emb.select("id").mapInPandas(lambda it: it, "id long").count()
 
-    sample = ph.timed("ivf_sample_topandas",
-                      lambda: emb.orderBy("id").limit(20000).toPandas()["vec"])
-    X = np.array([np.asarray(v, dtype=np.float64) for v in sample])
+    X = ph.timed("ivf_sample_collect",
+                 lambda: ann.collect_vec_matrix(emb.orderBy("id").limit(20000)
+                                                .select("vec")))
     C = ph.timed("ivf_fit_centroids", lambda: ivf.fit_centroids(X, 1000, "cosine"))
     inv = ivf.assign(emb, C, "cosine").persist()
     ph.timed("ivf_assign_count", lambda: inv.count())
@@ -315,8 +314,6 @@ def capture_plans(spark, suffix: str) -> None:
 
     # bench-leg shapes (1M fixture too slow to build for a plan: use a small
     # replica with the same physical operators)
-    import numpy as np
-
     from lsh_search_go_spark.config import AnnConfig
     from lsh_search_go_spark.operators import ann, ivf
     from lsh_search_go_spark.operators.bruteforce import brute_force_topk_np
@@ -341,8 +338,7 @@ def capture_plans(spark, suffix: str) -> None:
                     max_candidates=10_000))
     dump("bench_bruteforce_np",
          brute_force_topk_np(emb, queries, 10, "cosine", exclude_self=False))
-    sample = emb.orderBy("id").limit(5000).toPandas()["vec"]
-    X = np.array([np.asarray(v, dtype=np.float64) for v in sample])
+    X = ann.collect_vec_matrix(emb.orderBy("id").limit(5000).select("vec"))
     C = ivf.fit_centroids(X, 100, "cosine")
     inv = ivf.assign(emb, C, "cosine")
     dump("bench_ivf_assign", inv)

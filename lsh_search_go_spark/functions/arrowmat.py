@@ -10,7 +10,8 @@ offsets array (guide §4.2), so a rectangular batch converts to an (n, d)
 matrix with a single ``reshape`` over the flat buffer — no per-row work at
 all.  These helpers do that conversion (and the reverse take/emit plumbing),
 with an explicit fallback for ragged or null-carrying input where a flat
-reshape would misalign.
+reshape would misalign.  :func:`collect_matrix` applies the same reshape to
+driver-side collects, so the driver never boxes one vector per row either.
 
 Every consumer feeds the IDENTICAL float64 matrix to the same numpy kernels
 the previous pandas path used, so results are bit-identical — this module
@@ -71,6 +72,19 @@ def matrix_from_column(col, dtype=np.float64) -> np.ndarray:
     return X if X is not None else rows_to_matrix(col, dtype)
 
 
+def collect_matrix(df, vec_col: str, id_col: str | None = None):
+    """Collect a DataFrame's vector column to the driver through ONE
+    ``toArrow()`` transfer → ``(ids, X)``.  ``X`` is the (n, d) float64
+    matrix from :func:`matrix_from_column`; ``ids`` is the Arrow id column
+    in the same row order, or ``None`` when no ``id_col`` is given."""
+    cols = [vec_col] if id_col is None else [id_col, vec_col]
+    if df.columns != cols:      # a new projection costs one more schema fetch
+        df = df.select(*cols)
+    tbl = df.toArrow()
+    ids = None if id_col is None else tbl.column(0)
+    return ids, matrix_from_column(tbl.column(len(cols) - 1))
+
+
 def take(col, indices: np.ndarray):
     """Type-preserving gather on an Arrow column (ids stay whatever type the
     caller's schema declares — long, string, ...)."""
@@ -116,14 +130,21 @@ def id_index_lookup(q_ids: list):
 
     Integer ids resolve with one vectorized searchsorted; anything else
     falls back to a Python dict (the id list is a query batch — small by
-    contract)."""
+    contract).  Either way an id that is not in ``q_ids`` raises
+    ``KeyError`` instead of selecting some other query's row."""
     arr = np.asarray(q_ids)
     if arr.dtype.kind in ("i", "u"):
         sorter = np.argsort(arr, kind="stable")
         sorted_ids = arr[sorter]
 
         def lookup(ids: np.ndarray) -> np.ndarray:
+            ids = np.asarray(ids)
             pos = np.searchsorted(sorted_ids, ids)
+            hit = pos < len(sorted_ids)
+            hit[hit] = sorted_ids[pos[hit]] == ids[hit]
+            if not hit.all():
+                raise KeyError(f"ids not in the query list: "
+                               f"{ids[~hit][:5].tolist()}")
             return sorter[pos]
 
         return lookup

@@ -23,12 +23,17 @@ holds most of the rows.  Scale-safe by construction:
 * the repartition keys on the caller's id column — deterministic under task
   retry (guide §2.5 warns against rand-derived keys), and a unique id
   spreads evenly;
-* callers gate on their own measured economics (``min_serial_us_per_row``):
-  the shuffle moves the full payload once (~0.01 μs/byte on this box), so a
-  pass whose serial cost is below the shuffle's per-row cost — e.g. a
-  100-query brute-force scan at ~6 μs/row vs a 512-byte row — correctly
-  declines to shuffle, while the 12 μs/row hash build and the 250 μs/row
-  1000-query gram accept.
+* a relation counts as degenerate only when its largest partition holds
+  more than ``max_share`` (default 0.5) of the rows AND it has at least
+  ``min_rows`` (default 50k) rows — below that floor the skewed task
+  finishes quickly anyway;
+* callers whose per-row cost depends on the query batch add their own
+  batch-size gate: the shuffle moves the full payload once (measured
+  ~0.01 μs/byte), so the brute-force scan and the grouped verify rebalance
+  only for batches of ≥ 256 queries (a 100-query scan at ~6 μs/row vs a
+  512-byte row would lose to the shuffle; the 250 μs/row 1000-query gram
+  wins), and a smaller brute-force batch uses :func:`is_degenerate` to run
+  batch threads instead.  The 12 μs/row hash build always rebalances.
 
 Rebalancing never changes results — only the physical row layout.  Every
 consumer is row-independent (per-row kernels) or order-insensitive

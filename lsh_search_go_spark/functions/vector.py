@@ -15,11 +15,8 @@ addition is order-sensitive, identical order ⇒ identical bits.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lsh_search_go_spark.config import TOL
 
@@ -49,41 +46,6 @@ def l2_dist_expr(a: str, b: str) -> Column:
             f"(x, y) -> (cast(x as double) - cast(y as double)) * (cast(x as double) - cast(y as double))), "
             f"cast(0.0 as double), (s, v) -> s + v))")
     return F.expr(expr)
-
-
-def dist_udf(metric: str):
-    """Arrow-batched pairwise distance: (vec_a, vec_b) columns → double.
-
-    The numpy fast path for candidate verification at benchmark scale — the
-    JVM ``aggregate`` folds above are kept for the DuckDB-mirrored gate
-    queries (bit-identical fold order); this path matches them to ~1e-12
-    (summation order differs) and is ~50× faster per element.
-    Implements the same reference edge semantics (tol guard, clamp).
-    """
-    if metric not in ("cosine", "l2"):
-        raise ValueError(f"unknown metric {metric!r}")
-
-    @F.pandas_udf(T.DoubleType())
-    def udf(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype=float)
-        A = np.array([np.asarray(x, dtype=np.float64) for x in va])
-        B = np.array([np.asarray(x, dtype=np.float64) for x in vb])
-        if metric == "l2":
-            d = np.linalg.norm(A - B, axis=1)
-        else:
-            na = np.linalg.norm(A, axis=1)
-            nb = np.linalg.norm(B, axis=1)
-            denom = na * nb
-            safe = denom > 0
-            cos = np.zeros(len(A))
-            cos[safe] = np.einsum("ij,ij->i", A, B)[safe] / denom[safe]
-            d = 1.0 - cos
-            d[(na <= TOL) | (nb <= TOL)] = 1.0   # zero-vector guard (helpers.go:224-231)
-            d[d < TOL] = 0.0                      # clamp (helpers.go:232-233)
-        return pd.Series(d)
-
-    return udf
 
 
 def angular_to_cosine_dist(a: Column | str) -> Column:

@@ -392,6 +392,7 @@ def q_ivf_topk(spark, sf_dir):
     ann_lsh_topk: the k-means model is deterministic pure numpy, so
     ``ivf_oracle_tables`` re-derives the inverted lists + probes and DuckDB
     mirrors the join → exact cosine verify → top-k."""
+    from lsh_search_go_spark.functions import arrowmat as AM
     from lsh_search_go_spark.operators import ivf
 
     emb = _emb(spark, sf_dir).select(
@@ -400,9 +401,7 @@ def q_ivf_topk(spark, sf_dir):
     ).persist()
     n = emb.count()
     n_cent, n_iters, seed = _ivf_params(n)
-    sample = (emb.orderBy("id").limit(IVF_FIT_CAP).toPandas()["vec"])
-    import numpy as np
-    X = np.array([np.asarray(v, dtype=np.float64) for v in sample])
+    _, X = AM.collect_matrix(emb.orderBy("id").limit(IVF_FIT_CAP), "vec")
     C = ivf.fit_centroids(X, n_cent, "cosine", n_iters, seed)
     inverted = ivf.assign(emb, C, "cosine", "id", "vec")
     queries = emb.filter(F.col("id") < ANN_N_QUERIES).select(

@@ -25,7 +25,7 @@ arrival-order-dependent ``maxCandidates`` early exit — Spark can't early-exit
 a join; the deterministic skew guard is a per-bucket cap.
 
 Spark shape: the model is fit driver-side on a corpus *sample* (tiny —
-numpy), broadcast once; hashing runs as an Arrow-batched pandas UDF doing one
+numpy), broadcast once; hashing runs as one ``mapInArrow`` pass doing one
 matmul-style traversal step per depth level across the whole batch; buckets
 and candidate verification are DataFrame joins.
 """
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lsh_search_go_spark.config import TOL, AnnConfig
+from lsh_search_go_spark.functions import arrowmat as AM
 
 # Bump whenever fit()/hash_batch() semantics change in a way that alters the
 # produced forest or hashes — cache keys for model-derived oracle relations
@@ -341,22 +342,8 @@ def fit_from_df(df: DataFrame, cfg: AnnConfig, vec_col: str = "vec",
 
 def collect_vec_matrix(sdf: DataFrame) -> np.ndarray:
     """Collect a single vector column to a (n, dims) float64 matrix through
-    ONE Arrow transfer: the list column's values buffer is viewed flat and
-    reshaped, skipping the per-row ``np.asarray`` loop a pandas collect needs
-    (~5 s for 60k×784).  Falls back to the row-wise path for ragged rows or
-    nulls (where a flat reshape would misalign)."""
-    col_name = sdf.columns[0]
-    try:
-        col = sdf.toArrow().column(0).combine_chunks()
-        if col.null_count == 0 and len(col):
-            widths = np.diff(np.asarray(col.offsets))
-            if (widths == widths[0]).all():        # truly rectangular
-                flat = np.asarray(col.flatten(), dtype=np.float64)
-                return flat.reshape(len(col), int(widths[0]))
-    except Exception:
-        pass
-    pdf = sdf.toPandas()
-    return np.array([np.asarray(v, dtype=np.float64) for v in pdf[col_name]])
+    ONE Arrow transfer (:func:`arrowmat.collect_matrix`)."""
+    return AM.collect_matrix(sdf, sdf.columns[0])[1]
 
 
 # ---------------------------------------------------------------------------
@@ -477,8 +464,6 @@ def exploded_tree_hashes(df: DataFrame, model: HasherModel,
     itself (guide §4.2)."""
     import pyarrow as pa
 
-    from lsh_search_go_spark.functions import arrowmat as AM
-
     spark = df.sparkSession
     # broadcast the slim TRAVERSAL TABLES, not the model: numpy arrays
     # pickle as raw buffers (a to_dict() broadcast made every task re-parse
@@ -562,26 +547,12 @@ def build_buckets(df: DataFrame, model: HasherModel, id_col: str = "id",
 
 def collect_id_vec_matrix(df: DataFrame, id_col: str = "id",
                           vec_col: str = "vec") -> tuple[np.ndarray, np.ndarray]:
-    """(ids, (n, dims) float64 matrix) through ONE Arrow transfer — the
-    two-column sibling of :func:`collect_vec_matrix`, for callers that need
-    the ids too (e.g. a driver-side bucket build reusing the fit's corpus).
-    Same flat-reshape fast path; row order is the DataFrame's scan order,
-    identical for both columns (one collect)."""
-    sdf = df.select(id_col, vec_col)
-    try:
-        tbl = sdf.toArrow()
-        ids = tbl.column(0).to_numpy(zero_copy_only=False)
-        col = tbl.column(1).combine_chunks()
-        if col.null_count == 0 and len(col):
-            widths = np.diff(np.asarray(col.offsets))
-            if (widths == widths[0]).all():
-                flat = np.asarray(col.flatten(), dtype=np.float64)
-                return ids, flat.reshape(len(col), int(widths[0]))
-    except Exception:
-        pass
-    pdf = sdf.toPandas()
-    return (pdf[id_col].to_numpy(),
-            np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]))
+    """(ids, (n, dims) float64 matrix) through ONE Arrow transfer — for
+    callers that need the ids too (e.g. a driver-side bucket build reusing
+    the fit's corpus).  Row order is the DataFrame's scan order, identical
+    for both columns (one collect)."""
+    ids, X = AM.collect_matrix(df, vec_col, id_col)
+    return ids.to_numpy(zero_copy_only=False), X
 
 
 def build_buckets_driver(spark, ids: np.ndarray, X: np.ndarray,
@@ -714,6 +685,7 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     when the store carries a model fingerprint, a probe ``model`` that is
     not the store's build model is REFUSED (stores written before
     fingerprinting are accepted as-is)."""
+    check_dist_impl(dist_impl)
     spark = queries.sparkSession
     hash_partitions, store_fp = _store_meta(spark, store_path)
     if store_fp is None:
@@ -798,6 +770,17 @@ def msb_flip_np(h: np.ndarray) -> np.ndarray:
     return h ^ (np.int64(1) << pos)
 
 
+DIST_IMPLS = ("sql", "matmul", "matmul_grouped")
+
+
+def check_dist_impl(dist_impl: str) -> None:
+    """Reject an unknown verify backend before any Spark job runs (the JVM
+    fold is the fallback branch, so a typo would otherwise run silently)."""
+    if dist_impl not in DIST_IMPLS:
+        raise ValueError(f"unknown dist_impl {dist_impl!r}; expected one of "
+                         f"{' | '.join(DIST_IMPLS)}")
+
+
 def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
            model: HasherModel, k: int, max_dist: float,
            metric: str = "l2",
@@ -812,9 +795,11 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     inclusive threshold → top-k.
 
     ``dist_impl``: "sql" (JVM fold — bit-identical to the DuckDB oracle),
-    "pandas" (Arrow/numpy pairwise UDF), or "matmul" (broadcast query matrix
-    + vectorized gather per corpus batch — the benchmark path; candidate rows
-    ship only the corpus vector).
+    "matmul" (broadcast query matrix + vectorized gather per corpus batch —
+    the benchmark path; candidate rows ship only the corpus vector) or
+    "matmul_grouped" (candidates grouped per corpus row, one gram matrix per
+    batch — for wide vectors and big query batches).  Any other value
+    raises ``ValueError`` before a Spark job runs.
 
     ``max_candidates``: deterministic per-query cap, ordered by
     ``(first_tree, neighbor_id)`` — keeps the candidates the reference's
@@ -847,6 +832,7 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
 
     Returns (query_id, rank, neighbor_id, dist).
     """
+    check_dist_impl(dist_impl)
     if hash_queries_on_driver is None:
         hash_queries_on_driver = broadcast_probes
     q = queries.select(F.col(query_id_col).alias("query_id"),
@@ -875,10 +861,10 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
     (Q5-Q6, /root/reference/lsh/lsh.go:174-198) — shared by the LSH-forest
     and IVF read paths.  ``q`` is (query_id, __qvec); ``cands`` is
     (query_id, neighbor_id)."""
-    from lsh_search_go_spark.functions.vector import (cosine_dist_expr, dist_udf,
-                                                      l2_dist_expr)
+    from lsh_search_go_spark.functions.vector import cosine_dist_expr, l2_dist_expr
     from lsh_search_go_spark.operators.topk import topk_per_query
 
+    check_dist_impl(dist_impl)
     maybe_bc = F.broadcast if broadcast_small else (lambda df: df)
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
     if dist_impl == "matmul_grouped" and collected is not None \
@@ -909,8 +895,8 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
         # Benchmark-scale verify: the query MATRIX is broadcast once; each
         # candidate row ships only its corpus vector and the distances come
         # from one vectorized gather per Arrow batch — halves the Arrow
-        # traffic of the pairwise UDF (no per-pair __qvec copies) and removes
-        # per-pair Python.  Same edge semantics as dist_udf (tol guards).
+        # traffic of the pairwise join (no per-pair __qvec copies) and removes
+        # per-pair work.  Same edge semantics as the JVM fold (tol guards).
         # (A degenerate corpus layout runs this verify single-task, but the
         # kernel is ~0.2 s serial at 400k candidate pairs — an interleaved
         # A/B showed no measurable win from batch-threading it, so the
@@ -918,27 +904,21 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
         scored = _matmul_verify(q, c.join(maybe_bc(cands), "neighbor_id"), metric,
                                 collected=collected)
     else:
-        joined = (
+        dist_expr = cosine_dist_expr if metric == "cosine" else l2_dist_expr
+        scored = (
             c.join(maybe_bc(cands), "neighbor_id")      # corpus stays in place
             .join(maybe_bc(q), "query_id")              # vectors re-joined late
+            .withColumn("dist", dist_expr("__cvec", "__qvec"))
+            .select("query_id", "neighbor_id", "dist")
         )
-        if dist_impl == "pandas":
-            scored = joined.withColumn("dist", dist_udf(metric)(F.col("__cvec"),
-                                                                F.col("__qvec")))
-        else:
-            dist_expr = cosine_dist_expr if metric == "cosine" else l2_dist_expr
-            scored = joined.withColumn("dist", dist_expr("__cvec", "__qvec"))
-        scored = scored.select("query_id", "neighbor_id", "dist")
     scored = scored.filter(F.col("dist") <= max_dist)    # inclusive (lsh/lsh.go:179)
     return topk_per_query(scored, k).select("query_id", "rank", "neighbor_id", "dist")
 
 
 def _collect_queries(q: DataFrame) -> tuple[list, np.ndarray]:
     """(query_id, __qvec) relation → (ids, matrix) on the driver."""
-    qrows = q.collect()
-    q_ids = [r[0] for r in qrows]
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    return q_ids, Q
+    ids, Q = AM.collect_matrix(q, "__qvec", "query_id")
+    return ids.to_pylist(), Q
 
 
 def driver_probe_arrays(Q: np.ndarray, model: HasherModel,
@@ -1047,8 +1027,6 @@ def _matmul_verify(q: DataFrame, joined: DataFrame, metric: str,
 
     import pyarrow as pa
 
-    from lsh_search_go_spark.functions import arrowmat as AM
-
     spark = q.sparkSession
     q_ids, Q = collected if collected is not None else _collect_queries(q)
     bc = spark.sparkContext.broadcast((q_ids, Q))
@@ -1106,7 +1084,7 @@ def _matmul_verify_grouped(q: DataFrame, joined: DataFrame, metric: str,
 
     import pyarrow as pa
 
-    from lsh_search_go_spark.functions import arrowmat as AM
+    from pyspark.sql.pandas.types import to_arrow_type
 
     spark = q.sparkSession
     q_ids, Q = collected if collected is not None else _collect_queries(q)
@@ -1114,12 +1092,13 @@ def _matmul_verify_grouped(q: DataFrame, joined: DataFrame, metric: str,
     qtype = dict(q.dtypes)["query_id"]
     ctype = dict(joined.dtypes)["neighbor_id"]
     schema = f"query_id {qtype}, neighbor_id {ctype}, dist double"
+    q_arrow_type = to_arrow_type(q.schema["query_id"].dataType)
 
     def op(batches):
         q_ids_l, Qm = bc.value
         Qm = np.asarray(Qm)
         lookup = AM.id_index_lookup(q_ids_l)
-        q_pa = pa.array(q_ids_l)                # one typed copy per task
+        q_pa = pa.array(q_ids_l, type=q_arrow_type)   # the declared id type
         qn = np.linalg.norm(Qm, axis=1)
         qsq = (Qm * Qm).sum(1)                  # fixed per task, not per batch
         if metric == "cosine":

@@ -71,9 +71,8 @@ def brute_force_topk_np(corpus: DataFrame, queries: DataFrame, k: int,
     from lsh_search_go_spark.operators.topk import topk_per_query
 
     spark = corpus.sparkSession
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    q_ids = [r[0] for r in qrows]
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
+    q_ids, Q = AM.collect_matrix(queries, query_vec_col, query_id_col)
+    q_ids = q_ids.combine_chunks()     # keeps the declared id type (int, ...)
     if metric == "cosine":
         qn = np.linalg.norm(Q, axis=1, keepdims=True)
         Qn = Q / np.where(qn > TOL, qn, 1.0)
@@ -113,10 +112,9 @@ def brute_force_topk_np(corpus: DataFrame, queries: DataFrame, k: int,
     # through one vectorized gather instead of a per-query Python loop.
     # Same distances, same per-batch kk rows per query, same row order.
     def op(batches):
-        q_ids_l, Q_l = bc.value
+        q_pa, Q_l = bc.value
         Qm = np.asarray(Q_l)
-        nq = len(q_ids_l)
-        q_pa = pa.array(q_ids_l)
+        nq = len(q_pa)
 
         def compute(batch):
             C = AM.matrix_from_column(AM.batch_column(batch, vec_col))

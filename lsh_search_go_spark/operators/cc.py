@@ -133,7 +133,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     # ONE probe job answers "is it empty?", "does it fit the driver budget?"
     # AND hands the driver path its rows (limit pushes down, so this never
     # scans past threshold+1 rows; r6 fused the former count-then-collect
-    # pair of jobs into this single collect)
+    # pair of jobs into this single collect).  Bound: up to
+    # driver_threshold + 1 rows — sized by driver_budget_bytes — are
+    # collected to the driver EVEN when the distributed branch follows.
     probe_rows = (edges.select("src_id", "dst_id")
                   .limit(driver_threshold + 1).collect())
     probe = len(probe_rows)

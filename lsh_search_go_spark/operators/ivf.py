@@ -262,8 +262,9 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     listed and scanned (PartitionFilters).  A store written with its
     ``centroids`` recorded refuses a probe quantizer whose fingerprint
     differs (stores without meta are accepted as-is)."""
-    from lsh_search_go_spark.operators.ann import _collect_queries
+    from lsh_search_go_spark.operators.ann import _collect_queries, check_dist_impl
 
+    check_dist_impl(dist_impl)
     spark = queries.sparkSession
     store_fp = _list_store_meta(spark, store_path)
     if store_fp is not None:
@@ -308,8 +309,10 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
     Returns (query_id, rank, neighbor_id, dist).  ``_collected``:
     pre-collected (ids, matrix) so ``search_from_store`` pays one driver
     round-trip, not two."""
-    from lsh_search_go_spark.operators.ann import _collect_queries, verify_topk
+    from lsh_search_go_spark.operators.ann import (_collect_queries,
+                                                   check_dist_impl, verify_topk)
 
+    check_dist_impl(dist_impl)
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
     collected = _collected if _collected is not None else _collect_queries(q)

@@ -330,6 +330,8 @@ class DedupPipeline:
                     lambda: self._run_stage("substring", result, build_substring)))
             for f in futs:
                 f.result()
+        # the two branches append in completion order: report in DAG order
+        result.stages.sort(key=lambda st: self.STAGES.index(st.name))
 
         write_manifest(self.root, cfg.config_hash, result.stages,
                        extra={"impl": self.impl})

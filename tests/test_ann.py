@@ -48,8 +48,22 @@ def test_plane_by_points_midpoint_bias():
     assert (p0 @ n - d) < 0 < (p1 @ n - d)
 
 
+def _verify_dists(spark, rows, metric, dist_impl):
+    """Run (id, a, b, exp) rows through ``ann.verify_topk``: corpus row ``a``
+    is the only candidate of query ``b``.  Returns {id: dist}."""
+    corpus = spark.createDataFrame([(r[0], r[1]) for r in rows],
+                                   "id int, vec array<double>")
+    q = spark.createDataFrame([(r[0], r[2]) for r in rows],
+                              "query_id int, __qvec array<double>")
+    cands = spark.createDataFrame([(r[0], r[0]) for r in rows],
+                                  "query_id int, neighbor_id int")
+    out = ann.verify_topk(q, cands, corpus, 1, 1e9, metric, dist_impl=dist_impl)
+    return {r.query_id: r.dist for r in out.collect()}
+
+
 def test_cosine_and_l2_edge_semantics(spark):
-    """TestCosineSim / TestL2 (lsh_test.go:46-106) via the JVM exprs."""
+    """TestCosineSim / TestL2 (lsh_test.go:46-106) via the JVM exprs and the
+    two Arrow verify kernels (``matmul`` / ``matmul_grouped``)."""
     rows = [
         (1, [1.0, 1.0], [1.0, 1.0], 0.0),      # equal → 0
         (2, [1.0, 0.0], [0.0, 1.0], 1.0),      # orthogonal → 1
@@ -63,12 +77,24 @@ def test_cosine_and_l2_edge_semantics(spark):
     for r in got:
         assert abs(r.d - r.exp) < 1e-9, (r.id, r.d, r.exp)
 
+    l2_rows = [(1, [0.0, 0.0, 0.0], [0.0, 1.0, 0.0], 1.0),
+               (2, [0.0, 0.0], [-4.0, 3.0], 5.0)]
     l2 = spark.createDataFrame(
-        [(1, [0.0, 0.0, 0.0], [0.0, 1.0, 0.0], 1.0), (2, [0.0, 0.0], [-4.0, 3.0], 5.0)],
-        "id int, a array<double>, b array<double>, exp double",
+        l2_rows, "id int, a array<double>, b array<double>, exp double",
     ).withColumn("d", l2_dist_expr("a", "b")).collect()
     for r in l2:
         assert abs(r.d - r.exp) < 1e-12
+
+    for impl in ("matmul", "matmul_grouped"):
+        d = _verify_dists(spark, rows, "cosine", impl)
+        assert set(d) == {r[0] for r in rows}, impl
+        for rid, _, _, exp in rows:
+            assert abs(d[rid] - exp) < 1e-9, (impl, rid, d[rid], exp)
+        assert d[1] == 0.0, impl        # clamp: 1 - cos < tol → exactly 0
+        assert d[4] == 1.0, impl        # zero-vector guard → exactly 1
+        for row in l2_rows:             # one call per width: rows differ in dims
+            got_l2 = _verify_dists(spark, [row], "l2", impl)
+            assert abs(got_l2[row[0]] - row[3]) < 1e-12, (impl, row, got_l2)
 
 
 def test_angular_cosine_conversions(spark):

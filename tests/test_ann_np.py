@@ -1,11 +1,12 @@
 """Parity of the numpy/Arrow ANN paths vs the JVM-fold definitions."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from lsh_search_go_spark.config import AnnConfig
-from lsh_search_go_spark.functions.vector import dist_udf
 from lsh_search_go_spark.operators import ann
 from lsh_search_go_spark.operators.bruteforce import (brute_force_topk,
                                                       brute_force_topk_np)
@@ -35,43 +36,32 @@ def test_bruteforce_np_matches_sql(spark, vecs, metric):
     for key in sql_res:
         assert sql_res[key][0] == np_res[key][0], key
         assert abs(sql_res[key][1] - np_res[key][1]) < 1e-9
-
-
-@pytest.mark.parametrize("metric", ["l2", "cosine"])
-def test_dist_udf_matches_expr(spark, metric):
-    from lsh_search_go_spark.functions.vector import cosine_dist_expr, l2_dist_expr
-
-    rows = [
-        (1, [1.0, 2.0, 3.0], [3.0, 2.0, 1.0]),
-        (2, [0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),   # zero-vec guard
-        (3, [1.0, 1.0, 1.0], [1.0, 1.0, 1.0]),   # equal → clamp to 0 (cosine)
-        (4, [-1.0, 0.0, 0.0], [1.0, 0.0, 0.0]),  # opposite
-    ]
-    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
-    expr = cosine_dist_expr if metric == "cosine" else l2_dist_expr
-    got = (df.withColumn("ds", expr("a", "b"))
-           .withColumn("dp", dist_udf(metric)(F.col("a"), F.col("b")))
-           .collect())
-    for r in got:
-        assert abs(r.ds - r.dp) < 1e-9, (r.id, r.ds, r.dp)
+    # 32-bit query ids keep their declared type through the kernel
+    int_q = queries.select(F.col("query_id").cast("int"), "vec")
+    int_res = {(r.query_id, r.rank): (r.neighbor_id, r.dist)
+               for r in brute_force_topk_np(corpus, int_q, 5, metric).collect()}
+    assert int_res == np_res
 
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
 def test_ann_search_dist_impls_agree(spark, vecs, metric):
-    """All four verify backends (JVM fold / pairwise Arrow UDF / broadcast
-    query-matrix gather / grouped gram-matrix) return the same neighbors at
-    the same ranks."""
+    """All three verify backends (JVM fold / broadcast query-matrix gather /
+    grouped gram-matrix) return the same neighbors at the same ranks; an
+    unknown backend is refused before any Spark job runs."""
     corpus, queries = vecs
     cfg = AnnConfig(n_trees=8, k_min_vecs=30, dims=12, seed=42, sample_size=1000,
                     is_angular=(metric == "cosine"))
     model = ann.fit(np.array([r.vec for r in corpus.collect()]), cfg)
     buckets = ann.build_buckets(corpus, model).cache()
     res = {}
-    for impl in ("sql", "pandas", "matmul", "matmul_grouped"):
+    for impl in ("sql", "matmul", "matmul_grouped"):
         res[impl] = {(r.query_id, r.rank, r.neighbor_id)
                      for r in ann.search(queries, buckets, corpus, model, 5, 1e9,
                                          metric, dist_impl=impl).collect()}
-    assert res["sql"] == res["pandas"] == res["matmul"] == res["matmul_grouped"]
+    assert res["sql"] == res["matmul"] == res["matmul_grouped"]
+    with pytest.raises(ValueError, match=re.escape("sql | matmul | matmul_grouped")):
+        ann.search(queries, buckets, corpus, model, 5, 1e9, metric,
+                   dist_impl="matmul_groupd")
 
 
 def test_ann_search_huge_batch_path_matches(spark, vecs):

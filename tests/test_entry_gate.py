@@ -15,7 +15,7 @@ import pytest
 
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # the ann_lsh_topk oracle materializes model-derived parquet for a specific
 # sf_dir; point it at the same tables this test reads (driver default: sf0.01)
@@ -82,3 +82,32 @@ def test_gate(name, spark, sf_dir, duck):
     spark_pdf = q(spark, sf_dir).toPandas()
     duck_pdf = duck.sql(entry_mod.oracle_sql()[name]).df()
     compare(spark_pdf, duck_pdf, name)
+
+
+def test_entry_module_is_relocatable(tmp_path):
+    """A copy of the entry module imports the package copied next to it,
+    even when another checkout of the package is importable too."""
+    import shutil
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    copy = tmp_path / "copy"
+    copy.mkdir()
+    shutil.copy(os.path.join(root, "__spark_entry__.py"), copy)
+    shutil.copytree(os.path.join(root, "lsh_search_go_spark"),
+                    copy / "lsh_search_go_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = (
+        "import importlib.util, sys\n"
+        "spec = importlib.util.spec_from_file_location('__spark_entry__', sys.argv[1])\n"
+        "mod = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(mod)\n"
+        "print(mod.gated.__file__)\n"
+    )
+    # the original checkout stays on the path, as in a side-by-side A/B run
+    env = dict(os.environ, PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(copy / "__spark_entry__.py")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, check=True)
+    gated_file = os.path.realpath(out.stdout.strip().splitlines()[-1])
+    assert gated_file.startswith(os.path.realpath(copy) + os.sep), gated_file

@@ -1,5 +1,5 @@
 """IVF coarse-quantizer ANN: recall vs brute force, determinism, and
-agreement of the three verify backends (shared ann.verify_topk)."""
+agreement of the verify backends (shared ann.verify_topk)."""
 
 import numpy as np
 import pytest
@@ -156,9 +156,12 @@ def test_ivf_dist_impls_agree(mixture, spark):
     C = ivf.fit_centroids(train, 16, "cosine", seed=1)
     inv = ivf.assign(corpus, C, "cosine").cache()
     res = {}
-    for impl in ("sql", "pandas", "matmul"):
+    for impl in ("sql", "matmul"):
         res[impl] = {(r.query_id, r.rank, r.neighbor_id)
                      for r in ivf.search(queries, inv, corpus, C, 5, 2.0,
                                          "cosine", nprobe=2,
                                          dist_impl=impl).collect()}
-    assert res["sql"] == res["pandas"] == res["matmul"]
+    assert res["sql"] == res["matmul"]
+    with pytest.raises(ValueError, match="unknown dist_impl 'pandas'"):
+        ivf.search(queries, inv, corpus, C, 5, 2.0, "cosine", nprobe=2,
+                   dist_impl="pandas")

@@ -47,7 +47,7 @@ def test_rebalance_probe_is_memoized(spark):
     assert len(_PROBE_MEMO) == before
 
 
-def test_list_to_matrix_fast_path_and_fallbacks():
+def test_list_to_matrix_fast_path_and_fallbacks(spark):
     rect = pa.array([[1.0, 2.0], [3.0, 4.0]])
     M = AM.list_to_matrix(rect)
     assert M.dtype == np.float64 and (M == [[1, 2], [3, 4]]).all()
@@ -61,6 +61,36 @@ def test_list_to_matrix_fast_path_and_fallbacks():
     # rectangular float32 input upcasts through the fallback-compatible path
     f32 = pa.array([[1.0, 2.0], [3.0, 4.0]], type=pa.list_(pa.float32()))
     assert AM.matrix_from_column(f32).dtype == np.float64
+    # the driver-side collect: same reshape, ids in the same row order, and
+    # the matrix equals the per-row Row collect bit for bit
+    rng = np.random.default_rng(3)
+    X = rng.normal(size=(50, 7))
+    df = spark.createDataFrame([(i * 3, v.tolist()) for i, v in enumerate(X)],
+                               "id long, vec array<double>")
+    ids, M = AM.collect_matrix(df, "vec", "id")
+    rows = df.collect()
+    assert ids.to_pylist() == [r.id for r in rows]
+    assert np.array_equal(M, np.array([np.asarray(r.vec, np.float64) for r in rows]))
+    assert np.array_equal(M, X)
+    none_ids, M_only = AM.collect_matrix(df, "vec")
+    assert none_ids is None and np.array_equal(M_only, X)
+    ids0, M0 = AM.collect_matrix(df.limit(0), "vec", "id")
+    assert len(ids0) == 0 and M0.shape[0] == 0 and M0.dtype == np.float64
+
+
+def test_id_index_lookup_maps_and_rejects_unknown_ids():
+    lookup = AM.id_index_lookup([30, 10, 20])
+    assert lookup(np.array([10, 30, 20, 10])).tolist() == [1, 0, 2, 1]
+    for bad in ([15], [40], [5], [10, 99]):     # between, above, below, mixed
+        with pytest.raises(KeyError):
+            lookup(np.array(bad))
+    with pytest.raises(KeyError):
+        AM.id_index_lookup([])(np.array([1]))
+    assert AM.id_index_lookup([])(np.array([], dtype=np.int64)).tolist() == []
+    by_name = AM.id_index_lookup(["b", "a"])
+    assert by_name(["a", "b"]).tolist() == [1, 0]
+    with pytest.raises(KeyError):
+        by_name(["c"])
 
 
 def test_fit_centroids_matches_mask_loop():
