@@ -95,29 +95,32 @@ def batch_column(batch: pa.RecordBatch, name: str):
     return batch.column(batch.schema.get_field_index(name))
 
 
-def threaded_batches(batches, compute, workers: int | None = None):
-    """Run ``compute(batch)`` over an Arrow-batch iterator through a bounded
-    thread pool, yielding results in submission order.
+def map_batches(batches, compute, threaded: bool):
+    """Yield ``compute(batch)`` for every non-empty batch of an Arrow-batch
+    iterator, in input order.
 
-    For a DEGENERATE input layout (guide §2.5 — one partition holds the
-    corpus, 31 cores idle) this recovers parallelism WITHOUT the payload
-    shuffle a repartition costs, provided the kernel is numpy BLAS/ufunc
-    work that releases the GIL (dgemm, reductions, elementwise ops).  The
-    in-flight window is bounded by the worker count so per-batch
-    intermediates (score matrices, gathered grams) stay memory-bounded.
-    Callers must only enable this when a driver-side probe says the layout
-    is degenerate — with 32 busy sibling tasks the extra threads would
+    ``threaded`` (the ``threads`` decision of :func:`layout.plan`) runs the
+    calls on a bounded thread pool.  For a DEGENERATE input layout (guide
+    §2.5 — one partition holds the corpus, the other cores idle) this
+    recovers parallelism WITHOUT the payload shuffle a repartition costs,
+    provided the kernel is numpy BLAS/ufunc work that releases the GIL
+    (dgemm, reductions, elementwise ops).  The in-flight window is bounded
+    by the worker count so per-batch intermediates (score matrices,
+    gathered grams) stay memory-bounded.  Only a degenerate layout may
+    enable it — with every sibling task busy the extra threads would
     oversubscribe the box."""
+    batches = (b for b in batches if b.num_rows)
+    if not threaded:
+        yield from map(compute, batches)
+        return
     import os
     from collections import deque
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = workers or max(2, min(8, (os.cpu_count() or 2) - 1))
+    workers = max(2, min(8, (os.cpu_count() or 2) - 1))
     with ThreadPoolExecutor(max_workers=workers) as pool:
         pending: deque = deque()
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
             pending.append(pool.submit(compute, batch))
             while len(pending) >= workers:
                 yield pending.popleft().result()

@@ -235,10 +235,9 @@ def with_signatures_fused(df: DataFrame, cfg: DedupConfig,
     because its ingest stage has just hash-repartitioned the source."""
     content_col = content_col or cfg.content_col
     if rebalance:
-        from lsh_search_go_spark.functions.layout import maybe_rebalance
+        from lsh_search_go_spark.functions import layout
 
-        df = maybe_rebalance(df, key_col=cfg.id_col if cfg.id_col in df.columns
-                             else None)
+        df, _ = layout.plan(df, "signatures", key_col=cfg.id_col)
     a, b = cfg.minhash_params
     an = np.asarray(a, dtype=np.int64)
     bn = np.asarray(b, dtype=np.int64)

@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from lsh_search_go_spark.config import TOL, AnnConfig
 from lsh_search_go_spark.functions import arrowmat as AM
+from lsh_search_go_spark.functions import layout
 
 # Bump whenever fit()/hash_batch() semantics change in a way that alters the
 # produced forest or hashes — cache keys for model-derived oracle relations
@@ -473,15 +474,8 @@ def exploded_tree_hashes(df: DataFrame, model: HasherModel,
     # worker
     bc = spark.sparkContext.broadcast(traversal_tables(model))
     n_trees = len(model.trees)
-    in_df = df.select(*keep_cols, vec_col)
-    # Degenerate-layout guard (guide §2.5): a single-row-group parquet corpus
-    # feeds every Arrow batch to ONE python worker — the 1M×64 bucket build
-    # measured 13-16 s with the traversal kernel itself at 1.3 s across 32
-    # processes.  Hashing costs ~12 μs/row serial vs ~5 μs/row to shuffle a
-    # 512-byte row once, so rebalancing pays whenever the layout is skewed.
-    from lsh_search_go_spark.functions.layout import maybe_rebalance
-
-    in_df = maybe_rebalance(in_df, key_col=keep_cols[0] if keep_cols else None)
+    in_df, _ = layout.plan(df.select(*keep_cols, vec_col), "traversal",
+                           key_col=keep_cols[0] if keep_cols else None)
     schema = T.StructType(
         [in_df.schema[c] for c in keep_cols]
         + [T.StructField("tree_id", T.IntegerType(), False),
@@ -686,6 +680,7 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     not the store's build model is REFUSED (stores written before
     fingerprinting are accepted as-is)."""
     check_dist_impl(dist_impl)
+    check_metric(metric)
     spark = queries.sparkSession
     hash_partitions, store_fp = _store_meta(spark, store_path)
     if store_fp is None:
@@ -781,6 +776,18 @@ def check_dist_impl(dist_impl: str) -> None:
                          f"{' | '.join(DIST_IMPLS)}")
 
 
+METRICS = ("l2", "cosine")
+
+
+def check_metric(metric: str) -> None:
+    """Reject an unknown distance metric before any Spark job runs (each
+    kernel tests for one of the two names and treats any other string as
+    the other one, or fails late in an executor)."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}; expected one of "
+                         f"{' | '.join(METRICS)}")
+
+
 def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
            model: HasherModel, k: int, max_dist: float,
            metric: str = "l2",
@@ -833,6 +840,7 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     Returns (query_id, rank, neighbor_id, dist).
     """
     check_dist_impl(dist_impl)
+    check_metric(metric)
     if hash_queries_on_driver is None:
         hash_queries_on_driver = broadcast_probes
     q = queries.select(F.col(query_id_col).alias("query_id"),
@@ -865,20 +873,12 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
     from lsh_search_go_spark.operators.topk import topk_per_query
 
     check_dist_impl(dist_impl)
+    check_metric(metric)
     maybe_bc = F.broadcast if broadcast_small else (lambda df: df)
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
-    if dist_impl == "matmul_grouped" and collected is not None \
-            and len(collected[0]) >= 256:
-        # Degenerate-layout guard (guide §2.5) on the verify's stream side:
-        # the broadcast join preserves the corpus partitioning, so a
-        # single-row-group corpus runs the whole gram on one core (measured
-        # 10-16 s for the 1000-query 60k×784 leg vs ~1.5 s spread).  Gated
-        # on batch size like the brute-force scan: the gram costs ~2·nq·d
-        # flops per touched row vs 8·d shuffled bytes per corpus row once.
-        from lsh_search_go_spark.functions.layout import maybe_rebalance
-
-        c = maybe_rebalance(c, key_col="neighbor_id")
     if dist_impl == "matmul_grouped":
+        c, _ = layout.plan(c, "gram_verify", key_col="neighbor_id",
+                           n_queries=0 if collected is None else len(collected[0]))
         # Wide-vector / big-query-batch verify: candidates are grouped per
         # corpus row BEFORE the join, so each corpus vector crosses the
         # Arrow boundary exactly ONCE (the pairwise paths ship it once per
@@ -1060,9 +1060,7 @@ def _matmul_verify(q: DataFrame, joined: DataFrame, metric: str,
                 [qid_col, AM.batch_column(batch, "neighbor_id"), pa.array(d)],
                 names=["query_id", "neighbor_id", "dist"])
 
-        for batch in batches:
-            if batch.num_rows:
-                yield compute(batch)
+        yield from AM.map_batches(batches, compute, threaded=False)
 
     return joined.select("query_id", "neighbor_id", "__cvec").mapInArrow(op, schema)
 

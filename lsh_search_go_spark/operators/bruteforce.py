@@ -68,43 +68,20 @@ def brute_force_topk_np(corpus: DataFrame, queries: DataFrame, k: int,
 
     from lsh_search_go_spark.config import TOL
     from lsh_search_go_spark.functions import arrowmat as AM
+    from lsh_search_go_spark.functions import layout
+    from lsh_search_go_spark.operators.ann import check_metric
     from lsh_search_go_spark.operators.topk import topk_per_query
 
+    check_metric(metric)
     spark = corpus.sparkSession
     q_ids, Q = AM.collect_matrix(queries, query_vec_col, query_id_col)
     q_ids = q_ids.combine_chunks()     # keeps the declared id type (int, ...)
-    if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1, keepdims=True)
-        Qn = Q / np.where(qn > TOL, qn, 1.0)
     bc = spark.sparkContext.broadcast((q_ids, Q))
 
     schema = f"query_id {dict(queries.dtypes)[query_id_col]}, " \
              f"neighbor_id {dict(corpus.dtypes)[id_col]}, dist double"
-
-    # Degenerate-layout guard (guide §2.5), gated on the scan's own
-    # economics: the gram costs ~2·nq·d flops per corpus row while a
-    # rebalance shuffles 8·d bytes per row once, so shuffling only pays for
-    # large query batches (measured: the 1000-query 60k×784 scan drops
-    # 15 s → ~5 s, while the 100-query 1M×64 scan would lose more to the
-    # 600 MB shuffle than the kernel saves — it stays put).
-    in_corpus = corpus.select(id_col, vec_col)
-    from lsh_search_go_spark.functions.layout import is_degenerate, maybe_rebalance
-
-    # Degenerate layout (guide §2.5) — two mitigations, picked by the scan's
-    # economics (both measured interleaved):
-    # * large query batches (heavy compute per row): hash-REBALANCE — the
-    #   payload shuffle also parallelizes the JVM-side Arrow conversion,
-    #   which worker threads cannot reach (60k×784×1000q: ~5 s rebalanced
-    #   vs ~9 s batch-threaded vs ~15 s serial);
-    # * small query batches: the shuffle costs more than the kernel saves,
-    #   but the gram/argpartition kernels release the GIL, so batch-level
-    #   THREADS in the one busy worker still recover most of the compute
-    #   (1M×64×100q: ~2.4 s threaded vs ~5 s serial vs ~6+ s rebalanced).
-    threaded = False
-    if len(q_ids) >= 256:
-        in_corpus = maybe_rebalance(in_corpus, key_col=id_col)
-    else:
-        threaded = is_degenerate(in_corpus)
+    in_corpus, decision = layout.plan(corpus.select(id_col, vec_col), "scan",
+                                      key_col=id_col, n_queries=len(q_ids))
 
     # Arrow-native pass (r6, guide §4.2): vector batches convert by one
     # flat-buffer reshape (no per-row ndarray boxing — at 60k×784 the decode
@@ -115,21 +92,23 @@ def brute_force_topk_np(corpus: DataFrame, queries: DataFrame, k: int,
         q_pa, Q_l = bc.value
         Qm = np.asarray(Q_l)
         nq = len(q_pa)
+        if metric == "l2":
+            qsq = (Qm * Qm).sum(1)[None, :]
+        else:
+            qn = np.linalg.norm(Qm, axis=1, keepdims=True)
+            Qn = Qm / np.where(qn > TOL, qn, 1.0)
 
         def compute(batch):
             C = AM.matrix_from_column(AM.batch_column(batch, vec_col))
             if metric == "l2":
                 # ||c-q||² = ||c||² + ||q||² - 2 c·q
                 d = np.sqrt(np.maximum(
-                    (C * C).sum(1)[:, None] + (Qm * Qm).sum(1)[None, :]
-                    - 2.0 * C @ Qm.T, 0.0))
+                    (C * C).sum(1)[:, None] + qsq - 2.0 * C @ Qm.T, 0.0))
             else:
                 cn = np.linalg.norm(C, axis=1, keepdims=True)
                 Cn = C / np.where(cn > TOL, cn, 1.0)
-                qn2 = np.linalg.norm(Qm, axis=1, keepdims=True)
-                Qn2 = Qm / np.where(qn2 > TOL, qn2, 1.0)
-                d = 1.0 - Cn @ Qn2.T
-                zero = (cn[:, 0] <= TOL)[:, None] | (qn2[:, 0] <= TOL)[None, :]
+                d = 1.0 - Cn @ Qn.T
+                zero = (cn[:, 0] <= TOL)[:, None] | (qn[:, 0] <= TOL)[None, :]
                 d[zero] = 1.0
                 d[d < TOL] = 0.0
             kk = min(k + 1, d.shape[0])  # +1 covers exclude_self
@@ -142,12 +121,7 @@ def brute_force_topk_np(corpus: DataFrame, queries: DataFrame, k: int,
                  pa.array(d[sel, qidx])],
                 names=["query_id", "neighbor_id", "dist"])
 
-        if threaded:
-            yield from AM.threaded_batches(batches, compute)
-            return
-        for batch in batches:
-            if batch.num_rows:
-                yield compute(batch)
+        yield from AM.map_batches(batches, compute, decision == "threads")
 
     scored = in_corpus.mapInArrow(op, schema=schema)
     if exclude_self:

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lsh_search_go_spark.config import TOL
+from lsh_search_go_spark.functions import layout
 
 # Bump whenever fit_centroids()/assignment semantics change the produced
 # quantizer — oracle cache keys include it (see ann.MODEL_VERSION).
@@ -131,20 +132,8 @@ def assign(df: DataFrame, centroids: np.ndarray, metric: str = "cosine",
 
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-    in_df = df.select(id_col, vec_col)
-    # Degenerate-layout handling (guide §2.5): a single-row-group corpus
-    # parquet runs the whole pass on one core (measured 14-17 s at 1M rows).
-    # Unlike the traversal hash, this kernel is dgemm + ufuncs — numpy
-    # releases the GIL for both — so the mitigation is a bounded THREAD POOL
-    # over Arrow batches inside the one busy worker rather than a
-    # repartition: same 32-way compute, zero payload shuffle (the rebalance
-    # route measured 10.7 s end-to-end, of which ~5.6 s was shuffling 600 MB
-    # of vectors through local disk).  Per-batch results are bit-identical
-    # (row-block splits don't change a per-row argmax) and are yielded in
-    # submission order.
-    from lsh_search_go_spark.functions.layout import is_degenerate
-
-    threaded = is_degenerate(in_df)
+    in_df, decision = layout.plan(df.select(id_col, vec_col), "assign")
+    threaded = decision == "threads"
     schema = T.StructType([in_df.schema[id_col],
                            T.StructField("centroid_id", T.IntegerType(), False)])
 
@@ -158,12 +147,7 @@ def assign(df: DataFrame, centroids: np.ndarray, metric: str = "cosine",
                  pa.array(_assign_np(X, C, metric).astype(np.int32))],
                 names=[id_col, "centroid_id"])
 
-        if not threaded:
-            for batch in batches:
-                if batch.num_rows:
-                    yield compute(batch)
-            return
-        yield from AM.threaded_batches(batches, compute)
+        yield from AM.map_batches(batches, compute, threaded)
 
     out = in_df.mapInArrow(gen, schema)
     if threaded:
@@ -262,9 +246,11 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     listed and scanned (PartitionFilters).  A store written with its
     ``centroids`` recorded refuses a probe quantizer whose fingerprint
     differs (stores without meta are accepted as-is)."""
-    from lsh_search_go_spark.operators.ann import _collect_queries, check_dist_impl
+    from lsh_search_go_spark.operators.ann import (_collect_queries,
+                                                   check_dist_impl, check_metric)
 
     check_dist_impl(dist_impl)
+    check_metric(metric)
     spark = queries.sparkSession
     store_fp = _list_store_meta(spark, store_path)
     if store_fp is not None:
@@ -310,9 +296,11 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
     pre-collected (ids, matrix) so ``search_from_store`` pays one driver
     round-trip, not two."""
     from lsh_search_go_spark.operators.ann import (_collect_queries,
-                                                   check_dist_impl, verify_topk)
+                                                   check_dist_impl, check_metric,
+                                                   verify_topk)
 
     check_dist_impl(dist_impl)
+    check_metric(metric)
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
     collected = _collected if _collected is not None else _collect_queries(q)

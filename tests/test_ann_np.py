@@ -41,13 +41,15 @@ def test_bruteforce_np_matches_sql(spark, vecs, metric):
     int_res = {(r.query_id, r.rank): (r.neighbor_id, r.dist)
                for r in brute_force_topk_np(corpus, int_q, 5, metric).collect()}
     assert int_res == np_res
+    with pytest.raises(ValueError, match=re.escape("l2 | cosine")):
+        brute_force_topk_np(corpus, queries, 5, "angular")
 
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
 def test_ann_search_dist_impls_agree(spark, vecs, metric):
     """All three verify backends (JVM fold / broadcast query-matrix gather /
     grouped gram-matrix) return the same neighbors at the same ranks; an
-    unknown backend is refused before any Spark job runs."""
+    unknown backend or metric is refused before any Spark job runs."""
     corpus, queries = vecs
     cfg = AnnConfig(n_trees=8, k_min_vecs=30, dims=12, seed=42, sample_size=1000,
                     is_angular=(metric == "cosine"))
@@ -62,6 +64,8 @@ def test_ann_search_dist_impls_agree(spark, vecs, metric):
     with pytest.raises(ValueError, match=re.escape("sql | matmul | matmul_grouped")):
         ann.search(queries, buckets, corpus, model, 5, 1e9, metric,
                    dist_impl="matmul_groupd")
+    with pytest.raises(ValueError, match=re.escape("l2 | cosine")):
+        ann.search(queries, buckets, corpus, model, 5, 1e9, "angular")
 
 
 def test_ann_search_huge_batch_path_matches(spark, vecs):

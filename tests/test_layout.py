@@ -1,6 +1,11 @@
-"""Round-6 optimization internals: the degenerate-layout guard, the
-Arrow-native matrix helpers, and the bit-identity of the vectorized k-means
-update (the pieces whose PHYSIQUE changed while their results must not)."""
+"""Round-6 optimization internals: the layout policy and both of its
+degenerate-layout mitigations, the Arrow-native matrix helpers, and the
+bit-identity of the vectorized k-means update (the pieces whose PHYSIQUE
+changed while their results must not)."""
+
+import contextlib
+import io
+import re
 
 import numpy as np
 import pandas as pd
@@ -9,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lsh_search_go_spark.functions import arrowmat as AM
-from lsh_search_go_spark.functions.layout import _PROBE_MEMO, maybe_rebalance
+from lsh_search_go_spark.functions import layout
+from lsh_search_go_spark.functions.layout import _PROBE_MEMO
 
 
 def _one_partition_df(spark, n):
@@ -18,33 +24,50 @@ def _one_partition_df(spark, n):
     return spark.createDataFrame(pdf).coalesce(1)
 
 
-def test_rebalance_fixes_degenerate_layout(spark):
-    df = _one_partition_df(spark, 60_000)
-    out = maybe_rebalance(df, key_col="id", target=4, min_rows=50_000)
-    assert out.rdd.getNumPartitions() == 4
-    # results unchanged — same row set
-    assert out.count() == 60_000
-    assert out.agg(F.sum("id")).collect()[0][0] == df.agg(F.sum("id")).collect()[0][0]
+@pytest.fixture(scope="module")
+def layouts(spark):
+    deg = _one_partition_df(spark, 60_000)
+    return {"degenerate": deg,
+            "well_spread": deg.repartition(4, F.col("id")),   # share ~25%
+            "small": _one_partition_df(spark, 5_000)}       # below the floor
 
 
-def test_rebalance_skips_small_relations(spark):
-    df = _one_partition_df(spark, 5_000)
-    out = maybe_rebalance(df, key_col="id", target=4, min_rows=50_000)
-    assert out is df            # below the row floor: untouched
-
-
-def test_rebalance_skips_well_spread_input(spark):
-    df = _one_partition_df(spark, 60_000).repartition(4, F.col("id"))
-    out = maybe_rebalance(df, key_col="id", target=4, min_rows=50_000)
-    assert out is df            # largest share ~25% <= 50%
-
-
-def test_rebalance_probe_is_memoized(spark):
-    df = _one_partition_df(spark, 60_000)
-    maybe_rebalance(df, key_col="id", target=4)
-    before = len(_PROBE_MEMO)
-    maybe_rebalance(df, key_col="id", target=4)   # same plan → memo hit
-    assert len(_PROBE_MEMO) == before
+@pytest.mark.parametrize("kernel,n_queries,want", [
+    ("traversal", 0, "rebalance"),
+    ("signatures", 0, "rebalance"),
+    ("assign", 0, "threads"),
+    ("scan", 10, "threads"),
+    ("scan", 300, "rebalance"),
+    ("gram_verify", 10, "none"),
+    ("gram_verify", 300, "rebalance"),
+])
+def test_plan_decision_table(spark, layouts, kernel, n_queries, want):
+    """Each kernel kind's decision on a degenerate input; every kind leaves
+    a well-spread input and one below the row floor alone.  A kind that
+    maps to ``none`` runs no probe job, and a repeated probe is a memo hit."""
+    assert spark.sparkContext.defaultParallelism == 4
+    if want == "none":
+        _PROBE_MEMO.clear()
+    deg = layouts["degenerate"]
+    out, decision = layout.plan(deg, kernel, "id", n_queries)
+    assert decision == want
+    if want == "rebalance":
+        assert out.rdd.getNumPartitions() == 4
+        # results unchanged — same row set
+        assert out.count() == 60_000
+        assert (out.agg(F.sum("id")).collect()[0][0]
+                == deg.agg(F.sum("id")).collect()[0][0])
+    else:
+        assert out is deg
+    for name in ("well_spread", "small"):
+        df = layouts[name]
+        out, decision = layout.plan(df, kernel, "id", n_queries)
+        assert out is df and decision == "none", name
+    probed = len(_PROBE_MEMO)
+    layout.plan(deg, kernel, "id", n_queries)          # same plan → memo hit
+    assert len(_PROBE_MEMO) == probed
+    if want == "none":
+        assert not _PROBE_MEMO
 
 
 def test_list_to_matrix_fast_path_and_fallbacks(spark):
@@ -124,22 +147,90 @@ def test_fit_centroids_matches_mask_loop():
         assert (C == Cr).all(), f"fit_centroids drifted for metric={metric}"
 
 
-def test_exploded_tree_hashes_arrow_matches_driver_hashes(spark):
-    """The mapInArrow bucket build must emit exactly the hashes the driver's
-    hash_batch computes (bit-identical traversal, id passthrough intact) —
-    including through a rebalanced degenerate layout."""
-    from lsh_search_go_spark.config import AnnConfig
-    from lsh_search_go_spark.operators import ann
-
+@pytest.fixture(scope="module")
+def degenerate_vecs(spark):
+    """60k×8 vectors in ONE partition: degenerate for every kernel kind."""
     rng = np.random.default_rng(3)
     X = rng.normal(size=(60_000, 8))
     pdf = pd.DataFrame({"id": np.arange(60_000, dtype=np.int64), "vec": list(X)})
-    df = spark.createDataFrame(pdf).coalesce(1)    # degenerate on purpose
+    return X, spark.createDataFrame(pdf).coalesce(1)
+
+
+def _plan_operators(df) -> tuple[list[str], str]:
+    """(operator names of the physical plan tree, top first; the full
+    ``explain("formatted")`` text)."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    text = buf.getvalue()
+    tree = text.split("== Physical Plan ==")[1].split("\n\n")[0]
+    return re.findall(r"(\w+) \(\d+\)", tree), text
+
+
+def test_exploded_tree_hashes_arrow_matches_driver_hashes(spark, degenerate_vecs):
+    """The mapInArrow bucket build must emit exactly the hashes the driver's
+    hash_batch computes (bit-identical traversal, id passthrough intact) —
+    including through a rebalanced degenerate layout, whose hash Exchange
+    feeds the MapInArrow pass."""
+    from lsh_search_go_spark.config import AnnConfig
+    from lsh_search_go_spark.operators import ann
+
+    X, df = degenerate_vecs
     acfg = AnnConfig(n_trees=3, k_min_vecs=2000, dims=8, is_angular=False,
                      seed=1, sample_size=5000)
     model = ann.fit(X[:5000], acfg)
-    got = (ann.build_buckets(df, model, "id", "vec")
-           .toPandas().sort_values(["id", "tree_id"]).reset_index(drop=True))
+    buckets = ann.build_buckets(df, model, "id", "vec")
+    ops, text = _plan_operators(buckets)
+    assert "Exchange" in ops[ops.index("MapInArrow"):], ops
+    assert "hashpartitioning(id#" in text
+    got = buckets.toPandas().sort_values(["id", "tree_id"]).reset_index(drop=True)
     want = ann.hash_batch(X, model).reshape(-1)
     assert (got["hash"].to_numpy() == want).all()
     assert got["id"].to_numpy()[::3].tolist() == list(range(60_000))
+
+
+def test_threaded_assign_matches_spread_layout(spark, degenerate_vecs):
+    """IVF assignment over a degenerate input runs batch threads, then
+    hash-spreads its narrow OUTPUT (Exchange above MapInArrow, none below);
+    the assignments equal those of a well-spread copy."""
+    from lsh_search_go_spark.operators import ivf
+
+    X, df = degenerate_vecs
+    C = ivf.fit_centroids(X[:5000], 16, "l2", seed=1)
+    inv = ivf.assign(df, C, "l2")
+    ops, text = _plan_operators(inv)
+    arrow = ops.index("MapInArrow")
+    assert "Exchange" in ops[:arrow] and "Exchange" not in ops[arrow:], ops
+    assert "hashpartitioning(id#" in text
+    spread = ivf.assign(df.repartition(4, F.col("id")), C, "l2")
+    got = inv.toPandas().sort_values("id").reset_index(drop=True)
+    want = spread.toPandas().sort_values("id").reset_index(drop=True)
+    assert got["id"].tolist() == list(range(60_000))
+    assert (got["centroid_id"] == want["centroid_id"]).all()
+
+
+@pytest.mark.parametrize("n_queries", [10, 300])   # threads | rebalance
+def test_degenerate_bruteforce_np_matches_spread_layout(spark, degenerate_vecs,
+                                                        n_queries):
+    """Both degenerate-layout branches of the brute-force scan — batch
+    threads below 256 queries, a rebalance at or above — return exactly the
+    top-k of a well-spread copy."""
+    from lsh_search_go_spark.operators.bruteforce import brute_force_topk_np
+
+    X, df = degenerate_vecs
+    qpdf = pd.DataFrame({"query_id": np.arange(n_queries, dtype=np.int64),
+                         "vec": list(X[:n_queries] + 0.01)})
+    queries = spark.createDataFrame(qpdf)
+
+    def topk(corpus):
+        res = brute_force_topk_np(corpus, queries, 5, "l2", exclude_self=False)
+        return {(r.query_id, r.rank): (r.neighbor_id, r.dist)
+                for r in res.collect()}
+
+    ops, _ = _plan_operators(
+        brute_force_topk_np(df, queries, 5, "l2", exclude_self=False))
+    below = ops[ops.index("MapInArrow"):]
+    assert ("Exchange" in below) == (n_queries >= 256), ops
+    got = topk(df)
+    assert len(got) == 5 * n_queries
+    assert got == topk(df.repartition(4, F.col("id")))
