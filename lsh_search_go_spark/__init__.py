@@ -31,3 +31,10 @@ hash-based operators, not just for plain aggregations.
 __version__ = "0.1.0"
 
 from lsh_search_go_spark.config import DedupConfig, AnnConfig  # noqa: F401
+
+import sys as _sys
+
+if "pyspark.worker" in _sys.modules:        # inside a PySpark Python worker
+    from lsh_search_go_spark.pyworker import guard_zip_invalidation
+
+    guard_zip_invalidation()

@@ -9,8 +9,8 @@ column in an Arrow record batch is one contiguous values buffer plus an
 offsets array (guide §4.2), so a rectangular batch converts to an (n, d)
 matrix with a single ``reshape`` over the flat buffer — no per-row work at
 all.  These helpers do that conversion (and the reverse take/emit plumbing),
-with an explicit fallback for ragged or null-carrying input where a flat
-reshape would misalign.  :func:`collect_matrix` applies the same reshape to
+and refuse ragged or null-carrying input, where a flat reshape would
+misalign.  :func:`collect_matrix` applies the same reshape to
 driver-side collects, so the driver never boxes one vector per row either.
 
 Every consumer feeds the IDENTICAL float64 matrix to the same numpy kernels
@@ -25,51 +25,47 @@ import pyarrow as pa
 from pyarrow import compute as pc
 
 
-def list_to_matrix(col, dtype=np.float64) -> np.ndarray | None:
+def matrix_from_column(col, dtype=np.float64) -> np.ndarray:
     """Arrow List/LargeList/FixedSizeList column → (n, d) ndarray via one
-    flat-buffer reshape, or ``None`` when rows are ragged or nulls are
-    present (callers fall back to :func:`rows_to_matrix`)."""
+    flat-buffer reshape.
+
+    A null vector, a null element or ragged widths raise ``ValueError``
+    naming the defect and the first bad row: a null element read as NaN
+    would silently drop that neighbour from a top-k, and the other defects
+    have no (n, d) shape at all."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     n = len(col)
-    if col.null_count:
-        return None
     t = col.type
+    if not (pa.types.is_list(t) or pa.types.is_large_list(t)
+            or pa.types.is_fixed_size_list(t)):
+        raise ValueError(f"vector column has type {t}, not a list of numbers")
+    if col.null_count:
+        raise ValueError(f"null vector at row {_first(col.is_null())}")
     if pa.types.is_fixed_size_list(t):
         width = t.list_size
-    elif pa.types.is_list(t) or pa.types.is_large_list(t):
-        if n == 0:
-            return np.zeros((0, 0), dtype=dtype)
-        offs = np.asarray(col.offsets)
-        widths = np.diff(offs)
-        if not (widths == widths[0]).all():
-            return None
-        width = int(widths[0])
+    elif n == 0:
+        return np.zeros((0, 0), dtype=dtype)
     else:
-        return None
+        widths = np.diff(np.asarray(col.offsets))
+        bad = int((widths != widths[0]).argmax())
+        if bad:
+            raise ValueError(f"ragged vectors: row {bad} has {widths[bad]} "
+                             f"elements, row 0 has {widths[0]}")
+        width = int(widths[0])
     vals = col.flatten()           # offset-aware view of the values buffer
     if vals.null_count:
-        return None
+        raise ValueError(f"null element in the vector at row "
+                         f"{_first(vals.is_null()) // width}")
     flat = np.asarray(vals)
     if flat.dtype != dtype:
         flat = flat.astype(dtype)
-    if n == 0:
-        return np.zeros((0, width), dtype=dtype)
     return flat.reshape(n, width)
 
 
-def rows_to_matrix(col, dtype=np.float64) -> np.ndarray:
-    """Row-wise fallback for ragged/null input — the exact per-row
-    conversion the pandas path performed."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    return np.array([np.asarray(v, dtype=dtype) for v in col.to_pylist()])
-
-
-def matrix_from_column(col, dtype=np.float64) -> np.ndarray:
-    """Flat-reshape fast path with automatic row-wise fallback."""
-    X = list_to_matrix(col, dtype)
-    return X if X is not None else rows_to_matrix(col, dtype)
+def _first(mask) -> int:
+    """Index of the first true entry of an Arrow boolean array."""
+    return int(np.asarray(mask).argmax())
 
 
 def collect_matrix(df, vec_col: str, id_col: str | None = None):

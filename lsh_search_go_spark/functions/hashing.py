@@ -46,31 +46,12 @@ def poly31_char_hash_expr(token_col: str) -> str:
     )
 
 
-def token_hashes(tokens_col: str) -> Column:
-    """array<string> tokens → array<bigint> poly31 hashes."""
-    return F.expr(f"transform({tokens_col}, t -> {poly31_char_hash_expr('t')})")
-
-
 def combine_hash_expr(arr_sql: str) -> str:
     """SQL fragment: order-sensitive combine of an array<bigint>."""
     return (
         f"aggregate({arr_sql}, cast(0 as bigint), "
         f"(h, v) -> (h * {POLY_COMBINE_MULT} + v) % {P})"
     )
-
-
-def windowed_combine(hashes_col: str, k: int) -> Column:
-    """array<bigint> → array<bigint> of combined k-grams (sliding window).
-
-    Empty result if fewer than k elements (guards Spark's descending
-    ``sequence(1, 0)`` behavior).
-    """
-    inner = combine_hash_expr(f"slice({hashes_col}, i, {k})")
-    return F.expr(
-        f"case when size({hashes_col}) >= {k} then "
-        f"transform(sequence(1, size({hashes_col}) - {k} + 1), i -> {inner}) "
-        f"else array() end"
-    ).cast("array<bigint>")
 
 
 def banded_hashes(sig_col: str, num_bands: int, rows_per_band: int) -> Column:
@@ -318,18 +299,4 @@ def duck_combine(arr_sql: str) -> str:
     return (
         f"list_reduce(list_prepend(0::BIGINT, {arr_sql}), "
         f"(h, v) -> (h * {POLY_COMBINE_MULT} + v) % {P})"
-    )
-
-
-def duck_windowed_combine(hashes_sql: str, k: int) -> str:
-    """DuckDB: sliding k-window combine over a BIGINT list (empty if short).
-
-    NOTE: uses a correlated alias — embed via ``{hashes_sql}`` being a plain
-    column reference or a list expression.
-    """
-    inner = duck_combine(f"list_slice({hashes_sql}, i + 1, i + {k})")
-    return (
-        f"case when len({hashes_sql}) >= {k} then "
-        f"list_transform(range(len({hashes_sql}) - {k} + 1), i -> {inner}) "
-        f"else [] end"
     )

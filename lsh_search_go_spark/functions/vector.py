@@ -75,9 +75,3 @@ def duck_cosine_dist(a: str, b: str) -> str:
         f"else (case when 1.0 - {duck_dot(a, b)} / (sqrt({sqa}) * sqrt({sqb})) < {TOL} then 0.0 "
         f"else 1.0 - {duck_dot(a, b)} / (sqrt({sqa}) * sqrt({sqb})) end) end"
     )
-
-
-def duck_l2_dist(a: str, b: str) -> str:
-    return (f"sqrt(list_reduce(list_prepend(0.0::DOUBLE, "
-            f"list_transform(range(len({a})), i -> ({a}[i+1]::DOUBLE - {b}[i+1]::DOUBLE) "
-            f"* ({a}[i+1]::DOUBLE - {b}[i+1]::DOUBLE))), (s, v) -> s + v))")

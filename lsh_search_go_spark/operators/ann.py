@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -463,8 +464,6 @@ def exploded_tree_hashes(df: DataFrame, model: HasherModel,
     one ndarray object per row on the way in and re-boxed every output cell
     on the way out, which at 10^6 corpus rows cost ~5× the traversal math
     itself (guide §4.2)."""
-    import pyarrow as pa
-
     spark = df.sparkSession
     # broadcast the slim TRAVERSAL TABLES, not the model: numpy arrays
     # pickle as raw buffers (a to_dict() broadcast made every task re-parse
@@ -645,7 +644,8 @@ def write_bucket_store(buckets: DataFrame, path: str,
      .parquet(path))
     fp = model_fingerprint(model) if model is not None else None
     (spark.createDataFrame(
-        [(int(hash_partitions), fp)],
+        pa.table({"hash_partitions": [int(hash_partitions)],
+                  "model_fingerprint": pa.array([fp], pa.string())}),
         "hash_partitions int, model_fingerprint string")
      .coalesce(1).write.mode("overwrite").json(_meta_path(path)))
 
@@ -1025,8 +1025,6 @@ def _matmul_verify(q: DataFrame, joined: DataFrame, metric: str,
     /root/reference/annbench/annbench.go:83-125)."""
     from lsh_search_go_spark.config import TOL
 
-    import pyarrow as pa
-
     spark = q.sparkSession
     q_ids, Q = collected if collected is not None else _collect_queries(q)
     bc = spark.sparkContext.broadcast((q_ids, Q))
@@ -1079,8 +1077,6 @@ def _matmul_verify_grouped(q: DataFrame, joined: DataFrame, metric: str,
     a 10k-row Arrow batch against a 100k-query broadcast can never
     materialize the naive 8 GB matrix this backend is meant for."""
     from lsh_search_go_spark.config import TOL
-
-    import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_type
 

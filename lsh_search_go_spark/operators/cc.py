@@ -16,6 +16,7 @@ clusters.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -93,13 +94,16 @@ def _driver_cc(edges: DataFrame, rows: list | None = None) -> DataFrame:
             parent[max(a, b)] = min(a, b)
     nodes = {x for r in rows for x in (r.src_id, r.dst_id)}
     spark = edges.sparkSession
-    out = [(n, find(n)) for n in sorted(nodes)]
+    doc_ids = sorted(nodes)
+    labels = pa.table({"doc_id": doc_ids,
+                       "cluster_id": [find(n) for n in doc_ids]})
     schema_t = dict(edges.dtypes)["src_id"]
     # bounded by the caller's driver budget (≤64 MB default) → always safe
     # to broadcast: downstream label joins then shuffle NOTHING of the
-    # corpus side (assign_clusters over 10^12 ids stays a map-side join)
+    # corpus side (assign_clusters over 10^12 ids stays a map-side join).
+    # Built from Arrow, so the JVM parses it and no Python task runs.
     return F.broadcast(
-        spark.createDataFrame(out, f"doc_id {schema_t}, cluster_id {schema_t}"))
+        spark.createDataFrame(labels, f"doc_id {schema_t}, cluster_id {schema_t}"))
 
 
 def _driver_row_budget(edges: DataFrame, budget_bytes: int) -> int:
@@ -140,11 +144,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
                   .limit(driver_threshold + 1).collect())
     probe = len(probe_rows)
     if probe == 0:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "doc_id string, cluster_id string").select(
-            F.col("doc_id").cast(dict(edges.dtypes)["src_id"]),
-            F.col("cluster_id").cast(dict(edges.dtypes)["src_id"]),
-        )
+        schema_t = dict(edges.dtypes)["src_id"]
+        return edges.sparkSession.createDataFrame(
+            pa.table({"doc_id": [], "cluster_id": []}),
+            f"doc_id {schema_t}, cluster_id {schema_t}")
     if driver_threshold and probe <= driver_threshold:
         return _driver_cc(edges, rows=probe_rows)
     e = edges.select("src_id", "dst_id").distinct().localCheckpoint()

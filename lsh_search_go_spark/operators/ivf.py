@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -126,8 +127,6 @@ def assign(df: DataFrame, centroids: np.ndarray, metric: str = "cosine",
     built one ndarray object per row before the matmul, which at 10^6 rows
     cost ~5× the assignment math itself (guide §4.2).  Identical float64
     matrix → identical ``_assign_np`` output."""
-    import pyarrow as pa
-
     from lsh_search_go_spark.functions import arrowmat as AM
 
     spark = df.sparkSession
@@ -198,8 +197,9 @@ def write_list_store(inverted: DataFrame, path: str,
      .partitionBy("centroid_id")
      .parquet(path))
     if centroids is not None:
-        (spark.createDataFrame([(centroid_fingerprint(centroids),)],
-                               "centroid_fingerprint string")
+        (spark.createDataFrame(
+            pa.table({"centroid_fingerprint": [centroid_fingerprint(centroids)]}),
+            "centroid_fingerprint string")
          .coalesce(1).write.mode("overwrite")
          .json(path.rstrip("/") + "/_store_meta"))
 

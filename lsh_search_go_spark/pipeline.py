@@ -30,6 +30,7 @@ import os
 import time
 from dataclasses import dataclass, field, replace
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,10 +97,13 @@ class DedupPipeline:
         # (collected — it's one row per partition) and the stage row count.
         lineage_rows = partition_lineage(out, name).collect()
         rows = sum(r["rows"] for r in lineage_rows)
+        # built from Arrow: the JVM parses it, so no Python task runs
         lineage = self.spark.createDataFrame(
-            lineage_rows, "stage string, partition_id int, rows long"
+            pa.table({c: [r[c] for r in lineage_rows]
+                      for c in ("stage", "partition_id", "rows")}),
+            "stage string, partition_id int, rows long",
         )
-        write_table(lineage, os.path.join(self.root, "lineage", name))
+        write_table(lineage.coalesce(1), os.path.join(self.root, "lineage", name))
         result.stages.append(StageResult(name, path, rows,
                                          time.time() - t0, resumed=False))
         result.tables[name] = path

@@ -14,6 +14,7 @@ same logical plan, differing only in source and output mode.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -105,7 +106,8 @@ def _guard_window_config(spark, checkpoint_dir: str, window: str,
                 "sized window state; use a fresh checkpoint dir, or write "
                 "the _window_config dataset manually if the old config is "
                 "known to match")
-        (spark.createDataFrame([(window, watermark)],
+        (spark.createDataFrame(pa.table({"window": [window],
+                                         "watermark": [watermark]}),
                                "window string, watermark string")
          .coalesce(1).write.mode("overwrite").json(cfg_path))
 

@@ -238,11 +238,13 @@ def to_parquet(corpus: SynthCorpus, path: str) -> None:
 
 
 def to_spark_df(spark, corpus: SynthCorpus):
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
+    cols = ("repo", "path", "commit", "lang", "content")
     df = spark.createDataFrame(
-        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in corpus.rows],
-        "repo string, path string, commit string, lang string, content string",
+        pa.table({k: [r[k] for r in corpus.rows] for k in cols}),
+        ", ".join(f"{k} string" for k in cols),
     )
     return df.withColumn(
         "doc_id",

@@ -180,6 +180,26 @@ def test_tiny_corpus_search(spark):
     assert len(ids) <= 4
 
 
+def test_grouped_search_rejects_null_corpus_element(spark):
+    """A null element in a corpus vector raises instead of reading as NaN,
+    which would silently drop that neighbour from the top-k."""
+    pts = {"a": [0.1, 0.1], "b": [0.12, 0.09], "c": [0.09, 0.11]}
+    cfg = AnnConfig(n_trees=4, k_min_vecs=0, dims=2, is_angular=False, seed=42,
+                    sample_size=100)
+    model = ann.fit(np.array(list(pts.values())), cfg)
+    buckets = ann.build_buckets(
+        spark.createDataFrame(list(pts.items()), "id string, vec array<double>"),
+        model)
+    bad = spark.createDataFrame([(k, v if k != "b" else [0.12, None])
+                                 for k, v in pts.items()],
+                                "id string, vec array<double>")
+    queries = spark.createDataFrame([("qa", pts["a"])],
+                                    "query_id string, vec array<double>")
+    with pytest.raises(Exception, match="null element in the vector at row"):
+        ann.search(queries, buckets, bad, model, k=10, max_dist=1.0,
+                   metric="l2", dist_impl="matmul_grouped").collect()
+
+
 # --- gaussian-mixture recall (annbench analog, FIXTURES §3) -----------------
 
 @pytest.fixture(scope="module")

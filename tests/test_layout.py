@@ -72,15 +72,27 @@ def test_plan_decision_table(spark, layouts, kernel, n_queries, want):
 
 def test_list_to_matrix_fast_path_and_fallbacks(spark):
     rect = pa.array([[1.0, 2.0], [3.0, 4.0]])
-    M = AM.list_to_matrix(rect)
+    M = AM.matrix_from_column(rect)
     assert M.dtype == np.float64 and (M == [[1, 2], [3, 4]]).all()
     # sliced column: offsets no longer start at 0 — reshape must respect it
     sliced = pa.array([[0.0, 0.0], [1.0, 2.0], [3.0, 4.0]]).slice(1, 2)
-    assert (AM.list_to_matrix(sliced) == [[1, 2], [3, 4]]).all()
-    ragged = pa.array([[1.0], [2.0, 3.0]])
-    assert AM.list_to_matrix(ragged) is None      # fast path declines
+    assert (AM.matrix_from_column(sliced) == [[1, 2], [3, 4]]).all()
+    # defects raise, naming the defect and the first bad row
+    ragged = pa.array([[1.0, 2.0], [2.0, 3.0], [4.0]])
+    with pytest.raises(ValueError, match="ragged vectors: row 2"):
+        AM.matrix_from_column(ragged)
     with_null = pa.array([[1.0, 2.0], None])
-    assert AM.list_to_matrix(with_null) is None
+    with pytest.raises(ValueError, match="null vector at row 1"):
+        AM.matrix_from_column(with_null)
+    all_null = pa.array([None, None], type=pa.list_(pa.float64()))
+    with pytest.raises(ValueError, match="null vector at row 0"):
+        AM.matrix_from_column(all_null)
+    null_elem = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, None]]).slice(1, 2)
+    with pytest.raises(ValueError, match="null element in the vector at row 1"):
+        AM.matrix_from_column(null_elem)
+    fixed = pa.array([[1.0, None]], type=pa.list_(pa.float64(), 2))
+    with pytest.raises(ValueError, match="null element in the vector at row 0"):
+        AM.matrix_from_column(fixed)
     # rectangular float32 input upcasts through the fallback-compatible path
     f32 = pa.array([[1.0, 2.0], [3.0, 4.0]], type=pa.list_(pa.float32()))
     assert AM.matrix_from_column(f32).dtype == np.float64

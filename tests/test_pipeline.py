@@ -159,14 +159,29 @@ def test_resume_skips_completed_stages_and_matches(spark, source, run):
 def test_resume_after_partial_failure(spark, source, run, tmp_path_factory):
     """Kill-mid-run contract (FIXTURES §5): complete the signatures stage,
     simulate death before pairs/clusters, re-run — later stages rebuild,
-    signatures resumes, and the final clusters equal an uninterrupted run."""
+    signatures resumes, and the final clusters equal an uninterrupted run,
+    down to the rebuilt stage's lineage rows and manifest row count."""
+    import json
     import os
     import shutil
+
+    def bookkeeping(root):
+        lineage = {tuple(r) for r in spark.read.parquet(
+            os.path.join(root, "lineage", "clusters")).collect()}
+        with open(os.path.join(root, "manifest.json")) as f:
+            rows = {s["name"]: s["rows"] for s in json.load(f)["stages"]}
+        return lineage, rows["clusters"]
+
+    def clusters(result):
+        return {(r.doc_id, r.cluster_id)
+                for r in spark.read.parquet(result.tables["clusters"]).collect()}
 
     _, baseline = run
     workdir = str(tmp_path_factory.mktemp("killrun"))
     pipe = DedupPipeline(spark, CFG, workdir, impl="pandas")
-    first = pipe.run(source)
+    pipe.run(source)
+    first_lineage, first_rows = bookkeeping(pipe.root)
+    assert first_rows == sum(r[2] for r in first_lineage) > 0
     # simulate a crash after the signatures stage: later outputs vanish
     for stage in ("pairs", "clusters", "substring"):
         shutil.rmtree(os.path.join(pipe.root, stage))
@@ -174,16 +189,15 @@ def test_resume_after_partial_failure(spark, source, run, tmp_path_factory):
     by_name = {s.name: s for s in second.stages}
     assert by_name["signatures"].resumed, "completed stage must be skipped"
     assert not by_name["pairs"].resumed and not by_name["clusters"].resumed
-    a = {(r.doc_id, r.cluster_id)
-         for r in spark.read.parquet(baseline.tables["clusters"]).collect()}
-    b = {(r.doc_id, r.cluster_id)
-         for r in spark.read.parquet(second.tables["clusters"]).collect()}
-    assert a == b
+    assert clusters(baseline) == clusters(second)
+    assert bookkeeping(pipe.root) == (first_lineage, first_rows)
     # a half-written stage (no _SUCCESS) must also rebuild
     clusters_dir = os.path.join(pipe.root, "clusters")
     os.remove(os.path.join(clusters_dir, "_SUCCESS"))
     third = pipe.run(source)
     assert not {s.name: s for s in third.stages}["clusters"].resumed
+    assert clusters(third) == clusters(baseline)
+    assert bookkeeping(pipe.root) == (first_lineage, first_rows)
 
 
 def test_input_order_independence(spark, source, run, tmp_path_factory):
