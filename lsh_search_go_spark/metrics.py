@@ -1,4 +1,4 @@
-"""Evaluation metrics + per-partition lineage metrics.
+"""Evaluation metrics.
 
 * ``pair_recall`` / ``pair_precision`` — set-based, exactly the reference's
   definition (/root/reference/annbench/annbench.go:143-162): precision =
@@ -8,9 +8,9 @@
   variant (/root/reference/annbench/annbench.go:164-187): prediction at rank i
   counts iff its id is in the ground-truth set AND its distance ≤ (1+ε)·gt
   distance at the same rank.
-* ``partition_lineage`` — per-partition row counts via
-  ``spark_partition_id()`` (the north_star "per-partition lineage + metrics"
-  requirement): cheap skew visibility at any scale.
+
+Per-partition lineage (the rows each write task committed) is stage
+bookkeeping, read from Parquet footers: see ``sources/io.committed_rows``.
 """
 
 from __future__ import annotations
@@ -59,13 +59,3 @@ def distance_based_precision_recall(pred: DataFrame, gt: DataFrame,
         F.avg(F.col("hits") / F.col("n_gt")).alias("recall"),
     ).collect()[0]
     return float(row["precision"] or 0.0), float(row["recall"] or 0.0)
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """(stage, partition_id, rows) — materialize next to each stage output."""
-    return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid").agg(F.count(F.lit(1)).alias("rows"))
-        .select(F.lit(stage).alias("stage"),
-                F.col("__pid").alias("partition_id"), "rows")
-    )

@@ -36,7 +36,6 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -571,13 +570,12 @@ def build_buckets_driver(spark, ids: np.ndarray, X: np.ndarray,
         workers=workers, chunk_rows=8192)
     n, n_trees = hashes.shape
     ids = np.asarray(ids)
-    pdf = pd.DataFrame({
-        id_col: np.repeat(ids, n_trees),
-        "tree_id": np.tile(np.arange(n_trees, dtype=np.int32), n),
-        "hash": hashes.reshape(-1),
-    })
+    # built from Arrow: the JVM parses it, so no Python task runs
     return spark.createDataFrame(
-        pdf, schema=f"{id_col} {id_type}, tree_id int, hash long")
+        pa.table({id_col: np.repeat(ids, n_trees),
+                  "tree_id": np.tile(np.arange(n_trees, dtype=np.int32), n),
+                  "hash": hashes.reshape(-1)}),
+        schema=f"{id_col} {id_type}, tree_id int, hash long")
 
 
 # ---------------------------------------------------------------------------
@@ -967,19 +965,14 @@ def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
         else:
             ids_rep, trees, flat = driver_probe_arrays(Q, model, len(q_ids))
         qtype = dict(q.dtypes)["query_id"]
-        # Arrow path: one pandas frame instead of a Python list-of-tuples —
-        # mid-size batches (10k-100k queries × trees × 2 probes) otherwise
-        # pay per-row Py4J serialization (r3 ADVICE)
-        # 1-D object array built element-wise: np.asarray would flatten
-        # tuple-like ids (pyspark Row) into a 2-D array
-        id_arr = np.empty(len(q_ids), dtype=object)
-        id_arr[:] = q_ids
+        # built from Arrow, not a Python list-of-tuples (per-row Py4J
+        # serialization at mid-size batches, r3 ADVICE) nor pandas (a
+        # PythonRDD when the session's Arrow conversion is off): the JVM
+        # parses it, so no Python task runs
         probes = spark.createDataFrame(
-            pd.DataFrame({
-                "query_id": id_arr[ids_rep],
-                "tree_id": trees.astype(np.int32),
-                "hash": flat,
-            }),
+            pa.table({"query_id": AM.take(pa.array(q_ids), ids_rep),
+                      "tree_id": trees.astype(np.int32),
+                      "hash": flat}),
             schema=f"query_id {qtype}, tree_id int, hash long",
         )
     else:

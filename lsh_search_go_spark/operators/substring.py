@@ -49,7 +49,8 @@ def oversized_blocks(exploded: DataFrame, max_block_size: int) -> DataFrame:
 def substring_pairs(df: DataFrame, cfg: DedupConfig,
                     shingles_col: str = "shingles",
                     max_block_size: int | None = None,
-                    dropped_sink: str | None = None) -> DataFrame:
+                    dropped_sink: str | None = None,
+                    persisted: list[DataFrame] | None = None) -> DataFrame:
     """Returns (inner_id, outer_id) containment pairs.
 
     df must carry (id_col, shingles) plus EITHER the fused-signature columns
@@ -62,8 +63,12 @@ def substring_pairs(df: DataFrame, cfg: DedupConfig,
     blocking key quadratic; keys whose exploded-side frequency exceeds the
     cap are dropped (deterministically; fetch them for logging via
     :func:`oversized_blocks`), exactly like the LSH band cap
-    (operators/bands.py)."""
+    (operators/bands.py).
+
+    ``persisted``: a list that receives the helper frames this pass
+    persists, for the caller to unpersist once the result is written."""
     idc = cfg.id_col
+    held = [] if persisted is None else persisted
     fused = {"norm_text", "first_sh", "last_sh"} <= set(df.columns)
     if fused:
         norm = df.select(
@@ -79,6 +84,7 @@ def substring_pairs(df: DataFrame, cfg: DedupConfig,
             normalized_text_expr(cfg.content_col, cfg).alias("__norm"),
             F.col(shingles_col),
         ).withColumn("__len", F.length("__norm")).persist()  # both join sides
+    held.append(norm)
 
     # inner side: docs with >= k tokens carry a first-shingle key.
     # __norm is already canonical single-space-joined tokens, so a plain
@@ -127,6 +133,7 @@ def substring_pairs(df: DataFrame, cfg: DedupConfig,
     cap = max_block_size if max_block_size is not None else cfg.max_bucket_size
     if cap:
         hot = oversized_blocks(exploded, cap).persist()
+        held.append(hot)
         if dropped_sink is not None:
             # the dropped-key log rides the SAME aggregation (persisted tiny
             # relation) — no second full explode+groupBy pass just to log

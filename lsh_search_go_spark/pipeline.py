@@ -11,14 +11,16 @@ partitioning; its in-memory KV store becomes Parquet/Iceberg stage tables.
 Resume contract: every stage writes to ``workdir/<config_hash>/<stage>`` with
 an atomic ``_SUCCESS`` marker; a re-run skips completed stages (idempotent —
 same config hash ⇒ same bytes).  A manifest.json records rows/timings per
-stage, and a ``lineage`` table records per-partition row counts.
+stage, and a ``lineage`` table records the rows each write task committed.
+Both are read from the committed files' Parquet footers, so a stage's
+bookkeeping runs no Spark job.
 
 Scale design notes (100 TB / 10^12 files):
 - ingest repartitions by a *size-aware salt*: hash(doc_id) salted so giant
   files spread, small files batch — Arrow batch sizes stay bounded;
 - signatures is one scan + one narrow write (no shuffle);
-- buckets is posexplode + write partitioned by band_id (partition pruning on
-  the probe side);
+- buckets is the posexplode of each signature's bands, a view derived in the
+  pairs stage (materialized only on request, as a plain stage);
 - pairs self-join shuffles on (band_id, band_hash) with AQE skew splitting +
   the max_bucket_size guard (dropped buckets are *logged*, never silent);
 - CC rounds localCheckpoint to keep lineage flat.
@@ -30,7 +32,7 @@ import os
 import time
 from dataclasses import dataclass, field, replace
 
-import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,14 +40,15 @@ from lsh_search_go_spark.config import DedupConfig
 from lsh_search_go_spark.functions import hashing as H
 from lsh_search_go_spark.functions.shingles import with_shingles
 from lsh_search_go_spark.functions.simhash import with_simhash
-from lsh_search_go_spark.metrics import partition_lineage
 from lsh_search_go_spark.operators.bands import (candidate_pairs, explode_bands,
                                                  oversized_buckets)
 from lsh_search_go_spark.operators.cc import assign_clusters
 from lsh_search_go_spark.operators.substring import substring_pairs
 from lsh_search_go_spark.operators.verify import jaccard_verify
-from lsh_search_go_spark.sources.io import (StageResult, read_table, stage_complete,
-                                            write_manifest, write_table)
+from lsh_search_go_spark.sources.io import (StageResult, committed_rows,
+                                            read_table, stage_complete,
+                                            write_lineage, write_manifest,
+                                            write_table)
 
 
 @dataclass
@@ -80,32 +83,30 @@ class DedupPipeline:
     def _path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
-    def _run_stage(self, name: str, result: PipelineResult, build,
-                   partition_by: list[str] | None = None, force: bool = False):
+    def _run_stage(self, name: str, result: PipelineResult, build):
+        """Resume stage ``name`` if it committed; otherwise write
+        ``build(held)`` and read it back.  ``build`` appends the frames it
+        persisted to ``held``; they are released once the stage is written.
+        Row counts and lineage come from the committed files' footers."""
         path = self._path(name)
         t0 = time.time()
-        if stage_complete(path) and not force:
-            df = read_table(self.spark, path)
-            result.stages.append(StageResult(name, path, df.count(),
-                                             time.time() - t0, resumed=True))
-            result.tables[name] = path
-            return df
-        df = build()
-        write_table(df, path, partition_by=partition_by)
-        out = read_table(self.spark, path)
-        # one scan serves both bookkeeping outputs: per-partition lineage rows
-        # (collected — it's one row per partition) and the stage row count.
-        lineage_rows = partition_lineage(out, name).collect()
-        rows = sum(r["rows"] for r in lineage_rows)
-        # built from Arrow: the JVM parses it, so no Python task runs
-        lineage = self.spark.createDataFrame(
-            pa.table({c: [r[c] for r in lineage_rows]
-                      for c in ("stage", "partition_id", "rows")}),
-            "stage string, partition_id int, rows long",
-        )
-        write_table(lineage.coalesce(1), os.path.join(self.root, "lineage", name))
-        result.stages.append(StageResult(name, path, rows,
-                                         time.time() - t0, resumed=False))
+        resumed = stage_complete(path)
+        if resumed:
+            out = read_table(self.spark, path)
+        else:
+            held: list[DataFrame] = []
+            df = build(held)
+            try:
+                write_table(df, path)
+            finally:
+                for h in held:
+                    h.unpersist()
+            out = read_table(self.spark, path, schema=df.schema)
+        parts = committed_rows(self.spark, path)
+        if not resumed:
+            write_lineage(os.path.join(self.root, "lineage", name), name, parts)
+        result.stages.append(StageResult(name, path, sum(n for _, n in parts),
+                                         time.time() - t0, resumed=resumed))
         result.tables[name] = path
         return out
 
@@ -148,7 +149,7 @@ class DedupPipeline:
 
         if materialize_ingest:
             ingest = self._run_stage("ingest", result,
-                                     lambda: self._prepare_source(source))
+                                     lambda held: self._prepare_source(source))
         else:
             ingest = self._prepare_source(source)
 
@@ -156,7 +157,7 @@ class DedupPipeline:
         # substring-pass inputs).  pandas impl runs ONE fused Arrow UDF
         # (separate chained UDFs get nested by Spark and re-run shingling per
         # consumer — see functions/signatures.py).
-        def build_signatures():
+        def build_signatures(held):
             if self.impl == "pandas":
                 from lsh_search_go_spark.functions.signatures import (
                     with_signatures_fused,
@@ -187,28 +188,31 @@ class DedupPipeline:
             # guard — a silent xxhash64 collision would merge two distinct
             # documents' pairs/clusters through the idmap join.  One exact
             # countDistinct pass per run; disable via config at the scale
-            # where the 128-bit surrogate replaces this.  The same
-            # aggregation (no extra pass) also checks source-id uniqueness:
-            # downstream stages assume one row per id (clusters runs with
-            # docs_unique=True), and a repeated (repo,path,commit) row would
-            # otherwise silently duplicate (doc_id, cluster_id) outputs.
-            r = signatures.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct(cfg.id_col).alias("n_ids"),
-                F.countDistinct("doc_key").alias("n_keys"),
-            ).collect()[0]
-            if r["n_rows"] != r["n_ids"]:
+            # where the 128-bit surrogate replaces this.  It also checks
+            # source-id uniqueness: downstream stages assume one row per id
+            # (clusters runs with docs_unique=True), and a repeated
+            # (repo,path,commit) row would otherwise silently duplicate
+            # (doc_id, cluster_id) outputs.  doc_key is a function of the
+            # id, so n_keys <= n_ids <= n_rows (countDistinct skips null
+            # ids, hence the non-null count): when the keys and non-null ids
+            # both equal the footer row count, both contracts hold, and the
+            # distinct ids are counted only to name a failure.
+            n_rows = {s.name: s.rows for s in result.stages}["signatures"]
+            r = signatures.agg(F.count(cfg.id_col).alias("n_nonnull"),
+                               F.countDistinct("doc_key").alias("n_keys")).first()
+            if (r["n_nonnull"], r["n_keys"]) != (n_rows, n_rows):
+                n_ids = signatures.agg(F.countDistinct(cfg.id_col)).first()[0]
+                if n_rows != n_ids:
+                    raise RuntimeError(
+                        f"duplicate source ids: {n_rows} rows carry only "
+                        f"{n_ids} distinct {cfg.id_col!r} values — the "
+                        "pipeline contract is one row per document id; dedup "
+                        "the source (or fix the id derivation) before running"
+                    )
                 raise RuntimeError(
-                    f"duplicate source ids: {r['n_rows']} rows carry only "
-                    f"{r['n_ids']} distinct {cfg.id_col!r} values — the "
-                    "pipeline contract is one row per document id; dedup the "
-                    "source (or fix the id derivation) before running"
-                )
-            if r["n_ids"] != r["n_keys"]:
-                raise RuntimeError(
-                    f"doc_key surrogate collision: {r['n_ids']} distinct ids → "
-                    f"{r['n_keys']} distinct keys; switch to a 128-bit surrogate "
-                    "(two-long key) for this corpus size"
+                    f"doc_key surrogate collision: {n_ids} distinct ids → "
+                    f"{r['n_keys']} distinct keys; switch to a 128-bit "
+                    "surrogate (two-long key) for this corpus size"
                 )
 
         # ---- buckets: (band_id, band_hash, doc_id) — derived view by
@@ -239,7 +243,8 @@ class DedupPipeline:
             )
 
         if materialize_buckets:
-            buckets = self._run_stage("buckets", result, make_buckets)
+            buckets = self._run_stage("buckets", result,
+                                      lambda held: make_buckets())
         else:
             buckets = make_buckets()
 
@@ -249,7 +254,7 @@ class DedupPipeline:
         # pigeonhole when simhash_bands > hamming_threshold) → Hamming verify —
         # the forest-as-candidate-generator shape of the reference
         # (/root/reference/lsh/lsh.go:154-172).
-        def build_pairs():
+        def build_pairs(held):
             if cfg.pairs_strategy == "simhash":
                 from lsh_search_go_spark.functions.simhash import (
                     simhash_band_hashes,
@@ -264,6 +269,7 @@ class DedupPipeline:
                 # same one-aggregation skew-log+cap shape as the minhash branch
                 sizes = sbuckets.groupBy("band_id", "band_hash").agg(
                     F.count(F.lit(1)).alias("bucket_size")).persist()
+                held.append(sizes)
                 write_table(
                     sizes.filter(F.col("bucket_size") > cfg.max_bucket_size),
                     os.path.join(self.root, "dropped_buckets"))
@@ -277,6 +283,7 @@ class DedupPipeline:
             # the r2 pipeline's serial fraction)
             sizes = buckets.groupBy("band_id", "band_hash").agg(
                 F.count(F.lit(1)).alias("bucket_size")).persist()
+            held.append(sizes)
             write_table(sizes.filter(F.col("bucket_size") > cfg.max_bucket_size),
                         os.path.join(self.root, "dropped_buckets"))
             cands = candidate_pairs(buckets, "doc_key", cfg.max_bucket_size,
@@ -287,7 +294,7 @@ class DedupPipeline:
                             ["inter", "uni", "jaccard"])
 
         # ---- substring containment (suffix-array slot)
-        def build_substring():
+        def build_substring(held):
             # hot-blocking-key skew log (license-header-style prefixes) is
             # written by substring_pairs itself from its one aggregation pass
             dropped_sink = os.path.join(self.root, "dropped_blocks")
@@ -297,7 +304,8 @@ class DedupPipeline:
                 # directional — no canonical reordering)
                 kcfg = replace(cfg, id_col="doc_key")
                 keyed = substring_pairs(signatures, kcfg,
-                                        dropped_sink=dropped_sink)
+                                        dropped_sink=dropped_sink,
+                                        persisted=held)
                 return (
                     keyed
                     .join(idmap.select(F.col("doc_key").alias("inner_id"),
@@ -309,7 +317,7 @@ class DedupPipeline:
                 )
             return substring_pairs(
                 ingest.join(signatures.select(cfg.id_col, "shingles"), cfg.id_col),
-                cfg, dropped_sink=dropped_sink,
+                cfg, dropped_sink=dropped_sink, persisted=held,
             )
 
         # pairs→clusters and substring are INDEPENDENT branches of the DAG
@@ -324,14 +332,23 @@ class DedupPipeline:
             # clusters: CC over verified dup edges (signatures carries every
             # doc_id, so singletons never need the raw source again)
             self._run_stage("clusters", result,
-                            lambda: assign_clusters(signatures, pairs, cfg.id_col,
-                                                    docs_unique=True))
+                            lambda held: assign_clusters(signatures, pairs,
+                                                         cfg.id_col,
+                                                         docs_unique=True))
 
+        def branch_substring():
+            self._run_stage("substring", result, build_substring)
+
+        # the branches' jobs carry the caller's job group, scheduler pool and
+        # session tags (pyspark copies them into each pinned JVM thread; with
+        # thread pinning off it copies nothing and returns the session)
+        inherit = inheritable_thread_target(self.spark)
+        if not callable(inherit):
+            inherit = lambda f: f  # noqa: E731
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(branch_pairs_clusters)]
+            futs = [pool.submit(inherit(branch_pairs_clusters))]
             if with_substring:
-                futs.append(pool.submit(
-                    lambda: self._run_stage("substring", result, build_substring)))
+                futs.append(pool.submit(inherit(branch_substring)))
             for f in futs:
                 f.result()
         # the two branches append in completion order: report in DAG order

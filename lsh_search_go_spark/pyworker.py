@@ -10,12 +10,15 @@ so each task pays that parse again although the archives never change.
 :func:`guard_zip_invalidation` keeps an archive's directory while the
 archive's ``(st_mtime_ns, st_size)`` matches the one this process last read;
 a changed or missing archive takes the original path, so an archive that
-does change is still re-read.
+does change is still re-read.  The directories the worker read before the
+guard was installed (while importing this package) are adopted with the
+archive's stat at install time, so a worker's second task re-reads nothing.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipimport
 
 _seen: dict[str, tuple[tuple[int, int], dict]] = {}   # archive → (stat, directory)
@@ -44,10 +47,16 @@ def _stat_guarded(self) -> None:
 
 
 def guard_zip_invalidation() -> None:
-    """Install the stat guard on ``zipimporter.invalidate_caches``; a second
-    call is a no-op."""
+    """Install the stat guard on ``zipimporter.invalidate_caches`` and adopt
+    the directories of the zip importers already cached; a second call is a
+    no-op."""
     global _original
     current = zipimport.zipimporter.invalidate_caches
     if current is not _stat_guarded:
         _original = current
+        for imp in list(sys.path_importer_cache.values()):
+            if isinstance(imp, zipimport.zipimporter):
+                key = _stat(imp.archive)
+                if key is not None:
+                    _seen.setdefault(imp.archive, (key, imp._files))
         zipimport.zipimporter.invalidate_caches = _stat_guarded

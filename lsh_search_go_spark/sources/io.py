@@ -7,6 +7,10 @@ session and otherwise writes plain Parquet paths with ``_SUCCESS`` markers —
 the resume contract is identical either way (a stage is complete iff its
 output committed atomically).
 
+Stage bookkeeping runs no Spark job: :func:`committed_rows` counts a stage
+from the footers of the files it committed, and :func:`write_lineage` writes
+the per-partition counts with pyarrow.
+
 Reference analog of the model/stage persistence: gob ``dump``/``load`` of the
 hasher (/root/reference/lsh/hasher.go:221-251) — generalized to every pipeline
 stage, keyed by the config hash so a config change never resumes stale data.
@@ -16,10 +20,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from collections import Counter
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -37,28 +47,70 @@ def iceberg_available(spark: SparkSession) -> bool:
     return False
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite",
-                partition_by: list[str] | None = None) -> None:
+def _iceberg(spark: SparkSession, path: str) -> bool:
+    """A table name goes to the Iceberg catalog; a filesystem path is Parquet."""
+    return iceberg_available(spark) and not path.startswith("/")
+
+
+def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write a stage output.  ``Store.Clear()`` analog
     (/root/reference/store/store.go:17) = overwrite mode."""
-    spark = df.sparkSession
-    if iceberg_available(spark):  # pragma: no cover - no jars in sandbox
+    if _iceberg(df.sparkSession, path):  # pragma: no cover - no jars in sandbox
         writer = df.writeTo(path)
         if mode == "overwrite":
             writer.createOrReplace()
         else:
             writer.append()
         return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df.write.mode(mode).parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    if iceberg_available(spark) and not path.startswith("/"):  # pragma: no cover
+def read_table(spark: SparkSession, path: str,
+               schema: StructType | None = None) -> DataFrame:
+    """``schema``: the schema the table was written with.  Passing it skips
+    Parquet schema inference (a Spark job), and a table with no data file
+    reads back as empty instead of failing."""
+    if _iceberg(spark, path):  # pragma: no cover
         return spark.read.format("iceberg").load(path)
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _partition_id(file_name: str) -> int:
+    """The write task's number: ``part-00003-<uuid>-c000.snappy.parquet`` (Spark
+    Parquet) or ``00003-<attempt>-<uuid>-00001.parquet`` (Iceberg) → 3."""
+    return int(file_name.removeprefix("part-").split("-", 1)[0])
+
+
+def committed_rows(spark: SparkSession, path: str) -> list[tuple[int, int]]:
+    """``(partition_id, rows)`` per write task of a committed table, sorted by
+    partition id.  Read from the Parquet footers on the driver (or from
+    Iceberg's ``files`` metadata table), so it runs no scan of the data."""
+    counts: Counter = Counter()
+    if _iceberg(spark, path):  # pragma: no cover - no jars in sandbox
+        files = (spark.read.format("iceberg").load(f"{path}.files")
+                 .select("file_path", "record_count").collect())
+        for f in files:
+            counts[_partition_id(os.path.basename(f.file_path))] += f.record_count
+    else:
+        # dataset discovery skips ``_SUCCESS`` and other ``_``/``.`` files
+        for frag in pads.dataset(path, format="parquet").get_fragments():
+            counts[_partition_id(os.path.basename(frag.path))] += frag.count_rows()
+    return sorted(counts.items())
+
+
+def write_lineage(path: str, stage: str, parts: list[tuple[int, int]]) -> None:
+    """Replace the lineage table at ``path`` with one ``(stage, partition_id,
+    rows)`` row per entry of ``parts``: one Parquet file plus ``_SUCCESS``."""
+    table = pa.table({
+        "stage": pa.array([stage] * len(parts), pa.string()),
+        "partition_id": pa.array([p for p, _ in parts], pa.int32()),
+        "rows": pa.array([n for _, n in parts], pa.int64()),
+    })
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
 def stage_complete(path: str) -> bool:

@@ -7,7 +7,12 @@ equality, per-row content_sha invariant, resume == cold run.
 """
 
 import hashlib
+import json
+import os
+import random
+from types import SimpleNamespace
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,6 +74,64 @@ def run(spark, source, tmp_path_factory):
     pipe = DedupPipeline(spark, CFG, workdir, impl="pandas")
     result = pipe.run(source)
     return pipe, result
+
+
+@pytest.fixture(scope="module")
+def grouped_run(spark, source, run, tmp_path_factory):
+    """A warm run (after ``run``) into a fresh workdir under one job group,
+    with the session's job ids and cache entries before and after."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    cached = cache.numCachedEntries()
+    sc.setJobGroup("dedup-pipeline", "grouped warm run")
+    try:
+        DedupPipeline(spark, CFG, str(tmp_path_factory.mktemp("grouped")),
+                      impl="pandas").run(source)
+    finally:
+        sc._jsc.clearJobGroup()
+    return SimpleNamespace(
+        jobs=len(tracker.getJobIdsForGroup("dedup-pipeline")),
+        new_ungrouped=set(tracker.getJobIdsForGroup(None)) - ungrouped,
+        cached_before=cached, cached_after=cache.numCachedEntries())
+
+
+def test_branch_jobs_carry_the_callers_job_group(grouped_run):
+    """The pairs/clusters and substring branches run in pool threads that
+    inherit the caller's job group, and the job count of a warm run is
+    pinned: stage bookkeeping (row counts, lineage, the re-read's schema)
+    comes from the committed files' footers and starts no job."""
+    assert grouped_run.new_ungrouped == set()
+    assert grouped_run.jobs == 29
+
+
+def test_run_releases_its_cached_helpers(grouped_run):
+    """The persisted helpers (bucket sizes, the substring pass's normalized
+    texts and hot blocking keys) are unpersisted once their stage is
+    written: a run leaves no entry in the session's cache manager."""
+    assert grouped_run.cached_after == grouped_run.cached_before
+
+
+def test_corpus_without_near_duplicates(spark, tmp_path):
+    """Every document distinct: the pairs stage commits 0 rows (manifest and
+    lineage), every cluster is a singleton, and nothing raises."""
+    rng = random.Random(7)
+    ids = [f"d{i:02d}" for i in range(12)]
+    src = spark.createDataFrame(pa.table({
+        "doc_id": ids,
+        "content": [" ".join(f"w{rng.randrange(10**9)}" for _ in range(40))
+                    for _ in ids],
+    }))
+    res = DedupPipeline(spark, CFG, str(tmp_path), impl="pandas").run(src)
+    with open(os.path.join(res.workdir, "manifest.json")) as f:
+        rows = {st["name"]: st["rows"] for st in json.load(f)["stages"]}
+    assert rows == {"signatures": 12, "pairs": 0, "substring": 0, "clusters": 12}
+    for stage, n in rows.items():
+        lineage = spark.read.parquet(os.path.join(res.workdir, "lineage", stage))
+        assert sum(r.rows for r in lineage.collect()) == n
+    clusters = {tuple(r) for r in spark.read.parquet(res.tables["clusters"]).collect()}
+    assert clusters == {(i, i) for i in ids}
 
 
 def test_content_sha_invariant(spark, run, corpus):
@@ -161,8 +224,6 @@ def test_resume_after_partial_failure(spark, source, run, tmp_path_factory):
     simulate death before pairs/clusters, re-run — later stages rebuild,
     signatures resumes, and the final clusters equal an uninterrupted run,
     down to the rebuilt stage's lineage rows and manifest row count."""
-    import json
-    import os
     import shutil
 
     def bookkeeping(root):
