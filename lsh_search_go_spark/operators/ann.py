@@ -27,7 +27,9 @@ a join; the deterministic skew guard is a per-bucket cap.
 Spark shape: the model is fit driver-side on a corpus *sample* (tiny —
 numpy), broadcast once; hashing runs as one ``mapInArrow`` pass doing one
 matmul-style traversal step per depth level across the whole batch; buckets
-and candidate verification are DataFrame joins.
+and candidate verification are DataFrame joins.  A small query batch
+collects its matched bucket rows once and dedups and caps its candidates on
+the driver (:func:`driver_candidates`).
 """
 
 from __future__ import annotations
@@ -710,7 +712,7 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
                 "original model (save_model/load_model)")
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
-    collected = _collect_queries(q)
+    collected = _collect_queries(q, model.cfg.dims)
     q_ids, Q = collected
     probe_arrays = driver_probe_arrays(Q, model, len(q_ids))
     _, trees, flat = probe_arrays
@@ -730,7 +732,8 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     cands = candidate_pairs(q, buckets, model, id_col=id_col,
                             max_candidates=max_candidates,
                             _collected=collected,
-                            _probe_arrays=probe_arrays)
+                            _probe_arrays=probe_arrays,
+                            _grouped=dist_impl == "matmul_grouped")
     return verify_topk(q, cands, corpus, k, max_dist, metric,
                        id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
                        collected=collected)
@@ -819,12 +822,19 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     * the probe relation (n_queries × trees × probes rows of three scalars)
       is **broadcast** into the bucket join — the big corpus bucket relation
       is never shuffled for a query batch;
-    * query vectors do NOT ride the candidate joins: pairs are deduped as
-      bare (query_id, neighbor_id) ids, then the (small, broadcast) query
-      relation is re-joined by query_id — shuffles move 8-byte ids, not
-      512-byte vectors;
-    * the deduped candidate set is broadcast into the corpus verify join, so
-      the corpus is probed hash-side rather than shuffled.
+    * a batch of fewer than :data:`layout.QUERY_CROSSOVER` queries (hashed
+      on the driver, probes broadcast) collects the matched (query row,
+      neighbor_id, tree_id) rows in ONE Arrow transfer and dedups and caps
+      them in numpy (:func:`driver_candidates`); the candidates come back
+      as a local relation — grouped per neighbor for ``matmul_grouped`` —
+      that is broadcast into the corpus verify, so no Exchange runs before
+      the verify and only the top-k shuffles;
+    * a larger batch dedups and caps as Spark operators, moving bare
+      (query_id, neighbor_id) ids: query vectors do NOT ride the candidate
+      joins, the (small, broadcast) query relation is re-joined by query_id
+      — shuffles move 8-byte ids, not 512-byte vectors;
+    * the candidate set is broadcast into the corpus verify join, so the
+      corpus is probed hash-side rather than shuffled.
     Set ``broadcast_probes=False`` for huge query batches where the probe /
     candidate relations stop fitting in a broadcast (falls back to shuffle
     joins; same results).  ``hash_queries_on_driver`` defaults to FOLLOW
@@ -834,6 +844,10 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     True/False to decouple them.  ``dist_impl="matmul"`` still collects the
     query matrix regardless (that is its definition; don't pair it with
     driver-hostile batch sizes).
+
+    A collected query batch must match the forest: a vector whose width is
+    not ``model.cfg.dims`` or that holds a NaN raises ``ValueError`` naming
+    the first offending ``query_id``.
 
     Returns (query_id, rank, neighbor_id, dist).
     """
@@ -845,13 +859,14 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
                        F.col(query_vec_col).alias("__qvec"))
     collected = None
     if hash_queries_on_driver or dist_impl == "matmul":
-        collected = _collect_queries(q)   # ONE driver round-trip, shared by
-                                          # probe hashing and matmul verify
+        # ONE driver round-trip, shared by probe hashing and matmul verify
+        collected = _collect_queries(q, model.cfg.dims)
     cands = candidate_pairs(q, buckets, model, id_col=id_col,
                             max_candidates=max_candidates,
                             broadcast_probes=broadcast_probes,
                             hash_queries_on_driver=hash_queries_on_driver,
-                            _collected=collected)
+                            _collected=collected,
+                            _grouped=dist_impl == "matmul_grouped")
     return verify_topk(q, cands, corpus, k, max_dist, metric,
                        id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
                        broadcast_small=broadcast_probes, collected=collected)
@@ -866,7 +881,8 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
     """Exact-verify + inclusive threshold + top-k over a candidate relation
     (Q5-Q6, /root/reference/lsh/lsh.go:174-198) — shared by the LSH-forest
     and IVF read paths.  ``q`` is (query_id, __qvec); ``cands`` is
-    (query_id, neighbor_id)."""
+    (query_id, neighbor_id), or for ``matmul_grouped`` already grouped as
+    (neighbor_id, __qids) by :func:`driver_candidates`."""
     from lsh_search_go_spark.functions.vector import cosine_dist_expr, l2_dist_expr
     from lsh_search_go_spark.operators.topk import topk_per_query
 
@@ -884,8 +900,9 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
         # is tens of GB of duplicated vector traffic); distances come from
         # one BLAS gram matrix per batch + a pair gather.  Same tol-guard
         # edge semantics as the other backends.
-        grouped = cands.groupBy("neighbor_id").agg(
-            F.collect_list("query_id").alias("__qids"))
+        grouped = cands if "__qids" in cands.columns else (
+            cands.groupBy("neighbor_id").agg(
+                F.collect_list("query_id").alias("__qids")))
         scored = _matmul_verify_grouped(
             q, c.join(maybe_bc(grouped), "neighbor_id"), metric,
             collected=collected)
@@ -913,10 +930,25 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
     return topk_per_query(scored, k).select("query_id", "rank", "neighbor_id", "dist")
 
 
-def _collect_queries(q: DataFrame) -> tuple[list, np.ndarray]:
-    """(query_id, __qvec) relation → (ids, matrix) on the driver."""
+def _collect_queries(q: DataFrame, dims: int | None = None
+                     ) -> tuple[list, np.ndarray]:
+    """(query_id, __qvec) relation → (ids, matrix) on the driver.
+
+    With ``dims``, a non-empty batch whose vectors are not ``dims`` wide, or
+    that holds a NaN, raises ``ValueError`` naming the first offending
+    ``query_id``: a NaN would silently empty that query's top-k, and a wrong
+    width would fail deep inside a kernel."""
     ids, Q = AM.collect_matrix(q, "__qvec", "query_id")
-    return ids.to_pylist(), Q
+    q_ids = ids.to_pylist()
+    if dims is not None and q_ids:
+        if Q.shape[1] != dims:
+            raise ValueError(f"query {q_ids[0]!r} has {Q.shape[1]} elements; "
+                             f"the index expects {dims}")
+        nan = np.isnan(Q).any(axis=1)
+        if nan.any():
+            raise ValueError(f"query {q_ids[int(nan.argmax())]!r} has a NaN "
+                             "element")
+    return q_ids, Q
 
 
 def driver_probe_arrays(Q: np.ndarray, model: HasherModel,
@@ -940,19 +972,115 @@ def driver_probe_arrays(Q: np.ndarray, model: HasherModel,
     return ids_rep, trees, flat
 
 
+def on_driver(n_queries: int, broadcast_probes: bool = True) -> bool:
+    """True when a batch's candidate set is computed on the driver
+    (:func:`driver_candidates`): the probes are broadcast and the batch has
+    fewer than :data:`layout.QUERY_CROSSOVER` queries — the contract under
+    which the queries themselves are already collected to the driver."""
+    return broadcast_probes and n_queries < layout.QUERY_CROSSOVER
+
+
+def driver_candidates(q: DataFrame, q_ids: list, probes: DataFrame,
+                      lists: DataFrame, key_cols: list[str],
+                      max_candidates: int | None = None,
+                      grouped: bool = False) -> DataFrame:
+    """Small-batch candidate generation: ONE Arrow collect of the matched
+    rows, dedup and cap in numpy on the driver, and the result handed back
+    as an Arrow-built local relation (the JVM parses it; no Python task).
+
+    ``probes`` is (__qrow int, *key_cols), ``__qrow`` being the query's row
+    in ``q_ids``; ``lists`` is (neighbor_id, *key_cols[, tree_id]) — the
+    bucket relation or IVF's inverted lists.  The probes are broadcast into
+    ``lists`` and the matched (__qrow, neighbor_id[, tree_id]) rows come
+    back in one ``toArrow``.  Returns the distinct (query_id, neighbor_id)
+    pairs, or with ``grouped`` one (neighbor_id, __qids) row per neighbor —
+    the form the ``matmul_grouped`` verify consumes, so no ``collect_list``
+    shuffle runs.
+
+    Ordering matches Spark's: ``np.unique`` ranks integer ids numerically
+    and string ids in Python ``str`` order, which is UTF-8 byte order,
+    Spark's string order.  With ``max_candidates`` each query keeps its
+    first ``max_candidates`` neighbors by ``(first_tree, neighbor_id)``,
+    ``first_tree`` being the smallest tree that matched the pair — the
+    window the distributed path of :func:`candidate_pairs` runs.
+
+    Driver memory: the collect holds up to ``n_queries × n_trees × (1 +
+    multiprobe) × bucket size`` rows of three narrow columns (the
+    broadcast-probe plan already pulled the deduped set through the driver
+    as a broadcast).  A degenerate bucket makes the collect fail loudly at
+    ``spark.driver.maxResultSize`` instead of exhausting driver memory;
+    ``broadcast_probes=False`` keeps such batches off the driver."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    capped = max_candidates is not None
+    cols = ["__qrow", "neighbor_id"] + (["tree_id"] if capped else [])
+    tbl = F.broadcast(probes).join(lists, key_cols).select(*cols).toArrow()
+    qrow = tbl.column("__qrow").to_numpy().astype(np.int64)
+    nbr = tbl.column("neighbor_id").combine_chunks()
+    _, first, code = np.unique(nbr.to_numpy(zero_copy_only=False),
+                               return_index=True, return_inverse=True)
+    n_u = max(len(first), 1)
+    key = qrow * n_u + code            # (query row, neighbor rank) as one int
+    if capped:
+        tree = tbl.column("tree_id").to_numpy()
+        order = np.lexsort((tree, key))
+        key, tree = key[order], tree[order]
+        head = _run_starts(key)
+        key, tree = key[head], tree[head]          # each pair's first tree
+        key = key[np.lexsort((key % n_u, tree, key // n_u))]
+        qs = key // n_u
+        rank = np.arange(len(key)) - np.searchsorted(qs, qs)
+        key = key[rank < max_candidates]
+    else:
+        key = np.unique(key)
+    code, qrow = key % n_u, key // n_u
+    order = np.lexsort((qrow, code))               # by neighbor, then query
+    code, qrow = code[order], qrow[order]
+
+    qf = q.schema["query_id"]
+    nf = lists.schema["neighbor_id"]
+    qids = AM.take(pa.array(q_ids, to_arrow_type(qf.dataType)), qrow)
+    spark = q.sparkSession
+    if not grouped:
+        return spark.createDataFrame(
+            pa.table({"query_id": qids,
+                      "neighbor_id": AM.take(nbr, first[code])}),
+            T.StructType([T.StructField("query_id", qf.dataType),
+                          T.StructField("neighbor_id", nf.dataType)]))
+    head = _run_starts(code)
+    offsets = pa.array(np.r_[head, len(code)].astype(np.int32))
+    return spark.createDataFrame(
+        pa.table({"neighbor_id": AM.take(nbr, first[code[head]]),
+                  "__qids": pa.ListArray.from_arrays(offsets, qids)}),
+        T.StructType([T.StructField("neighbor_id", nf.dataType),
+                      T.StructField("__qids", T.ArrayType(qf.dataType))]))
+
+
+def _run_starts(a: np.ndarray) -> np.ndarray:
+    """Indexes where a run of equal values starts in a sorted array."""
+    return np.flatnonzero(np.r_[True, a[1:] != a[:-1]][:len(a)])
+
+
 def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
                     id_col: str = "id",
                     max_candidates: int | None = None,
                     broadcast_probes: bool = True,
                     hash_queries_on_driver: bool = True,
                     _collected: tuple[list, np.ndarray] | None = None,
-                    _probe_arrays=None) -> DataFrame:
+                    _probe_arrays=None, _grouped: bool = False) -> DataFrame:
     """Candidate generation: q(query_id, __qvec) × buckets → deduped
     (query_id, neighbor_id) pairs (Q1-Q4, /root/reference/lsh/lsh.go:140-172).
     Public so benchmarks/metrics can count the pruned candidate set.
-    ``_collected``: pre-collected (ids, matrix) from :func:`_collect_queries`
-    so ``search`` pays one driver round-trip, not two."""
+
+    A batch hashed on the driver with broadcast probes and fewer than
+    :data:`layout.QUERY_CROSSOVER` queries gets its candidates from
+    :func:`driver_candidates`, as a local relation; any other batch runs
+    the join, dedup and cap as Spark operators.  ``_collected``:
+    pre-collected (ids, matrix) from :func:`_collect_queries` so ``search``
+    pays one driver round-trip, not two; ``_grouped``: return a driver
+    result grouped per neighbor (:func:`driver_candidates`)."""
     maybe_bc = F.broadcast if broadcast_probes else (lambda df: df)
+    lists = buckets.withColumnRenamed(id_col, "neighbor_id")
     if hash_queries_on_driver:
         # the model lives on the driver and the query batch is small by
         # contract: hashing locally mirrors the reference's client-side
@@ -964,11 +1092,19 @@ def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
             ids_rep, trees, flat = _probe_arrays
         else:
             ids_rep, trees, flat = driver_probe_arrays(Q, model, len(q_ids))
-        qtype = dict(q.dtypes)["query_id"]
         # built from Arrow, not a Python list-of-tuples (per-row Py4J
         # serialization at mid-size batches, r3 ADVICE) nor pandas (a
         # PythonRDD when the session's Arrow conversion is off): the JVM
         # parses it, so no Python task runs
+        if on_driver(len(q_ids), broadcast_probes):
+            probes = spark.createDataFrame(
+                pa.table({"__qrow": ids_rep.astype(np.int32),
+                          "tree_id": trees.astype(np.int32), "hash": flat}),
+                schema="__qrow int, tree_id int, hash long")
+            return driver_candidates(q, q_ids, probes, lists,
+                                     ["tree_id", "hash"], max_candidates,
+                                     grouped=_grouped)
+        qtype = dict(q.dtypes)["query_id"]
         probes = spark.createDataFrame(
             pa.table({"query_id": AM.take(pa.array(q_ids), ids_rep),
                       "tree_id": trees.astype(np.int32),
@@ -982,8 +1118,7 @@ def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
                 "hash",
                 F.explode(F.array(F.col("hash"), F.expr(_msb_flip_expr("hash")))),
             )
-    matched = maybe_bc(probes).join(
-        buckets.withColumnRenamed(id_col, "neighbor_id"), ["tree_id", "hash"])
+    matched = maybe_bc(probes).join(lists, ["tree_id", "hash"])
     if max_candidates is None:
         return (matched.select("query_id", "neighbor_id")
                 .dropDuplicates(["query_id", "neighbor_id"]))  # closestSet analog (lsh/lsh.go:142)

@@ -13,8 +13,9 @@ candidate generator):
   ``(id, centroid_id)`` (the analog of the bucket table,
   /root/reference/store/kv/store.go:64-73);
 * ``search`` — queries ranked against centroids on the driver, top-``nprobe``
-  lists probed via a broadcast join, then the shared exact-verify + top-k
-  (ann.verify_topk — Q5/Q6 of the reference read path,
+  lists probed via a broadcast join (collected and grouped on the driver for
+  a small batch, ``ann.driver_candidates``), then the shared exact-verify +
+  top-k (ann.verify_topk — Q5/Q6 of the reference read path,
   /root/reference/lsh/lsh.go:174-198).
 
 At 100 TB the inverted-list relation is as narrow as the LSH bucket table
@@ -261,7 +262,7 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
                 "lists; rebuild the store or load the original centroids")
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
-    collected = _collect_queries(q)
+    collected = _collect_queries(q, np.shape(centroids)[1])
     q_ids, Q = collected
     if q_ids:
         probes_np = probe_centroids_np(np.asarray(Q, np.float64),
@@ -290,18 +291,27 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
     (query_id, centroid_id) probe relation into the inverted-list join →
     shared exact verify + inclusive threshold + top-k.
 
+    A batch of fewer than ``layout.QUERY_CROSSOVER`` queries collects the
+    matched (query row, neighbor_id) rows in one Arrow transfer and hands
+    them to the verify as a local relation (``ann.driver_candidates``; the
+    lists are disjoint, so it only groups them).  A query vector whose
+    width is not the centroids' or that holds a NaN raises ``ValueError``
+    naming the first offending ``query_id``.
+
     Returns (query_id, rank, neighbor_id, dist).  ``_collected``:
     pre-collected (ids, matrix) so ``search_from_store`` pays one driver
     round-trip, not two."""
     from lsh_search_go_spark.operators.ann import (_collect_queries,
                                                    check_dist_impl, check_metric,
+                                                   driver_candidates, on_driver,
                                                    verify_topk)
 
     check_dist_impl(dist_impl)
     check_metric(metric)
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
-    collected = _collected if _collected is not None else _collect_queries(q)
+    collected = (_collected if _collected is not None
+                 else _collect_queries(q, np.shape(centroids)[1]))
     q_ids, Q = collected
     spark = queries.sparkSession
     qtype = dict(q.dtypes)["query_id"]
@@ -310,22 +320,30 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
                                        nprobe, metric)
     else:   # empty query batch → empty result, like ann.search
         probes_np = np.zeros((0, nprobe), np.int32)
+    qrow = np.repeat(np.arange(len(q_ids)), probes_np.shape[1])
+    centroid_id = probes_np.reshape(-1).astype(np.int32)
+    lists = inverted.withColumnRenamed(id_col, "neighbor_id")
     # built from Arrow, mirroring ann.candidate_pairs (r4 VERDICT task 4):
     # the JVM parses it, so no Python task runs
-    probes = spark.createDataFrame(
-        pa.table({"query_id": AM.take(pa.array(q_ids),
-                                      np.repeat(np.arange(len(q_ids)),
-                                                probes_np.shape[1])),
-                  "centroid_id": probes_np.reshape(-1).astype(np.int32)}),
-        schema=f"query_id {qtype}, centroid_id int",
-    )
-    cands = (
-        F.broadcast(probes)
-        .join(inverted.withColumnRenamed(id_col, "neighbor_id"), "centroid_id")
-        .select("query_id", "neighbor_id")
-        # lists are disjoint (one centroid per vector) → pairs are already
-        # distinct; no dedup shuffle needed, unlike the multi-tree forest
-    )
+    if on_driver(len(q_ids)):
+        probes = spark.createDataFrame(
+            pa.table({"__qrow": qrow.astype(np.int32),
+                      "centroid_id": centroid_id}),
+            schema="__qrow int, centroid_id int")
+        cands = driver_candidates(q, q_ids, probes, lists, ["centroid_id"],
+                                  grouped=dist_impl == "matmul_grouped")
+    else:
+        probes = spark.createDataFrame(
+            pa.table({"query_id": AM.take(pa.array(q_ids), qrow),
+                      "centroid_id": centroid_id}),
+            schema=f"query_id {qtype}, centroid_id int",
+        )
+        cands = (
+            F.broadcast(probes).join(lists, "centroid_id")
+            .select("query_id", "neighbor_id")
+            # lists are disjoint (one centroid per vector) → pairs are
+            # already distinct; no dedup shuffle needed, unlike the forest
+        )
     return verify_topk(q, cands, corpus, k, max_dist, metric,
                        id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
                        collected=collected)

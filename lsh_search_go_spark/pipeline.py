@@ -16,8 +16,8 @@ Both are read from the committed files' Parquet footers, so a stage's
 bookkeeping runs no Spark job.
 
 Scale design notes (100 TB / 10^12 files):
-- ingest repartitions by a *size-aware salt*: hash(doc_id) salted so giant
-  files spread, small files batch — Arrow batch sizes stay bounded;
+- ingest hash-partitions by doc_id, so documents spread evenly over the
+  signatures tasks;
 - signatures is one scan + one narrow write (no shuffle);
 - buckets is the posexplode of each signature's bands, a view derived in the
   pairs stage (materialized only on request, as a plain stage);
@@ -46,7 +46,8 @@ from lsh_search_go_spark.operators.cc import assign_clusters
 from lsh_search_go_spark.operators.substring import substring_pairs
 from lsh_search_go_spark.operators.verify import jaccard_verify
 from lsh_search_go_spark.sources.io import (StageResult, committed_rows,
-                                            read_table, stage_complete,
+                                            committed_schema, read_table,
+                                            stage_complete,
                                             write_lineage, write_manifest,
                                             write_table)
 
@@ -92,7 +93,7 @@ class DedupPipeline:
         t0 = time.time()
         resumed = stage_complete(path)
         if resumed:
-            out = read_table(self.spark, path)
+            out = read_table(self.spark, path, schema=committed_schema(path))
         else:
             held: list[DataFrame] = []
             df = build(held)
@@ -112,7 +113,7 @@ class DedupPipeline:
 
     # ------------------------------------------------------------------
     def _prepare_source(self, source: DataFrame) -> DataFrame:
-        """id + invariant sha + size-aware salted partitioning (no write)."""
+        """id + invariant sha, hash-partitioned by id (no write)."""
         cfg = self.cfg
         df = source
         if cfg.id_col not in df.columns:
@@ -122,15 +123,9 @@ class DedupPipeline:
             )
         df = df.withColumn("content_sha", F.sha2(F.col(cfg.content_col), 256))
         df = df.withColumn("content_bytes", F.length(cfg.content_col))
-        # size-aware salt: docs land in partitions by id hash; giant docs
-        # get their own salt stratum so no Arrow batch blows up.
-        df = df.withColumn(
-            "__salt",
-            F.when(F.col("content_bytes") > 256 * 1024,
-                   F.xxhash64(cfg.id_col) % (self.target_partitions * 4))
-            .otherwise(F.xxhash64(cfg.id_col) % self.target_partitions),
-        )
-        return df.repartition(self.target_partitions, "__salt").drop("__salt")
+        # hash the unique id itself: a derived ``% n`` salt column, hashed
+        # again by the repartition, leaves some partitions empty
+        return df.repartition(self.target_partitions, cfg.id_col)
 
     def run(self, source: DataFrame, with_substring: bool = True,
             materialize_ingest: bool | None = None,
@@ -140,7 +135,7 @@ class DedupPipeline:
         path — both are derivable in the signatures pass, and at bench scale
         each extra write+read+bookkeeping cycle is pure serial overhead
         (~10s/stage that no amount of cores removes).  The SQL impl keeps an
-        ingest stage (its signature exprs would otherwise recompute sha/salt
+        ingest stage (its signature exprs would otherwise recompute sha
         per column reference)."""
         cfg = self.cfg
         result = PipelineResult(workdir=self.root)
@@ -162,7 +157,7 @@ class DedupPipeline:
                 from lsh_search_go_spark.functions.signatures import (
                     with_signatures_fused,
                 )
-                # rebalance=False: _prepare_source just salted-repartitioned
+                # rebalance=False: _prepare_source just hash-partitioned
                 # the rows, so the layout probe would be a wasted job
                 df = with_signatures_fused(ingest, cfg, rebalance=False)
                 extra = ["norm_text", "first_sh", "last_sh"]

@@ -8,8 +8,9 @@ the resume contract is identical either way (a stage is complete iff its
 output committed atomically).
 
 Stage bookkeeping runs no Spark job: :func:`committed_rows` counts a stage
-from the footers of the files it committed, and :func:`write_lineage` writes
-the per-partition counts with pyarrow.
+from the footers of the files it committed, :func:`committed_schema` reads
+the schema Spark wrote there, and :func:`write_lineage` writes the
+per-partition counts with pyarrow.
 
 Reference analog of the model/stage persistence: gob ``dump``/``load`` of the
 hasher (/root/reference/lsh/hasher.go:221-251) — generalized to every pipeline
@@ -97,6 +98,21 @@ def committed_rows(spark: SparkSession, path: str) -> list[tuple[int, int]]:
         for frag in pads.dataset(path, format="parquet").get_fragments():
             counts[_partition_id(os.path.basename(frag.path))] += frag.count_rows()
     return sorted(counts.items())
+
+
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def committed_schema(path: str) -> StructType | None:
+    """The schema Spark wrote into the footer of a committed Parquet table's
+    first data file (key :data:`SPARK_SCHEMA_KEY`), read on the driver, so
+    a resumed stage is read back without a schema-inference job.  ``None``
+    when there is no data file or the file was not written by Spark."""
+    frag = next(iter(pads.dataset(path, format="parquet").get_fragments()),
+                None)
+    raw = None if frag is None else (frag.metadata.metadata or {}).get(
+        SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
 
 
 def write_lineage(path: str, stage: str, parts: list[tuple[int, int]]) -> None:

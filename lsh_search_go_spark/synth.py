@@ -233,7 +233,7 @@ def to_parquet(corpus: SynthCorpus, path: str) -> None:
                       for r in corpus.rows]
     # small row groups: Spark can only parallelize a parquet scan at
     # row-group granularity — pyarrow's default (one giant group) would make
-    # the ingest scan + sha + salt projection a single task at any core count
+    # the ingest scan + sha projection a single task at any core count
     pq.write_table(pa.table(cols), path, row_group_size=4096)
 
 

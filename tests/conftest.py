@@ -28,3 +28,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def executed_plans(spark):
+    """``executed_plans(action)``: the physical plans of the SQL executions
+    ``action`` started (``tools.plan_audit.executed_plans``)."""
+    from tools.plan_audit import executed_plans as plans
+
+    return lambda action: plans(spark, action)

@@ -1,0 +1,227 @@
+"""Small-batch candidates on the driver (``ann.driver_candidates``) against
+the distributed plan, and the query-batch contract of ``ann.search`` and
+``ivf.search``."""
+
+import re
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from lsh_search_go_spark.config import AnnConfig
+from lsh_search_go_spark.operators import ann, ivf
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _same_topk(a, b):
+    """Equal (query_id, rank, neighbor_id) rows and distances equal to 1e-9:
+    the two plans hand the gram verify differently composed corpus batches
+    (broadcast vs shuffle join), which moves the last bits of a BLAS sum."""
+    a, b = _rows(a), _rows(b)
+    assert [r[:3] for r in a] == [r[:3] for r in b]
+    assert np.allclose([r[3] for r in a], [r[3] for r in b], rtol=0, atol=1e-9)
+    return a
+
+
+def _ids(kind):
+    """Corpus/query id maker: long ids, or strings whose Python order
+    differs from their numeric order and that carry a multi-byte character
+    (UTF-8 byte order is what Spark sorts strings by)."""
+    if kind == "long":
+        return lambda i: int(i)
+    return lambda i: f"{'é' if i % 3 else 'z'}{i % 7}-{i}"
+
+
+@pytest.fixture(scope="module")
+def mixture():
+    rng = np.random.default_rng(11)
+    protos = rng.normal(scale=6.0, size=(30, 8))
+    train = np.repeat(protos, 12, 0) + rng.normal(scale=0.4, size=(360, 8))
+    test = protos[:24] + rng.normal(scale=0.4, size=(24, 8))
+    return train, test
+
+
+@pytest.fixture(scope="module")
+def frames(spark, mixture):
+    train, test = mixture
+    out = {}
+    for kind in ("long", "string"):
+        mk = _ids(kind)
+        out[kind] = (
+            spark.createDataFrame([(mk(i), v.tolist()) for i, v in enumerate(train)],
+                                  f"id {kind}, vec array<double>").cache(),
+            spark.createDataFrame([(mk(1000 + i), v.tolist())
+                                   for i, v in enumerate(test)],
+                                  f"query_id {kind}, vec array<double>").cache())
+    return out
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+@pytest.mark.parametrize("multiprobe", [True, False])
+def test_driver_candidates_match_distributed_plan(spark, mixture, frames, kind,
+                                                  metric, multiprobe):
+    """The driver dedup and the driver cap keep exactly the pairs the Spark
+    dedup and the ``(first_tree, neighbor_id)`` window keep — with a cap
+    that binds and ties on ``first_tree`` broken by id — and the top-k of
+    both plans is equal."""
+    train, _ = mixture
+    corpus, queries = frames[kind]
+    cfg = AnnConfig(n_trees=6, k_min_vecs=40, dims=8, seed=3,
+                    multiprobe=multiprobe, is_angular=metric == "cosine")
+    model = ann.fit(train, cfg)
+    buckets = ann.build_buckets(corpus, model).cache()
+    q = queries.select("query_id", F.col("vec").alias("__qvec"))
+    for cap in (None, 9):
+        drv = ann.candidate_pairs(q, buckets, model, max_candidates=cap)
+        dist = ann.candidate_pairs(q, buckets, model, max_candidates=cap,
+                                   broadcast_probes=False,
+                                   hash_queries_on_driver=False)
+        # the driver result is a local relation: no bucket join left in it
+        assert "tree_id" not in drv._jdf.queryExecution().executedPlan().toString()
+        got, want = _rows(drv), _rows(dist)
+        assert got == want, (cap, len(got), len(want))
+        per_q = {}
+        for qid, _ in got:
+            per_q[qid] = per_q.get(qid, 0) + 1
+        if cap is not None:       # the cap binds for every query
+            assert set(per_q.values()) == {cap}, per_q
+        for impl in ("sql", "matmul_grouped"):
+            kw = dict(k=12, max_dist=1e9, metric=metric, dist_impl=impl,
+                      max_candidates=cap)
+            _same_topk(ann.search(queries, buckets, corpus, model, **kw),
+                       ann.search(queries, buckets, corpus, model,
+                                  broadcast_probes=False, **kw))
+
+
+def test_driver_candidates_empty_batch_and_one_bucket_per_tree(spark):
+    """An empty batch gives an empty result on both plans; a corpus of
+    identical vectors (every row in one bucket per tree) gives every query
+    the whole corpus, capped by id."""
+    corpus = spark.createDataFrame([(i, [1.0, 2.0, 3.0]) for i in range(50)],
+                                   "id long, vec array<double>").cache()
+    model = ann.fit(np.tile([1.0, 2.0, 3.0], (50, 1)),
+                    AnnConfig(n_trees=3, k_min_vecs=5, dims=3, seed=1))
+    buckets = ann.build_buckets(corpus, model).cache()
+    assert buckets.select("tree_id", "hash").distinct().count() == 3
+    queries = spark.createDataFrame([(100 + i, [1.0, 2.0, 3.0 + i])
+                                     for i in range(4)],
+                                    "query_id long, vec array<double>")
+    for qs in (queries, queries.filter(F.col("query_id") < 0)):
+        for impl in ann.DIST_IMPLS:
+            kw = dict(k=5, max_dist=1e9, metric="l2", dist_impl=impl,
+                      max_candidates=7)
+            got = _same_topk(ann.search(qs, buckets, corpus, model, **kw),
+                             ann.search(qs, buckets, corpus, model,
+                                        broadcast_probes=False, **kw))
+            if qs is queries:
+                # all distances tie per query: the lowest ids win
+                assert {r[2] for r in got} == set(range(5)), impl
+            else:
+                assert got == []
+
+
+def test_ivf_small_and_large_batch_paths_agree(spark, mixture):
+    """A batch of ``QUERY_CROSSOVER`` or more queries keeps the distributed
+    candidate join; the same queries in small batches take the driver path
+    and return the same top-k."""
+    from lsh_search_go_spark.functions import layout
+
+    train, _ = mixture
+    rng = np.random.default_rng(5)
+    n = layout.QUERY_CROSSOVER + 4
+    qv = train[rng.integers(0, len(train), n)] + rng.normal(scale=0.2,
+                                                             size=(n, 8))
+    corpus = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(train)],
+                                   "id long, vec array<double>").cache()
+    queries = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(qv)],
+                                    "query_id long, vec array<double>").cache()
+    C = ivf.fit_centroids(train, 12, "l2", seed=3)
+    inv = ivf.assign(corpus, C, "l2").cache()
+    half = n // 2
+    for impl in ("sql", "matmul_grouped"):
+        kw = dict(k=5, max_dist=1e9, metric="l2", nprobe=3, dist_impl=impl)
+        large = ivf.search(queries, inv, corpus, C, **kw)
+        small = [ivf.search(queries.filter((F.col("query_id") >= lo)
+                                           & (F.col("query_id") < lo + half)),
+                            inv, corpus, C, **kw) for lo in (0, half)]
+        # only the large batch still joins the inverted lists in its plan
+        assert "centroid_id" in large._jdf.queryExecution().executedPlan().toString()
+        assert "centroid_id" not in small[0]._jdf.queryExecution().executedPlan().toString()
+        assert _rows(large) == sorted(_rows(small[0]) + _rows(small[1])), impl
+
+
+def test_small_batch_search_jobs(spark, mixture, frames, executed_plans):
+    """A warm 10-query ``ann.search`` (grouped verify, capped) runs 6 Spark
+    jobs: the query collect, the probe broadcast and the matched-row collect,
+    the candidate broadcast, the verify and the top-k.  The distributed
+    dedup / cap / grouping plan ran 8 for the same call.  The matched-row
+    collect is one broadcast hash join of the probes into the buckets, with
+    no Exchange."""
+    train, _ = mixture
+    corpus, queries = frames["long"]
+    model = ann.fit(train, AnnConfig(n_trees=6, k_min_vecs=40, dims=8, seed=3))
+    buckets = ann.build_buckets(corpus, model).cache()
+    buckets.count()
+    batch = queries.filter(F.col("query_id") < 1010)
+
+    def call():
+        return ann.search(batch, buckets, corpus, model, k=5, max_dist=1e9,
+                          metric="l2", dist_impl="matmul_grouped",
+                          max_candidates=20).collect()
+
+    call()
+    sc = spark.sparkContext
+    sc.setJobGroup("small-batch-search", "one warm 10-query search")
+    try:
+        plans = executed_plans(call)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("small-batch-search")) == 6
+    matched = [p for p in plans if "__qrow" in p]
+    assert len(matched) == 1 and "BroadcastHashJoin" in matched[0]
+    assert "Exchange hashpartitioning" not in matched[0]
+
+
+# --- the query-batch contract ---------------------------------------------
+
+@pytest.fixture(scope="module")
+def small_index(spark, mixture):
+    train, _ = mixture
+    corpus = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(train)],
+                                   "id long, vec array<double>").cache()
+    model = ann.fit(train, AnnConfig(n_trees=4, k_min_vecs=40, dims=8, seed=3))
+    buckets = ann.build_buckets(corpus, model).cache()
+    C = ivf.fit_centroids(train, 8, "l2", seed=3)
+    inv = ivf.assign(corpus, C, "l2").cache()
+    return corpus, model, buckets, C, inv
+
+
+def _query_frame(spark, vecs):
+    return spark.createDataFrame([(7 + i, v) for i, v in enumerate(vecs)],
+                                 "query_id long, vec array<double>")
+
+
+@pytest.mark.parametrize("op", ["sql", "matmul", "matmul_grouped", "ivf"])
+def test_query_batch_contract(spark, small_index, op):
+    """A wrong width or a NaN element raises ``ValueError`` naming the first
+    offending query_id; an empty batch returns an empty result."""
+    corpus, model, buckets, C, inv = small_index
+
+    def run(qs):
+        if op == "ivf":
+            return ivf.search(qs, inv, corpus, C, 5, 1e9, "l2", nprobe=2)
+        return ann.search(qs, buckets, corpus, model, 5, 1e9, "l2",
+                          dist_impl=op)
+
+    good = [0.5] * 8
+    with pytest.raises(ValueError,
+                       match=re.escape("query 7 has 5 elements; the index "
+                                       "expects 8")):
+        run(_query_frame(spark, [[0.5] * 5, [0.5] * 5]))
+    with pytest.raises(ValueError, match=re.escape("query 9 has a NaN element")):
+        run(_query_frame(spark, [good, good, good[:3] + [float("nan")] + good[4:]]))
+    assert run(_query_frame(spark, [good]).filter(F.col("query_id") < 0)).collect() == []

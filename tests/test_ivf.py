@@ -101,7 +101,8 @@ def test_ivf_hot_centroid_skew(spark):
     assert "WindowGroupLimit" in plan, "top-k must pre-limit per partition"
 
 
-def test_ivf_list_store_pruned_search_matches(mixture, spark, tmp_path):
+def test_ivf_list_store_pruned_search_matches(mixture, spark, tmp_path,
+                                             executed_plans):
     """The centroid-partitioned list store returns identical results to the
     in-memory inverted relation, and its scan prunes to the probed
     centroid_id directories (the IVF serving layout, symmetric with the
@@ -122,9 +123,10 @@ def test_ivf_list_store_pruned_search_matches(mixture, spark, tmp_path):
 
     import re
     one_q = queries.limit(1)
-    plan = (ivf.search_from_store(one_q, store, corpus, C, 10, 0.05,
-                                  "cosine", nprobe=3)
-            ._jdf.queryExecution().executedPlan().toString())
+    # a one-query batch scans the store in its candidate collect, so the
+    # evidence is in the plans the call executed
+    plan = "\n".join(executed_plans(lambda: ivf.search_from_store(
+        one_q, store, corpus, C, 10, 0.05, "cosine", nprobe=3).collect()))
     pf = re.search(r"PartitionFilters: \[(.*?)\]", plan)
     assert pf and "centroid_id" in pf.group(1), \
         f"centroid partition filter not pushed: {pf and pf.group(1)}"

@@ -219,6 +219,22 @@ def test_resume_skips_completed_stages_and_matches(spark, source, run):
     assert a == b
 
 
+def test_fully_resumed_run_infers_no_schema(spark, source, run):
+    """A resumed stage is read back with the schema Spark wrote into its
+    footers: a fully resumed run starts only the surrogate-key guard's
+    jobs, where schema inference used to add one job per resumed stage
+    (7 jobs on this corpus, 4 of them inference)."""
+    pipe, _ = run
+    sc = spark.sparkContext
+    sc.setJobGroup("resumed-run", "fully resumed run")
+    try:
+        result = pipe.run(source)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert all(s.resumed for s in result.stages)
+    assert len(sc.statusTracker().getJobIdsForGroup("resumed-run")) == 3
+
+
 def test_resume_after_partial_failure(spark, source, run, tmp_path_factory):
     """Kill-mid-run contract (FIXTURES §5): complete the signatures stage,
     simulate death before pairs/clusters, re-run — later stages rebuild,

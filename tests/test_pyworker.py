@@ -86,9 +86,10 @@ def test_guard_runs_in_workers_and_driver_relations_skip_them(spark):
 
 
 def test_search_relations_skip_python_workers_with_arrow_off(spark, monkeypatch):
-    """The driver bucket build and the ANN and IVF probe frames are built from
-    Arrow tables: with the session's Arrow conversion off none of them plans a
-    PythonRDD, and the top-k equals the Arrow-on one."""
+    """The driver bucket build, the ANN and IVF probe frames and the small
+    batches' candidate relations are built from Arrow tables: with the
+    session's Arrow conversion off none of them plans a PythonRDD, and the
+    top-k equals the Arrow-on one."""
     rng = np.random.default_rng(11)
     X = rng.normal(size=(120, 6))
     ids = np.arange(120, dtype=np.int64)
@@ -129,5 +130,7 @@ def test_search_relations_skip_python_workers_with_arrow_off(spark, monkeypatch)
         spark.conf.set(key, before)
     inverted.unpersist()
     assert on == off and all(on[:2]) and on[2] == []
-    assert len(made) == 4                 # bucket build + three probe frames
+    # bucket build + three probe frames + the three small batches' local
+    # candidate relations
+    assert len(made) == 7
     assert not any(_python_rdd(df) for df in made)

@@ -8,7 +8,11 @@ Checks, per operator:
   udf(udf(content)) re-evaluation);
 - the candidate self-join and verify joins pick broadcast where one side is
   small, and stay inside WholeStageCodegen elsewhere;
-- the ANN search probe join broadcasts the query side.
+- the ANN search probe join broadcasts the query side;
+- a small ANN/IVF batch (fewer than ``layout.QUERY_CROSSOVER`` queries)
+  broadcasts its driver-built local candidate relation into the corpus
+  verify with no Exchange before the verify; a batch of 256 or more keeps
+  the distributed dedup / cap plan.
 """
 
 from __future__ import annotations
@@ -29,13 +33,34 @@ def condensed(df, max_lines: int = 40) -> str:
         if not s:
             continue
         if re.search(r"Scan parquet|PushedFilters|ReadSchema|ArrowEvalPython|"
-                     r"MapInPandas|"
+                     r"MapInPandas|MapInArrow|LocalTableScan|"
                      r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
                      r"Exchange|HashAggregate|"
                      r"ObjectHashAggregate|WholeStageCodegen|Generate|Window|"
                      r"InMemory", ln):
             keep.append(ln.rstrip()[:160])
     return "\n".join(keep[:max_lines])
+
+
+def executed_plans(spark, action) -> list[str]:
+    """Run ``action`` and return the physical plans of the SQL executions it
+    started, read from the session's SQL status store — so the plans of
+    queries a call runs internally (a small batch's candidate collect) show
+    too."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def recent():
+        n = store.executionsCount()
+        seq = store.executionsList(max(n - 50, 0), 50)     # a Scala Seq
+        return [seq.apply(i) for i in range(seq.size())]
+
+    bus.waitUntilEmpty()
+    seen = max((e.executionId() for e in recent()), default=-1)
+    action()
+    bus.waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in recent()
+            if e.executionId() > seen]
 
 
 def main() -> None:
@@ -122,10 +147,23 @@ def main() -> None:
     import numpy as np
     model = ann.fit(np.array([r.vec for r in emb.collect()]), acfg)
     b = ann.build_buckets(emb, model, "id", "vec")
-    s = ann.search(queries, b, emb, model, k=5, max_dist=2.0, metric="cosine")
-    print("## ANN LSH search (probe explode → bucket join → verify → window top-k)\n")
+    s = ann.search(queries, b, emb, model, k=5, max_dist=2.0, metric="cosine",
+                   dist_impl="matmul_grouped", max_candidates=50)
+    print("## ANN LSH search, 10 queries (candidates deduped and capped on the "
+          "driver: the local grouped relation is broadcast into the corpus "
+          "verify — no Exchange before the verify, only the top-k shuffles)\n")
     print("```")
     print(condensed(s))
+    print("```\n")
+    big_q = emb.filter(F.col("id") < 300).select(F.col("id").alias("query_id"),
+                                                  "vec")
+    s = ann.search(big_q, b, emb, model, k=5, max_dist=2.0, metric="cosine",
+                   dist_impl="matmul_grouped", max_candidates=50)
+    print("## ANN LSH search, 300 queries (at or above layout.QUERY_CROSSOVER: "
+          "broadcast probes → bucket join → dedup + cap window → grouped "
+          "verify → window top-k)\n")
+    print("```")
+    print(condensed(s, max_lines=60))
     print("```\n")
 
     from lsh_search_go_spark.operators import ivf
@@ -134,20 +172,22 @@ def main() -> None:
     inv = ivf.assign(emb, C, "cosine")
     si = ivf.search(queries, inv, emb, C, k=5, max_dist=2.0, metric="cosine",
                     nprobe=3)
-    print("## IVF search (broadcast probes → list join → verify → window top-k; "
-          "no dedup shuffle — lists are disjoint)\n")
+    print("## IVF search, 10 queries (list rows matched and collected on the "
+          "driver; the local candidate relation is broadcast into the verify "
+          "→ window top-k)\n")
     print("```")
     print(condensed(si))
     print("```\n")
 
     store = os.path.join(wd, "bucket_store")
     ann.write_bucket_store(b, store, hash_partitions=16, model=model)
-    ss = ann.search_from_store(queries, store, emb, model, k=5, max_dist=2.0,
-                               metric="cosine")
-    plan = ss._jdf.queryExecution().executedPlan().toString()
+    plan = "\n".join(executed_plans(spark, lambda: ann.search_from_store(
+        queries, store, emb, model, k=5, max_dist=2.0,
+        metric="cosine").collect()))
     pf = re.findall(r"PartitionFilters: \[[^\]]*\]", plan)
-    print("## bucket-store search (combined-key PartitionFilters must prune "
-          "the (tree_id, hash_pfx) directories exactly)\n")
+    print("## bucket-store search, 10 queries (the candidate collect's "
+          "combined-key PartitionFilters must prune the (tree_id, hash_pfx) "
+          "directories exactly)\n")
     print("```")
     print("\n".join(p[:400] for p in pf) or "NO PARTITION FILTERS — REGRESSION")
     print("```")
