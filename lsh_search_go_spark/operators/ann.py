@@ -25,9 +25,10 @@ arrival-order-dependent ``maxCandidates`` early exit — Spark can't early-exit
 a join; the deterministic skew guard is a per-bucket cap.
 
 Spark shape: the model is fit driver-side on a corpus *sample* (tiny —
-numpy), broadcast once; hashing runs as one ``mapInArrow`` pass doing one
-matmul-style traversal step per depth level across the whole batch; buckets
-and candidate verification are DataFrame joins.  A small query batch
+numpy), broadcast once; corpus hashing runs as one ``mapInArrow`` pass doing
+one matmul-style traversal step per depth level across the whole batch, and
+a query batch is collected and hashed on the driver; buckets and candidate
+verification are DataFrame joins.  A small query batch
 collects its matched bucket rows once and dedups and caps its candidates on
 the driver (:func:`driver_candidates`).
 """
@@ -739,25 +740,17 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
                        collected=collected)
 
 
-def _msb_flip_expr(hash_col: str) -> str:
+def msb_flip_np(h: np.ndarray) -> np.ndarray:
     """Multiprobe neighbor hash (/root/reference/lsh/lsh.go:148-153):
     pos = floor(log2(hash)) for hash > 0 else 0; neighbor = hash ^ (1<<pos).
+    The one probe rule: :func:`driver_probe_arrays` and the DuckDB oracle's
+    probe expansion both use it.
 
-    The MSB position is computed INTEGER-exactly as ``length(bin(h)) - 1``
-    (never via float log2, whose rounding near exact powers of two differs
-    between engines).  This single expression also covers the edge cases:
-    h == 0 → bin='0' → pos 0 (reference semantics), and h < 0 (bit 63 set,
-    only reachable at max_depth 63; the reference stores uint64) → bin is the
-    64-char two's-complement string → pos 63, i.e. the true MSB (r1 ADVICE;
-    the default max_depth of 62 keeps hashes non-negative)."""
-    pos = f"(length(bin({hash_col})) - 1)"
-    return f"cast({hash_col} ^ shiftleft(cast(1 as bigint), {pos}) as bigint)"
-
-
-def msb_flip_np(h: np.ndarray) -> np.ndarray:
-    """Integer-exact mirror of :func:`_msb_flip_expr` (used by the DuckDB
-    oracle's probe-expansion materialization — tiny arrays, exactness over
-    vectorization)."""
+    The MSB position is integer-exact (``int.bit_length``, never a float
+    log2, whose rounding near exact powers of two differs between engines).
+    h == 0 → pos 0 (reference semantics); h < 0 (bit 63 set, only reachable
+    at max_depth 63; the reference stores uint64) → pos 63, the true MSB
+    (the default max_depth of 62 keeps hashes non-negative)."""
     h = np.asarray(h, dtype=np.int64)
     pos = np.array(
         [int(x).bit_length() - 1 if x > 0 else (63 if x < 0 else 0) for x in h],
@@ -795,12 +788,11 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
            id_col: str = "id", vec_col: str = "vec",
            query_id_col: str = "query_id", query_vec_col: str = "vec",
            dist_impl: str = "sql",
-           max_candidates: int | None = None,
-           broadcast_probes: bool = True,
-           hash_queries_on_driver: bool | None = None) -> DataFrame:
-    """Batch search: hash queries → (multiprobe) probe expansion → bucket
-    join → pair dedup → [deterministic candidate cap] → exact verify →
-    inclusive threshold → top-k.
+           max_candidates: int | None = None) -> DataFrame:
+    """Batch search: collect and hash the queries on the driver →
+    (multiprobe) probe expansion → bucket join → pair dedup →
+    [deterministic candidate cap] → exact verify → inclusive threshold →
+    top-k.
 
     ``dist_impl``: "sql" (JVM fold — bit-identical to the DuckDB oracle),
     "matmul" (broadcast query matrix + vectorized gather per corpus batch —
@@ -817,66 +809,53 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     not replicated).
 
     Physical-plan contract (the 100 TB shape, r1 VERDICT fixes):
-    * ONE hash-UDF evaluation per side (``exploded_tree_hashes`` emits
-      exploded rows directly — no posexplode over a UDF column);
+    * the queries are collected ONCE and hashed on the driver, like the
+      reference's client-side ``getHashes`` (its ``lsh/lsh.go:141``);
+      the only hash UDF of the read path is the corpus side's
+      (:func:`build_buckets`), and the one collect also feeds the matmul
+      verifies;
     * the probe relation (n_queries × trees × probes rows of three scalars)
       is **broadcast** into the bucket join — the big corpus bucket relation
       is never shuffled for a query batch;
-    * a batch of fewer than :data:`layout.QUERY_CROSSOVER` queries (hashed
-      on the driver, probes broadcast) collects the matched (query row,
-      neighbor_id, tree_id) rows in ONE Arrow transfer and dedups and caps
-      them in numpy (:func:`driver_candidates`); the candidates come back
-      as a local relation — grouped per neighbor for ``matmul_grouped`` —
-      that is broadcast into the corpus verify, so no Exchange runs before
-      the verify and only the top-k shuffles;
+    * the batch size alone picks the candidate plan: a batch of fewer than
+      :data:`layout.QUERY_CROSSOVER` queries collects the matched (query
+      row, neighbor_id, tree_id) rows in ONE Arrow transfer and dedups and
+      caps them in numpy (:func:`driver_candidates`); the candidates come
+      back as a local relation — grouped per neighbor for
+      ``matmul_grouped`` — so no Exchange runs before the verify and only
+      the top-k shuffles;
     * a larger batch dedups and caps as Spark operators, moving bare
       (query_id, neighbor_id) ids: query vectors do NOT ride the candidate
       joins, the (small, broadcast) query relation is re-joined by query_id
       — shuffles move 8-byte ids, not 512-byte vectors;
     * the candidate set is broadcast into the corpus verify join, so the
       corpus is probed hash-side rather than shuffled.
-    Set ``broadcast_probes=False`` for huge query batches where the probe /
-    candidate relations stop fitting in a broadcast (falls back to shuffle
-    joins; same results).  ``hash_queries_on_driver`` defaults to FOLLOW
-    ``broadcast_probes`` (r2 ADVICE): declaring the batch too big to
-    broadcast also means it is too big to collect to the driver, so the
-    huge-batch escape hatch keeps hashing distributed too — pass an explicit
-    True/False to decouple them.  ``dist_impl="matmul"`` still collects the
-    query matrix regardless (that is its definition; don't pair it with
-    driver-hostile batch sizes).
 
-    A collected query batch must match the forest: a vector whose width is
-    not ``model.cfg.dims`` or that holds a NaN raises ``ValueError`` naming
-    the first offending ``query_id``.
+    The query batch must match the forest: a vector whose width is not
+    ``model.cfg.dims`` or that holds a NaN raises ``ValueError`` naming the
+    first offending ``query_id``.
 
     Returns (query_id, rank, neighbor_id, dist).
     """
     check_dist_impl(dist_impl)
     check_metric(metric)
-    if hash_queries_on_driver is None:
-        hash_queries_on_driver = broadcast_probes
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
-    collected = None
-    if hash_queries_on_driver or dist_impl == "matmul":
-        # ONE driver round-trip, shared by probe hashing and matmul verify
-        collected = _collect_queries(q, model.cfg.dims)
+    # ONE driver round-trip, shared by probe hashing and the matmul verifies
+    collected = _collect_queries(q, model.cfg.dims)
     cands = candidate_pairs(q, buckets, model, id_col=id_col,
                             max_candidates=max_candidates,
-                            broadcast_probes=broadcast_probes,
-                            hash_queries_on_driver=hash_queries_on_driver,
                             _collected=collected,
                             _grouped=dist_impl == "matmul_grouped")
     return verify_topk(q, cands, corpus, k, max_dist, metric,
                        id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
-                       broadcast_small=broadcast_probes, collected=collected)
+                       collected=collected)
 
 
 def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
                 k: int, max_dist: float, metric: str = "l2",
                 id_col: str = "id", vec_col: str = "vec",
                 dist_impl: str = "sql",
-                broadcast_small: bool = True,
                 collected: tuple[list, np.ndarray] | None = None) -> DataFrame:
     """Exact-verify + inclusive threshold + top-k over a candidate relation
     (Q5-Q6, /root/reference/lsh/lsh.go:174-198) — shared by the LSH-forest
@@ -888,7 +867,6 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
 
     check_dist_impl(dist_impl)
     check_metric(metric)
-    maybe_bc = F.broadcast if broadcast_small else (lambda df: df)
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
     if dist_impl == "matmul_grouped":
         c, _ = layout.plan(c, "gram_verify", key_col="neighbor_id",
@@ -904,7 +882,7 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
             cands.groupBy("neighbor_id").agg(
                 F.collect_list("query_id").alias("__qids")))
         scored = _matmul_verify_grouped(
-            q, c.join(maybe_bc(grouped), "neighbor_id"), metric,
+            q, c.join(F.broadcast(grouped), "neighbor_id"), metric,
             collected=collected)
     elif dist_impl == "matmul":
         # Benchmark-scale verify: the query MATRIX is broadcast once; each
@@ -916,13 +894,13 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
         # kernel is ~0.2 s serial at 400k candidate pairs — an interleaved
         # A/B showed no measurable win from batch-threading it, so the
         # search path stays probe-free.)
-        scored = _matmul_verify(q, c.join(maybe_bc(cands), "neighbor_id"), metric,
+        scored = _matmul_verify(q, c.join(F.broadcast(cands), "neighbor_id"), metric,
                                 collected=collected)
     else:
         dist_expr = cosine_dist_expr if metric == "cosine" else l2_dist_expr
         scored = (
-            c.join(maybe_bc(cands), "neighbor_id")      # corpus stays in place
-            .join(maybe_bc(q), "query_id")              # vectors re-joined late
+            c.join(F.broadcast(cands), "neighbor_id")   # corpus stays in place
+            .join(F.broadcast(q), "query_id")           # vectors re-joined late
             .withColumn("dist", dist_expr("__cvec", "__qvec"))
             .select("query_id", "neighbor_id", "dist")
         )
@@ -972,12 +950,11 @@ def driver_probe_arrays(Q: np.ndarray, model: HasherModel,
     return ids_rep, trees, flat
 
 
-def on_driver(n_queries: int, broadcast_probes: bool = True) -> bool:
+def on_driver(n_queries: int) -> bool:
     """True when a batch's candidate set is computed on the driver
-    (:func:`driver_candidates`): the probes are broadcast and the batch has
-    fewer than :data:`layout.QUERY_CROSSOVER` queries — the contract under
-    which the queries themselves are already collected to the driver."""
-    return broadcast_probes and n_queries < layout.QUERY_CROSSOVER
+    (:func:`driver_candidates`): the batch has fewer than
+    :data:`layout.QUERY_CROSSOVER` queries."""
+    return n_queries < layout.QUERY_CROSSOVER
 
 
 def driver_candidates(q: DataFrame, q_ids: list, probes: DataFrame,
@@ -1008,8 +985,7 @@ def driver_candidates(q: DataFrame, q_ids: list, probes: DataFrame,
     multiprobe) × bucket size`` rows of three narrow columns (the
     broadcast-probe plan already pulled the deduped set through the driver
     as a broadcast).  A degenerate bucket makes the collect fail loudly at
-    ``spark.driver.maxResultSize`` instead of exhausting driver memory;
-    ``broadcast_probes=False`` keeps such batches off the driver."""
+    ``spark.driver.maxResultSize`` instead of exhausting driver memory."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     capped = max_candidates is not None
@@ -1064,61 +1040,49 @@ def _run_starts(a: np.ndarray) -> np.ndarray:
 def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
                     id_col: str = "id",
                     max_candidates: int | None = None,
-                    broadcast_probes: bool = True,
-                    hash_queries_on_driver: bool = True,
                     _collected: tuple[list, np.ndarray] | None = None,
                     _probe_arrays=None, _grouped: bool = False) -> DataFrame:
     """Candidate generation: q(query_id, __qvec) × buckets → deduped
     (query_id, neighbor_id) pairs (Q1-Q4, /root/reference/lsh/lsh.go:140-172).
     Public so benchmarks/metrics can count the pruned candidate set.
 
-    A batch hashed on the driver with broadcast probes and fewer than
-    :data:`layout.QUERY_CROSSOVER` queries gets its candidates from
-    :func:`driver_candidates`, as a local relation; any other batch runs
-    the join, dedup and cap as Spark operators.  ``_collected``:
+    The batch is hashed on the driver, like the reference's client-side
+    ``getHashes`` (its ``lsh/lsh.go:141``).  Fewer than
+    :data:`layout.QUERY_CROSSOVER` queries get their candidates from
+    :func:`driver_candidates`, as a local relation; a larger batch runs the
+    broadcast probe join, dedup and cap as Spark operators.  ``_collected``:
     pre-collected (ids, matrix) from :func:`_collect_queries` so ``search``
-    pays one driver round-trip, not two; ``_grouped``: return a driver
-    result grouped per neighbor (:func:`driver_candidates`)."""
-    maybe_bc = F.broadcast if broadcast_probes else (lambda df: df)
+    pays one driver round-trip, not two (without it the batch is collected
+    here, under :func:`search`'s query-batch contract); ``_grouped``:
+    return a driver result grouped per neighbor (:func:`driver_candidates`)."""
     lists = buckets.withColumnRenamed(id_col, "neighbor_id")
-    if hash_queries_on_driver:
-        # the model lives on the driver and the query batch is small by
-        # contract: hashing locally mirrors the reference's client-side
-        # getHashes (/root/reference/lsh/lsh.go:141) and saves two Spark
-        # jobs + a Python-worker spin-up per search.
-        spark = q.sparkSession
-        q_ids, Q = _collected if _collected is not None else _collect_queries(q)
-        if _probe_arrays is not None:
-            ids_rep, trees, flat = _probe_arrays
-        else:
-            ids_rep, trees, flat = driver_probe_arrays(Q, model, len(q_ids))
-        # built from Arrow, not a Python list-of-tuples (per-row Py4J
-        # serialization at mid-size batches, r3 ADVICE) nor pandas (a
-        # PythonRDD when the session's Arrow conversion is off): the JVM
-        # parses it, so no Python task runs
-        if on_driver(len(q_ids), broadcast_probes):
-            probes = spark.createDataFrame(
-                pa.table({"__qrow": ids_rep.astype(np.int32),
-                          "tree_id": trees.astype(np.int32), "hash": flat}),
-                schema="__qrow int, tree_id int, hash long")
-            return driver_candidates(q, q_ids, probes, lists,
-                                     ["tree_id", "hash"], max_candidates,
-                                     grouped=_grouped)
-        qtype = dict(q.dtypes)["query_id"]
-        probes = spark.createDataFrame(
-            pa.table({"query_id": AM.take(pa.array(q_ids), ids_rep),
-                      "tree_id": trees.astype(np.int32),
-                      "hash": flat}),
-            schema=f"query_id {qtype}, tree_id int, hash long",
-        )
+    spark = q.sparkSession
+    q_ids, Q = (_collected if _collected is not None
+                else _collect_queries(q, model.cfg.dims))
+    if _probe_arrays is not None:
+        ids_rep, trees, flat = _probe_arrays
     else:
-        probes = exploded_tree_hashes(q, model, "__qvec", ("query_id",))
-        if model.cfg.multiprobe:
-            probes = probes.withColumn(
-                "hash",
-                F.explode(F.array(F.col("hash"), F.expr(_msb_flip_expr("hash")))),
-            )
-    matched = maybe_bc(probes).join(lists, ["tree_id", "hash"])
+        ids_rep, trees, flat = driver_probe_arrays(Q, model, len(q_ids))
+    # built from Arrow, not a Python list-of-tuples (per-row Py4J
+    # serialization at mid-size batches, r3 ADVICE) nor pandas (a
+    # PythonRDD when the session's Arrow conversion is off): the JVM
+    # parses it, so no Python task runs
+    if on_driver(len(q_ids)):
+        probes = spark.createDataFrame(
+            pa.table({"__qrow": ids_rep.astype(np.int32),
+                      "tree_id": trees.astype(np.int32), "hash": flat}),
+            schema="__qrow int, tree_id int, hash long")
+        return driver_candidates(q, q_ids, probes, lists,
+                                 ["tree_id", "hash"], max_candidates,
+                                 grouped=_grouped)
+    qtype = dict(q.dtypes)["query_id"]
+    probes = spark.createDataFrame(
+        pa.table({"query_id": AM.take(pa.array(q_ids), ids_rep),
+                  "tree_id": trees.astype(np.int32),
+                  "hash": flat}),
+        schema=f"query_id {qtype}, tree_id int, hash long",
+    )
+    matched = F.broadcast(probes).join(lists, ["tree_id", "hash"])
     if max_candidates is None:
         return (matched.select("query_id", "neighbor_id")
                 .dropDuplicates(["query_id", "neighbor_id"]))  # closestSet analog (lsh/lsh.go:142)

@@ -20,7 +20,7 @@ Scale design notes (100 TB / 10^12 files):
   signatures tasks;
 - signatures is one scan + one narrow write (no shuffle);
 - buckets is the posexplode of each signature's bands, a view derived in the
-  pairs stage (materialized only on request, as a plain stage);
+  pairs stage;
 - pairs self-join shuffles on (band_id, band_hash) with AQE skew splitting +
   the max_bucket_size guard (dropped buckets are *logged*, never silent);
 - CC rounds localCheckpoint to keep lineage flat.
@@ -68,7 +68,7 @@ class DedupPipeline:
     backend: "pandas" (Arrow-vectorized UDFs — the spec path) or "sql"
     (JVM higher-order functions — bit-identical, used by the oracle gate)."""
 
-    STAGES = ("ingest", "signatures", "buckets", "pairs", "substring", "clusters")
+    STAGES = ("ingest", "signatures", "pairs", "substring", "clusters")
 
     def __init__(self, spark: SparkSession, cfg: DedupConfig, workdir: str,
                  impl: str = "pandas", target_partitions: int | None = None):
@@ -127,22 +127,18 @@ class DedupPipeline:
         # again by the repartition, leaves some partitions empty
         return df.repartition(self.target_partitions, cfg.id_col)
 
-    def run(self, source: DataFrame, with_substring: bool = True,
-            materialize_ingest: bool | None = None,
-            materialize_buckets: bool = False) -> PipelineResult:
-        """``materialize_ingest``/``materialize_buckets`` write those relations
-        as their own checkpointed stages.  Default: OFF for the fused pandas
-        path — both are derivable in the signatures pass, and at bench scale
-        each extra write+read+bookkeeping cycle is pure serial overhead
-        (~10s/stage that no amount of cores removes).  The SQL impl keeps an
-        ingest stage (its signature exprs would otherwise recompute sha
-        per column reference)."""
+    def run(self, source: DataFrame,
+            with_substring: bool = True) -> PipelineResult:
+        """The ``sql`` impl writes the prepared input as its own ``ingest``
+        stage (its signature exprs would otherwise recompute sha per column
+        reference); the fused ``pandas`` path derives it inside the
+        signatures pass, since at bench scale each extra
+        write+read+bookkeeping cycle is pure serial overhead (~10s/stage that
+        no amount of cores removes)."""
         cfg = self.cfg
         result = PipelineResult(workdir=self.root)
-        if materialize_ingest is None:
-            materialize_ingest = self.impl != "pandas"
 
-        if materialize_ingest:
+        if self.impl == "sql":
             ingest = self._run_stage("ingest", result,
                                      lambda held: self._prepare_source(source))
         else:
@@ -210,9 +206,6 @@ class DedupPipeline:
                     "surrogate (two-long key) for this corpus size"
                 )
 
-        # ---- buckets: (band_id, band_hash, doc_id) — derived view by
-        # default; materialized only for serving deployments (which would add
-        # (band_id, band_hash) bucketing at this sink for probe pruning).
         idmap = signatures.select("doc_key", cfg.id_col)
 
         def map_back(pairs_keyed: DataFrame, left: str, right: str,
@@ -232,16 +225,9 @@ class DedupPipeline:
                 *extra_cols,
             )
 
-        def make_buckets():
-            return explode_bands(
-                signatures.filter(F.size("shingles") > 0), "doc_key", "bands"
-            )
-
-        if materialize_buckets:
-            buckets = self._run_stage("buckets", result,
-                                      lambda held: make_buckets())
-        else:
-            buckets = make_buckets()
+        # ---- buckets: (band_id, band_hash, doc_key), a view derived here
+        buckets = explode_bands(
+            signatures.filter(F.size("shingles") > 0), "doc_key", "bands")
 
         # ---- pairs: candidates → exact verify (inclusive threshold).
         # Strategy "minhash": band buckets → exact-Jaccard verify;

@@ -138,17 +138,22 @@ def test_fit_deterministic():
         np.testing.assert_array_equal(t1.normals, t2.normals)
 
 
-def test_multiprobe_msb_flip_expr(spark):
-    """Q1 (lsh/lsh.go:148-153): pos = floor(log2(h)) for h>0 else 0."""
-    df = spark.createDataFrame([(h,) for h in [0, 1, 2, 3, 5, 12, 1 << 40]],
-                               "h long")
-    got = {r.h: r.f for r in
-           df.withColumn("f", F.expr(ann._msb_flip_expr("h"))).collect()}
+def test_multiprobe_msb_flip_np():
+    """Q1 (lsh/lsh.go:148-153): pos = floor(log2(h)) for h>0 else 0, with
+    the hash read as the reference's uint64 — so a hash with bit 63 set
+    (max_depth 63) flips bit 63."""
+    hashes = [0, 1, 2, 3, 5, 12, 1 << 40, -(1 << 63), -(1 << 63) + 5]
+
     def ref(h):
-        pos = int(math.floor(math.log2(h))) if h > 0 else 0
-        return h ^ (1 << pos)
-    for h in [0, 1, 2, 3, 5, 12, 1 << 40]:
-        assert got[h] == ref(h), h
+        u = h % (1 << 64)
+        pos = int(math.floor(math.log2(u))) if u > 0 else 0
+        f = u ^ (1 << pos)
+        return f - (1 << 64) if f >= 1 << 63 else f
+
+    got = ann.msb_flip_np(np.array(hashes, dtype=np.int64))
+    assert got.dtype == np.int64
+    assert got.tolist() == [ref(h) for h in hashes]
+    assert got[-1] == 5 and got[-2] == 0
 
 
 # --- tiny-corpus e2e (lsh_test.go:228-295) ----------------------------------

@@ -68,31 +68,6 @@ def test_ann_search_dist_impls_agree(spark, vecs, metric):
         ann.search(queries, buckets, corpus, model, 5, 1e9, "angular")
 
 
-def test_ann_search_huge_batch_path_matches(spark, vecs):
-    """broadcast_probes=False (the huge-query-batch escape hatch) now also
-    keeps query hashing distributed by default (r2 ADVICE: declaring the
-    batch un-broadcastable means it is un-collectable too).  The
-    shuffle-join + executor-hashed path must return identical results to
-    the default broadcast + driver-hashed path."""
-    corpus, queries = vecs
-    cfg = AnnConfig(n_trees=6, k_min_vecs=30, dims=12, seed=42, sample_size=1000)
-    model = ann.fit(np.array([r.vec for r in corpus.collect()]), cfg)
-    buckets = ann.build_buckets(corpus, model).cache()
-    base = {(r.query_id, r.rank, r.neighbor_id)
-            for r in ann.search(queries, buckets, corpus, model, 5, 1e9,
-                                "l2").collect()}
-    huge = ann.search(queries, buckets, corpus, model, 5, 1e9, "l2",
-                      broadcast_probes=False)
-    got = {(r.query_id, r.rank, r.neighbor_id) for r in huge.collect()}
-    assert got == base
-    # and the plan really has no driver-built probe relation: the probe side
-    # must come from the distributed hash UDF (MapInArrow as of r6; the older
-    # spellings kept for portability), not a LocalTableScan of collected rows
-    plan = huge._jdf.queryExecution().executedPlan().toString()
-    assert ("MapInArrow" in plan or "MapInPandas" in plan
-            or "ArrowEvalPython" in plan)
-
-
 def test_cap_keeps_true_neighbors_when_binding(spark):
     """When candidates ≫ max_candidates, the deterministic cap must keep
     what the reference's arrival-order early exit keeps: true neighbors

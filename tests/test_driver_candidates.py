@@ -1,6 +1,7 @@
 """Small-batch candidates on the driver (``ann.driver_candidates``) against
-the distributed plan, and the query-batch contract of ``ann.search`` and
-``ivf.search``."""
+the Spark candidate plan of a batch of ``layout.QUERY_CROSSOVER`` or more
+queries, and the query-batch contract of ``ann.search``,
+``ann.candidate_pairs`` and ``ivf.search``."""
 
 import re
 
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lsh_search_go_spark.config import AnnConfig
+from lsh_search_go_spark.functions import layout
 from lsh_search_go_spark.operators import ann, ivf
 
 
@@ -16,14 +18,17 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _same_topk(a, b):
-    """Equal (query_id, rank, neighbor_id) rows and distances equal to 1e-9:
-    the two plans hand the gram verify differently composed corpus batches
-    (broadcast vs shuffle join), which moves the last bits of a BLAS sum."""
-    a, b = _rows(a), _rows(b)
-    assert [r[:3] for r in a] == [r[:3] for r in b]
-    assert np.allclose([r[3] for r in a], [r[3] for r in b], rtol=0, atol=1e-9)
-    return a
+def _spark_plan(monkeypatch, build):
+    """``build()`` with every batch on the Spark candidate plan (broadcast
+    probe join, Spark dedup and cap) — the plan a batch of
+    ``QUERY_CROSSOVER`` or more queries takes — and its sorted rows."""
+    with monkeypatch.context() as m:
+        m.setattr(layout, "QUERY_CROSSOVER", 0)
+        df = build()
+    # the bucket join is in the plan, not a driver-built local relation
+    # (the analyzed plan: an empty batch optimizes to an empty relation)
+    assert "tree_id" in df._jdf.queryExecution().analyzed().toString()
+    return _rows(df)
 
 
 def _ids(kind):
@@ -63,11 +68,13 @@ def frames(spark, mixture):
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
 @pytest.mark.parametrize("multiprobe", [True, False])
 def test_driver_candidates_match_distributed_plan(spark, mixture, frames, kind,
-                                                  metric, multiprobe):
+                                                  metric, multiprobe,
+                                                  monkeypatch):
     """The driver dedup and the driver cap keep exactly the pairs the Spark
     dedup and the ``(first_tree, neighbor_id)`` window keep — with a cap
     that binds and ties on ``first_tree`` broken by id — and the top-k of
-    both plans is equal."""
+    both plans is equal, distances bit for bit (both plans broadcast the
+    candidates into the corpus verify)."""
     train, _ = mixture
     corpus, queries = frames[kind]
     cfg = AnnConfig(n_trees=6, k_min_vecs=40, dims=8, seed=3,
@@ -77,12 +84,11 @@ def test_driver_candidates_match_distributed_plan(spark, mixture, frames, kind,
     q = queries.select("query_id", F.col("vec").alias("__qvec"))
     for cap in (None, 9):
         drv = ann.candidate_pairs(q, buckets, model, max_candidates=cap)
-        dist = ann.candidate_pairs(q, buckets, model, max_candidates=cap,
-                                   broadcast_probes=False,
-                                   hash_queries_on_driver=False)
         # the driver result is a local relation: no bucket join left in it
         assert "tree_id" not in drv._jdf.queryExecution().executedPlan().toString()
-        got, want = _rows(drv), _rows(dist)
+        got = _rows(drv)
+        want = _spark_plan(monkeypatch, lambda: ann.candidate_pairs(
+            q, buckets, model, max_candidates=cap))
         assert got == want, (cap, len(got), len(want))
         per_q = {}
         for qid, _ in got:
@@ -92,12 +98,12 @@ def test_driver_candidates_match_distributed_plan(spark, mixture, frames, kind,
         for impl in ("sql", "matmul_grouped"):
             kw = dict(k=12, max_dist=1e9, metric=metric, dist_impl=impl,
                       max_candidates=cap)
-            _same_topk(ann.search(queries, buckets, corpus, model, **kw),
-                       ann.search(queries, buckets, corpus, model,
-                                  broadcast_probes=False, **kw))
+            search = lambda: ann.search(queries, buckets, corpus, model, **kw)
+            assert _rows(search()) == _spark_plan(monkeypatch, search), impl
 
 
-def test_driver_candidates_empty_batch_and_one_bucket_per_tree(spark):
+def test_driver_candidates_empty_batch_and_one_bucket_per_tree(spark,
+                                                              monkeypatch):
     """An empty batch gives an empty result on both plans; a corpus of
     identical vectors (every row in one bucket per tree) gives every query
     the whole corpus, capped by id."""
@@ -114,9 +120,9 @@ def test_driver_candidates_empty_batch_and_one_bucket_per_tree(spark):
         for impl in ann.DIST_IMPLS:
             kw = dict(k=5, max_dist=1e9, metric="l2", dist_impl=impl,
                       max_candidates=7)
-            got = _same_topk(ann.search(qs, buckets, corpus, model, **kw),
-                             ann.search(qs, buckets, corpus, model,
-                                        broadcast_probes=False, **kw))
+            search = lambda: ann.search(qs, buckets, corpus, model, **kw)
+            got = _rows(search())
+            assert got == _spark_plan(monkeypatch, search), impl
             if qs is queries:
                 # all distances tie per query: the lowest ids win
                 assert {r[2] for r in got} == set(range(5)), impl
@@ -128,8 +134,6 @@ def test_ivf_small_and_large_batch_paths_agree(spark, mixture):
     """A batch of ``QUERY_CROSSOVER`` or more queries keeps the distributed
     candidate join; the same queries in small batches take the driver path
     and return the same top-k."""
-    from lsh_search_go_spark.functions import layout
-
     train, _ = mixture
     rng = np.random.default_rng(5)
     n = layout.QUERY_CROSSOVER + 4
@@ -205,7 +209,8 @@ def _query_frame(spark, vecs):
                                  "query_id long, vec array<double>")
 
 
-@pytest.mark.parametrize("op", ["sql", "matmul", "matmul_grouped", "ivf"])
+@pytest.mark.parametrize("op", ["sql", "matmul", "matmul_grouped", "ivf",
+                                "candidate_pairs"])
 def test_query_batch_contract(spark, small_index, op):
     """A wrong width or a NaN element raises ``ValueError`` naming the first
     offending query_id; an empty batch returns an empty result."""
@@ -214,6 +219,9 @@ def test_query_batch_contract(spark, small_index, op):
     def run(qs):
         if op == "ivf":
             return ivf.search(qs, inv, corpus, C, 5, 1e9, "l2", nprobe=2)
+        if op == "candidate_pairs":      # the public call collects the batch
+            q = qs.select("query_id", F.col("vec").alias("__qvec"))
+            return ann.candidate_pairs(q, buckets, model, max_candidates=5)
         return ann.search(qs, buckets, corpus, model, 5, 1e9, "l2",
                           dist_impl=op)
 
