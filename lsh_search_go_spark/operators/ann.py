@@ -613,56 +613,24 @@ def model_fingerprint(model: HasherModel) -> str:
 
 
 def write_bucket_store(buckets: DataFrame, path: str,
-                       hash_partitions: int = 64,
-                       model: HasherModel | None = None) -> None:
-    """Materialize the bucket relation partitioned for probe-side pruning.
-    ``hash_partitions`` is persisted in the ``_store_meta`` sub-dataset — the
-    reader derives partition keys from it, so a mismatch can never silently
-    select the wrong directories (probes whose pfx falls in a non-existent
-    dir would just miss their buckets, degrading recall without an error).
-    Pass the ``model`` whose :func:`build_buckets` produced ``buckets`` and
-    its :func:`model_fingerprint` rides in the meta too, letting
-    :func:`search_from_store` REFUSE a probe model that differs from the
-    build model instead of silently missing every bucket.
+                       hash_partitions: int = 64, *,
+                       model: HasherModel) -> None:
+    """Materialize the bucket relation partitioned by ``(tree_id,
+    hash_pfx)`` for probe-side pruning (``io.write_store``: static
+    overwrite, one file per directory).  ``model`` is the forest whose
+    :func:`build_buckets` produced ``buckets``.  The store's meta holds
+    ``hash_partitions``, from which the reader derives the partition keys,
+    so a mismatch can never silently select the wrong directories, and the
+    :func:`model_fingerprint` of ``model``, with which
+    :func:`search_from_store` refuses any other probe forest."""
+    from lsh_search_go_spark.sources import io
 
-    The meta rides as a one-row JSON dataset written THROUGH Spark (not
-    local ``open()``), so the store works unchanged on HDFS/S3/GCS paths
-    (r2 ADVICE).  The leading underscore keeps Hadoop's hidden-path filter
-    from surfacing it in the parquet scan, and ``mode("overwrite")`` on both
-    writes — with ``partitionOverwriteMode`` pinned to ``static`` so a
-    session-level ``dynamic`` default can't turn the overwrite into a
-    per-touched-directory one (r3 ADVICE: a dynamic re-layout to a smaller
-    modulus would leave stale ``hash_pfx`` dirs whose values still satisfy
-    the new combined-key pruning) — means a re-layout can never leave a
-    stale modulus behind."""
-    spark = buckets.sparkSession
-    (buckets
-     .withColumn("hash_pfx", F.pmod(F.col("hash"), F.lit(hash_partitions)))
-     .repartition("tree_id", "hash_pfx")       # one file per partition dir
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("tree_id", "hash_pfx")
-     .parquet(path))
-    fp = model_fingerprint(model) if model is not None else None
-    (spark.createDataFrame(
-        pa.table({"hash_partitions": [int(hash_partitions)],
-                  "model_fingerprint": pa.array([fp], pa.string())}),
-        "hash_partitions int, model_fingerprint string")
-     .coalesce(1).write.mode("overwrite").json(_meta_path(path)))
-
-
-def _meta_path(path: str) -> str:
-    return path.rstrip("/") + "/_store_meta"
-
-
-def _store_meta(spark, path: str) -> tuple[int, str | None]:
-    row = spark.read.json(_meta_path(path)).head()
-    fp = None
-    try:
-        fp = row["model_fingerprint"]      # absent in pre-r4 stores
-    except Exception:
-        pass
-    return int(row["hash_partitions"]), fp
+    io.write_store(
+        buckets.withColumn("hash_pfx",
+                           F.pmod(F.col("hash"), F.lit(hash_partitions))),
+        path, ["tree_id", "hash_pfx"],
+        {"hash_partitions": int(hash_partitions),
+         "model_fingerprint": model_fingerprint(model)})
 
 
 def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
@@ -673,44 +641,22 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
                       dist_impl: str = "sql",
                       max_candidates: int | None = None) -> DataFrame:
     """Search against a :func:`write_bucket_store` layout.  Identical results
-    to :func:`search`; the difference is physical — the partition-pruning
-    predicate derived from the driver-hashed probes means only the probed
-    (tree_id, hash_pfx) directories are listed and scanned.  The partition
-    modulus comes from the store's own ``_store_meta`` JSON sub-dataset;
-    when the store carries a model fingerprint, a probe ``model`` that is
-    not the store's build model is REFUSED (stores written before
-    fingerprinting are accepted as-is)."""
+    to :func:`search`, in as many Spark jobs; the difference is physical —
+    the partition-pruning predicate derived from the driver-hashed probes
+    means only the probed (tree_id, hash_pfx) directories are listed and
+    scanned.  The partition modulus comes from the store's meta, read on
+    the driver (``io.read_store_meta``), and the store is read with a
+    schema built from ``corpus``'s id field, so neither read starts a job.
+    A store whose meta is missing, has no model fingerprint, or names
+    another forest than ``model`` raises ``ValueError``."""
+    from lsh_search_go_spark.sources import io
+
     check_dist_impl(dist_impl)
     check_metric(metric)
     spark = queries.sparkSession
-    hash_partitions, store_fp = _store_meta(spark, store_path)
-    if store_fp is None:
-        # r4 ADVICE (medium): a pre-fingerprint store is accepted as-is, but
-        # hash_batch's traversal precision changed at MODEL_VERSION 2 (f64 →
-        # f32 dots), so a store built by an older engine probed by this one
-        # can silently lose eps-borderline vectors — exactly the drift the
-        # fingerprint guard exists to catch.  Make the blind spot loud.
-        import warnings
-
-        warnings.warn(
-            f"bucket store at {store_path!r} carries no model fingerprint "
-            "(written before fingerprinting, MODEL_VERSION < 2): the probe "
-            "model cannot be checked against the forest that built the "
-            "store, and traversal-precision changes since then mean hashes "
-            "may have drifted for eps-borderline vectors — a silent, "
-            "undetectable recall loss. Rebuild the store with "
-            "write_bucket_store(..., model=...) to restore the guard.",
-            stacklevel=2)
-    else:
-        caller_fp = model_fingerprint(model)
-        if caller_fp != store_fp:
-            raise ValueError(
-                f"model mismatch: store at {store_path!r} was built with "
-                f"forest {store_fp} but the probe model is {caller_fp} — "
-                "probing with a different forest silently misses every "
-                "bucket (a same-config refit does NOT reproduce the forest "
-                "across MODEL_VERSIONs); rebuild the store or load the "
-                "original model (save_model/load_model)")
+    meta = io.read_store_meta(spark, store_path, "model", "model_fingerprint",
+                              model_fingerprint(model))
+    hash_partitions = int(meta["hash_partitions"])
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
     collected = _collect_queries(q, model.cfg.dims)
@@ -719,7 +665,11 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     _, trees, flat = probe_arrays
     probed = sorted({(int(t), int(h) % hash_partitions)
                      for t, h in zip(trees, flat)})
-    store = spark.read.parquet(store_path)
+    # the schema Spark infers: data columns, then partition columns
+    store = spark.read.schema(T.StructType([
+        corpus.schema[id_col], T.StructField("hash", T.LongType()),
+        T.StructField("tree_id", T.IntegerType()),
+        T.StructField("hash_pfx", T.IntegerType())])).parquet(store_path)
     if probed:
         # EXACT pruning at any probe count: one isin over the combined key
         # tree_id * P + hash_pfx — an expression of partition columns only,

@@ -175,63 +175,20 @@ def centroid_fingerprint(centroids: np.ndarray) -> str:
 
 
 def write_list_store(inverted: DataFrame, path: str,
-                     centroids: np.ndarray | None = None) -> None:
+                     centroids: np.ndarray) -> None:
     """Materialize the inverted lists partitioned by ``centroid_id`` — the
-    IVF serving layout (mirrors ``ann.write_bucket_store``).  Because
-    centroid ranking is driver-side, a query batch's probed list ids are
-    known BEFORE the scan, so :func:`search_from_store` pushes
+    IVF serving layout (``io.write_store``, like ``ann.write_bucket_store``).
+    Because centroid ranking is driver-side, a query batch's probed list ids
+    are known BEFORE the scan, so :func:`search_from_store` pushes
     ``centroid_id IN (...)`` into the file listing and reads only
-    ``≈ n_probed_lists / n_centroids`` of the store.
-
-    ``partitionOverwriteMode`` is pinned ``static`` per-write (a session
-    ``dynamic`` default would leave stale ``centroid_id`` dirs behind on a
-    re-assignment with fewer centroids).  Pass the ``centroids`` that
-    produced ``inverted`` and their fingerprint rides in ``_store_meta``,
-    letting the read path refuse a mismatched quantizer."""
-    spark = inverted.sparkSession
-    (inverted
-     .repartition("centroid_id")               # one file per list dir
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("centroid_id")
-     .parquet(path))
-    if centroids is not None:
-        (spark.createDataFrame(
-            pa.table({"centroid_fingerprint": [centroid_fingerprint(centroids)]}),
-            "centroid_fingerprint string")
-         .coalesce(1).write.mode("overwrite")
-         .json(path.rstrip("/") + "/_store_meta"))
-
-
-def _list_store_meta(spark, store_path: str) -> str | None:
-    """Centroid fingerprint from a list store's ``_store_meta``, or None for
-    a genuinely pre-fingerprint store.  Only a MISSING meta path downgrades
-    to legacy handling (r4 ADVICE: a bare ``except Exception`` here made a
-    transient S3/JSON read failure indistinguishable from a legacy store and
-    silently disabled the quantizer-mismatch guard) — real read errors
-    propagate.  Accepting a legacy store is announced with a warning, since
-    the guard it lacks is the only protection against probing with the wrong
+    ``≈ n_probed_lists / n_centroids`` of the store.  ``centroids`` are the
+    ones that produced ``inverted``; their :func:`centroid_fingerprint`
+    rides in the store's meta, so the read path refuses another
     quantizer."""
-    import warnings
+    from lsh_search_go_spark.sources import io
 
-    from pyspark.errors import AnalysisException
-
-    meta_path = store_path.rstrip("/") + "/_store_meta"
-    try:
-        row = spark.read.json(meta_path).head()
-    except AnalysisException:                 # path absent → legacy store
-        warnings.warn(
-            f"IVF list store at {store_path!r} has no _store_meta "
-            "(written before quantizer fingerprinting): the probe centroids "
-            "cannot be checked against the ones that assigned the lists — "
-            "a mismatch silently routes queries to the wrong lists. "
-            "Rebuild the store with write_list_store(..., centroids=...).",
-            stacklevel=3)
-        return None
-    try:
-        return row["centroid_fingerprint"]
-    except Exception:                         # meta present, field absent
-        return None
+    io.write_store(inverted, path, ["centroid_id"],
+                   {"centroid_fingerprint": centroid_fingerprint(centroids)})
 
 
 def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
@@ -240,44 +197,53 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
                       id_col: str = "id", vec_col: str = "vec",
                       query_id_col: str = "query_id", query_vec_col: str = "vec",
                       dist_impl: str = "sql") -> DataFrame:
-    """Identical results to :func:`search`; physically, only the probed
-    ``centroid_id`` directories of a :func:`write_list_store` layout are
-    listed and scanned (PartitionFilters).  A store written with its
-    ``centroids`` recorded refuses a probe quantizer whose fingerprint
-    differs (stores without meta are accepted as-is)."""
+    """Identical results to :func:`search`, in as many Spark jobs;
+    physically, only the probed ``centroid_id`` directories of a
+    :func:`write_list_store` layout are listed and scanned
+    (PartitionFilters).  The store's meta is read on the driver
+    (``io.read_store_meta``) and the store with a schema built from
+    ``corpus``'s id field, so neither read starts a job.  A store whose
+    meta is missing, has no centroid fingerprint, or names other centroids
+    than ``centroids`` raises ``ValueError``."""
+    from lsh_search_go_spark.sources import io
+
+    spark = queries.sparkSession
+    io.read_store_meta(spark, store_path, "quantizer", "centroid_fingerprint",
+                       centroid_fingerprint(centroids))
+    q, collected, probes_np = _probe(queries, centroids, nprobe, metric,
+                                     query_id_col, query_vec_col, dist_impl)
+    # the schema Spark infers: data columns, then partition columns
+    inverted = spark.read.schema(T.StructType([
+        corpus.schema[id_col],
+        T.StructField("centroid_id", T.IntegerType())])).parquet(store_path)
+    probed = np.unique(probes_np).tolist()
+    if probed:
+        inverted = inverted.filter(F.col("centroid_id").isin(probed))
+    return _search_probed(q, collected, probes_np, inverted, corpus, k,
+                          max_dist, metric, id_col, vec_col, dist_impl)
+
+
+def _probe(queries: DataFrame, centroids: np.ndarray, nprobe: int,
+           metric: str, query_id_col: str, query_vec_col: str,
+           dist_impl: str) -> tuple[DataFrame, tuple[list, np.ndarray],
+                                    np.ndarray]:
+    """Check the arguments, collect the query batch once and rank the
+    centroids for it: ``(q, (ids, matrix), (nq, nprobe) probed ids)``."""
     from lsh_search_go_spark.operators.ann import (_collect_queries,
                                                    check_dist_impl, check_metric)
 
     check_dist_impl(dist_impl)
     check_metric(metric)
-    spark = queries.sparkSession
-    store_fp = _list_store_meta(spark, store_path)
-    if store_fp is not None:
-        caller_fp = centroid_fingerprint(centroids)
-        if caller_fp != store_fp:
-            raise ValueError(
-                f"quantizer mismatch: list store at {store_path!r} was "
-                f"assigned by centroids {store_fp} but the probe quantizer "
-                f"is {caller_fp} — probing would route queries to the wrong "
-                "lists; rebuild the store or load the original centroids")
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
     collected = _collect_queries(q, np.shape(centroids)[1])
     q_ids, Q = collected
     if q_ids:
-        probes_np = probe_centroids_np(np.asarray(Q, np.float64),
-                                       np.asarray(centroids, np.float64),
+        probes_np = probe_centroids_np(Q, np.asarray(centroids, np.float64),
                                        nprobe, metric)
-        probed = sorted({int(c) for row in probes_np for c in row})
-    else:
-        probed = []
-    inverted = spark.read.parquet(store_path)
-    if probed:
-        inverted = inverted.filter(F.col("centroid_id").isin(probed))
-    return search(queries, inverted.select(id_col, "centroid_id"), corpus,
-                  centroids, k, max_dist, metric, nprobe,
-                  id_col, vec_col, query_id_col, query_vec_col, dist_impl,
-                  _collected=collected)
+    else:   # empty query batch → empty result, like ann.search
+        probes_np = np.zeros((0, nprobe), np.int32)
+    return q, collected, probes_np
 
 
 def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
@@ -285,8 +251,7 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
            metric: str = "cosine", nprobe: int = 4,
            id_col: str = "id", vec_col: str = "vec",
            query_id_col: str = "query_id", query_vec_col: str = "vec",
-           dist_impl: str = "sql",
-           _collected: tuple[list, np.ndarray] | None = None) -> DataFrame:
+           dist_impl: str = "sql") -> DataFrame:
     """Batch IVF search: rank centroids driver-side → broadcast the
     (query_id, centroid_id) probe relation into the inverted-list join →
     shared exact verify + inclusive threshold + top-k.
@@ -298,28 +263,24 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
     width is not the centroids' or that holds a NaN raises ``ValueError``
     naming the first offending ``query_id``.
 
-    Returns (query_id, rank, neighbor_id, dist).  ``_collected``:
-    pre-collected (ids, matrix) so ``search_from_store`` pays one driver
-    round-trip, not two."""
-    from lsh_search_go_spark.operators.ann import (_collect_queries,
-                                                   check_dist_impl, check_metric,
-                                                   driver_candidates, on_driver,
-                                                   verify_topk)
+    Returns (query_id, rank, neighbor_id, dist)."""
+    q, collected, probes_np = _probe(queries, centroids, nprobe, metric,
+                                     query_id_col, query_vec_col, dist_impl)
+    return _search_probed(q, collected, probes_np, inverted, corpus, k,
+                          max_dist, metric, id_col, vec_col, dist_impl)
 
-    check_dist_impl(dist_impl)
-    check_metric(metric)
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(query_vec_col).alias("__qvec"))
-    collected = (_collected if _collected is not None
-                 else _collect_queries(q, np.shape(centroids)[1]))
-    q_ids, Q = collected
-    spark = queries.sparkSession
+
+def _search_probed(q: DataFrame, collected: tuple[list, np.ndarray],
+                   probes_np: np.ndarray, inverted: DataFrame,
+                   corpus: DataFrame, k: int, max_dist: float, metric: str,
+                   id_col: str, vec_col: str, dist_impl: str) -> DataFrame:
+    """:func:`search` after :func:`_probe`."""
+    from lsh_search_go_spark.operators.ann import (driver_candidates,
+                                                   on_driver, verify_topk)
+
+    q_ids, _ = collected
+    spark = q.sparkSession
     qtype = dict(q.dtypes)["query_id"]
-    if q_ids:
-        probes_np = probe_centroids_np(Q, np.asarray(centroids, np.float64),
-                                       nprobe, metric)
-    else:   # empty query batch → empty result, like ann.search
-        probes_np = np.zeros((0, nprobe), np.int32)
     qrow = np.repeat(np.arange(len(q_ids)), probes_np.shape[1])
     centroid_id = probes_np.reshape(-1).astype(np.int32)
     lists = inverted.withColumnRenamed(id_col, "neighbor_id")

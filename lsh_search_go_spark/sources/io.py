@@ -12,6 +12,11 @@ from the footers of the files it committed, :func:`committed_schema` reads
 the schema Spark wrote there, and :func:`write_lineage` writes the
 per-partition counts with pyarrow.
 
+The ANN serving stores (the forest's bucket store and IVF's list store) are
+written by :func:`write_store`, and their meta is read and checked by
+:func:`read_store_meta` on the driver, so a store read starts no Spark job
+of its own.
+
 Reference analog of the model/stage persistence: gob ``dump``/``load`` of the
 hasher (/root/reference/lsh/hasher.go:221-251) — generalized to every pipeline
 stage, keyed by the config hash so a config change never resumes stale data.
@@ -127,6 +132,74 @@ def write_lineage(path: str, stage: str, parts: list[tuple[int, int]]) -> None:
     os.makedirs(path)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
     open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def write_meta(spark: SparkSession, path: str, meta: dict) -> None:
+    """Replace the one-row JSON dataset at ``path`` with ``meta``, written
+    through Spark so that it works on any Hadoop filesystem."""
+    (spark.createDataFrame(pa.table({k: [v] for k, v in meta.items()}))
+     .coalesce(1).write.mode("overwrite").json(path))
+
+
+def read_meta(spark: SparkSession, path: str) -> dict:
+    """The row :func:`write_meta` wrote at ``path``, read through the Hadoop
+    ``FileSystem`` API on the driver: no Spark job, any Hadoop filesystem.
+    Raises ``ValueError`` naming ``path`` unless it holds exactly one
+    ``part-*`` file; I/O errors propagate."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        raise ValueError(f"no meta at {path!r}")
+    parts = [st.getPath() for st in fs.listStatus(jpath)
+             if st.getPath().getName().startswith("part-")]
+    if len(parts) != 1:
+        raise ValueError(f"meta at {path!r} has {len(parts)} part-* files")
+    stream = fs.open(parts[0])
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+    finally:
+        stream.close()
+
+
+def _store_meta_path(path: str) -> str:
+    return path.rstrip("/") + "/_store_meta"
+
+
+def write_store(df: DataFrame, path: str, partition_cols: list[str],
+                meta: dict) -> None:
+    """Replace the serving store at ``path``: ``df`` partitioned by
+    ``partition_cols``, one file per partition directory, and ``meta`` in
+    ``<path>/_store_meta`` (hidden from the Parquet scan by its leading
+    underscore).  ``partitionOverwriteMode`` is pinned to ``static``: under
+    a session-level ``dynamic`` default, a re-layout to fewer partitions
+    would leave stale directories that a pruned read still selects."""
+    (df.repartition(*partition_cols)
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "static")
+     .partitionBy(*partition_cols)
+     .parquet(path))
+    write_meta(df.sparkSession, _store_meta_path(path), meta)
+
+
+def read_store_meta(spark: SparkSession, path: str, what: str, key: str,
+                    fingerprint: str) -> dict:
+    """The meta of the :func:`write_store` store at ``path``.  A store only
+    answers correctly for the ``what`` (model, quantizer) that built it, so
+    unless its meta's ``key`` equals ``fingerprint``, the fingerprint of the
+    caller's ``what``, this raises ``ValueError``: also for a store with no
+    meta or no ``key``, which cannot be checked."""
+    meta = read_meta(spark, _store_meta_path(path))
+    stored = meta.get(key)
+    if stored is None:
+        raise ValueError(f"store at {path!r} has no {key} in its meta, so "
+                         f"the probe {what} cannot be checked; rebuild it")
+    if stored != fingerprint:
+        raise ValueError(
+            f"{what} mismatch: store at {path!r} was built with {what} "
+            f"{stored} but the probe {what} is {fingerprint}, which would "
+            f"silently miss rows; rebuild the store or load the original "
+            f"{what}")
+    return meta
 
 
 def stage_complete(path: str) -> bool:

@@ -14,7 +14,6 @@ same logical plan, differing only in source and output mode.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -76,17 +75,20 @@ def _guard_window_config(spark, checkpoint_dir: str, window: str,
     restart with different values.  Spark CANNOT detect a changed window
     duration across a restart — the window-struct state schema is identical,
     so stale state from the old window size would silently mix with new
-    windows in the same sink.  Config rides as a one-row JSON dataset
-    (works on HDFS/S3, same pattern as the bucket store's meta)."""
+    windows in the same sink.  The config is a one-row JSON dataset in
+    ``<checkpoint_dir>/_window_config`` (``io.write_meta``/``read_meta``):
+    it works on HDFS/S3, and a restart's check starts no Spark job."""
+    from lsh_search_go_spark.sources import io
+
     cfg_path = checkpoint_dir.rstrip("/") + "/_window_config"
     jpath = spark._jvm.org.apache.hadoop.fs.Path(cfg_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath):
-        row = spark.read.json(cfg_path).head()
-        if (row["window"], row["watermark"]) != (window, watermark):
+        cfg = io.read_meta(spark, cfg_path)
+        if (cfg["window"], cfg["watermark"]) != (window, watermark):
             raise ValueError(
                 f"checkpoint at {checkpoint_dir!r} was written with "
-                f"window={row['window']!r} watermark={row['watermark']!r}; "
+                f"window={cfg['window']!r} watermark={cfg['watermark']!r}; "
                 f"restarting with window={window!r} watermark={watermark!r} "
                 "would silently mix window state — use a fresh checkpoint "
                 "dir (and sink) to change the window config")
@@ -106,10 +108,8 @@ def _guard_window_config(spark, checkpoint_dir: str, window: str,
                 "sized window state; use a fresh checkpoint dir, or write "
                 "the _window_config dataset manually if the old config is "
                 "known to match")
-        (spark.createDataFrame(pa.table({"window": [window],
-                                         "watermark": [watermark]}),
-                               "window string, watermark string")
-         .coalesce(1).write.mode("overwrite").json(cfg_path))
+        io.write_meta(spark, cfg_path,
+                      {"window": window, "watermark": watermark})
 
 
 def start_windowed_stats_stream(spark, source_dir: str, checkpoint_dir: str,

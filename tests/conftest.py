@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -37,3 +38,21 @@ def executed_plans(spark):
     from tools.plan_audit import executed_plans as plans
 
     return lambda action: plans(spark, action)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(action)``: the number of Spark jobs ``action`` started."""
+    sc = spark.sparkContext
+
+    def count(action):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -1,6 +1,8 @@
 """Parity of the numpy/Arrow ANN paths vs the JVM-fold definitions."""
 
+import os
 import re
+import shutil
 
 import numpy as np
 import pytest
@@ -10,6 +12,7 @@ from lsh_search_go_spark.config import AnnConfig
 from lsh_search_go_spark.operators import ann
 from lsh_search_go_spark.operators.bruteforce import (brute_force_topk,
                                                       brute_force_topk_np)
+from lsh_search_go_spark.sources import io
 
 
 @pytest.fixture(scope="module")
@@ -200,8 +203,6 @@ def test_bucket_store_relayout_under_dynamic_overwrite(spark, vecs, tmp_path):
     touched directories; pfx dirs that only existed under the old modulus
     would survive and feed stale rows whose combined key still satisfies the
     new pruning isin).  write_bucket_store pins static overwrite per-write."""
-    import os
-
     corpus, queries = vecs
     cfg = AnnConfig(n_trees=6, k_min_vecs=30, dims=12, seed=42, sample_size=1000)
     model = ann.fit(np.array([r.vec for r in corpus.collect()]), cfg)
@@ -224,7 +225,7 @@ def test_bucket_store_relayout_under_dynamic_overwrite(spark, vecs, tmp_path):
                 if p.startswith("hash_pfx="):
                     pfx.add(int(p.split("=", 1)[1]))
     assert pfx and pfx <= {0, 1, 2, 3}, f"stale hash_pfx dirs: {sorted(pfx)}"
-    assert ann._store_meta(spark, store)[0] == 4
+    assert io.read_meta(spark, store + "/_store_meta")["hash_partitions"] == 4
 
     base = {(r.query_id, r.rank, r.neighbor_id)
             for r in ann.search(queries, buckets, corpus, model, 5, 1e9,
@@ -262,16 +263,16 @@ def test_bucket_store_refuses_mismatched_model(spark, vecs, tmp_path):
     with pytest.raises(ValueError, match="model mismatch"):
         ann.search_from_store(queries, store, corpus, other, 5, 1e9, "l2")
 
-    # a pre-fingerprint store (no model= at write time) stays accepted, but
-    # LOUDLY: without the fingerprint the guard is blind, and traversal
-    # precision changed at MODEL_VERSION 2, so legacy hashes may have
-    # drifted (r4 ADVICE)
-    legacy = str(tmp_path / "legacy_store")
-    ann.write_bucket_store(ann.build_buckets(corpus, model), legacy,
-                           hash_partitions=8)
-    with pytest.warns(UserWarning, match="no model fingerprint"):
-        assert ann.search_from_store(queries, legacy, corpus, model, 5, 1e9,
-                                     "l2").count() > 0
+    # a store the guard cannot check is refused: one with no meta, and one
+    # whose meta has no fingerprint (traversal precision changed at
+    # MODEL_VERSION 2, so its hashes may have drifted)
+    shutil.rmtree(os.path.join(store, "_store_meta"))
+    with pytest.raises(ValueError, match="no meta at"):
+        ann.search_from_store(queries, store, corpus, model, 5, 1e9, "l2")
+    io.write_meta(spark, os.path.join(store, "_store_meta"),
+                  {"hash_partitions": 8})
+    with pytest.raises(ValueError, match="no model_fingerprint"):
+        ann.search_from_store(queries, store, corpus, model, 5, 1e9, "l2")
 
 
 def test_build_buckets_driver_matches_distributed(spark, vecs):

@@ -158,7 +158,8 @@ def test_ivf_small_and_large_batch_paths_agree(spark, mixture):
         assert _rows(large) == sorted(_rows(small[0]) + _rows(small[1])), impl
 
 
-def test_small_batch_search_jobs(spark, mixture, frames, executed_plans):
+def test_small_batch_search_jobs(spark, mixture, frames, executed_plans,
+                                 count_jobs):
     """A warm 10-query ``ann.search`` (grouped verify, capped) runs 6 Spark
     jobs: the query collect, the probe broadcast and the matched-row collect,
     the candidate broadcast, the verify and the top-k.  The distributed
@@ -178,16 +179,47 @@ def test_small_batch_search_jobs(spark, mixture, frames, executed_plans):
                           max_candidates=20).collect()
 
     call()
-    sc = spark.sparkContext
-    sc.setJobGroup("small-batch-search", "one warm 10-query search")
-    try:
-        plans = executed_plans(call)
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup("small-batch-search")) == 6
+    plans = []
+    assert count_jobs(lambda: plans.extend(executed_plans(call))) == 6
     matched = [p for p in plans if "__qrow" in p]
     assert len(matched) == 1 and "BroadcastHashJoin" in matched[0]
     assert "Exchange hashpartitioning" not in matched[0]
+
+
+@pytest.mark.parametrize("index", ["ann", "ivf"])
+@pytest.mark.parametrize("impl", ["matmul_grouped", "sql"])
+def test_store_search_jobs(spark, mixture, frames, tmp_path, count_jobs,
+                           index, impl):
+    """A warm 10-query ``search_from_store`` starts as many Spark jobs as
+    ``search`` over the relation the store holds — 6, and 7 with the
+    ``sql`` verify: the store's meta is read on the driver and the store
+    with a known schema, so neither read starts a job."""
+    train, _ = mixture
+    corpus, queries = frames["long"]
+    batch = queries.filter(F.col("query_id") < 1010)
+    store = str(tmp_path / "store")
+    kw = dict(k=5, max_dist=1e9, metric="l2", dist_impl=impl)
+    if index == "ann":
+        model = ann.fit(train, AnnConfig(n_trees=6, k_min_vecs=40, dims=8,
+                                         seed=3))
+        buckets = ann.build_buckets(corpus, model).cache()
+        ann.write_bucket_store(buckets, store, hash_partitions=8, model=model)
+        calls = (lambda: ann.search(batch, buckets, corpus, model, **kw),
+                 lambda: ann.search_from_store(batch, store, corpus, model,
+                                               **kw))
+    else:
+        C = ivf.fit_centroids(train, 12, "l2", seed=3)
+        inv = ivf.assign(corpus, C, "l2").cache()
+        ivf.write_list_store(inv, store, C)
+        calls = (lambda: ivf.search(batch, inv, corpus, C, nprobe=3, **kw),
+                 lambda: ivf.search_from_store(batch, store, corpus, C,
+                                               nprobe=3, **kw))
+    rows, counts = [], []
+    for call in calls:
+        rows.append(_rows(call()))        # warms the call up
+        counts.append(count_jobs(lambda: call().collect()))
+    assert rows[0] == rows[1]
+    assert counts == [7 if impl == "sql" else 6] * 2
 
 
 # --- the query-batch contract ---------------------------------------------

@@ -427,7 +427,8 @@ def test_windowed_stats_value_col_optional(spark, sf_dir):
     assert "total_value" in got2.columns
 
 
-def test_windowed_stream_refuses_changed_window_config(spark, tmp_path):
+def test_windowed_stream_refuses_changed_window_config(spark, tmp_path,
+                                                       count_jobs):
     """A stale checkpoint + a different window size must fail loudly —
     Spark itself cannot detect the change (identical state schema) and
     would silently mix old- and new-width windows (r2 VERDICT task 8)."""
@@ -435,7 +436,8 @@ def test_windowed_stream_refuses_changed_window_config(spark, tmp_path):
 
     import pytest as _pytest
 
-    from lsh_search_go_spark.streaming.windows import start_windowed_stats_stream
+    from lsh_search_go_spark.streaming.windows import (
+        _guard_window_config, start_windowed_stats_stream)
 
     src = tmp_path / "events_src"
     ckpt = str(tmp_path / "ckpt")
@@ -460,3 +462,6 @@ def test_windowed_stream_refuses_changed_window_config(spark, tmp_path):
     q2 = start_windowed_stats_stream(spark, str(src / "*"), ckpt, schema, sink,
                                      "10 minutes", "5 minutes")
     q2.awaitTermination(120)
+    # and the check of an existing checkpoint's config starts no Spark job
+    assert count_jobs(lambda: _guard_window_config(
+        spark, ckpt, "10 minutes", "5 minutes")) == 0

@@ -1,12 +1,16 @@
 """IVF coarse-quantizer ANN: recall vs brute force, determinism, and
 agreement of the verify backends (shared ann.verify_topk)."""
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from lsh_search_go_spark.operators import ivf
 from lsh_search_go_spark.operators.bruteforce import brute_force_topk
+from lsh_search_go_spark.sources import io
 
 
 @pytest.fixture(scope="module")
@@ -140,17 +144,16 @@ def test_ivf_list_store_pruned_search_matches(mixture, spark, tmp_path,
         ivf.search_from_store(queries, store, corpus, C2, 10, 0.05,
                               "cosine", nprobe=3)
 
-    # a store written without centroids (pre-fingerprint) is accepted, but
-    # LOUDLY — the quantizer guard is blind there (r4 ADVICE: only a
-    # genuinely missing meta may downgrade; real read errors propagate)
-    legacy = str(tmp_path / "legacy_list_store")
-    ivf.write_list_store(inv, legacy)
-    with _pytest.warns(UserWarning, match="no _store_meta"):
-        got_legacy = {(r.query_id, r.rank, r.neighbor_id)
-                      for r in ivf.search_from_store(
-                          queries, legacy, corpus, C, 10, 0.05,
-                          "cosine", nprobe=3).collect()}
-    assert got_legacy == base
+    # a store the quantizer guard cannot check is refused: one with no
+    # meta, and one whose meta has no fingerprint
+    shutil.rmtree(os.path.join(store, "_store_meta"))
+    with _pytest.raises(ValueError, match="no meta at"):
+        ivf.search_from_store(queries, store, corpus, C, 10, 0.05,
+                              "cosine", nprobe=3)
+    io.write_meta(spark, os.path.join(store, "_store_meta"), {"other": 1})
+    with _pytest.raises(ValueError, match="no centroid_fingerprint"):
+        ivf.search_from_store(queries, store, corpus, C, 10, 0.05,
+                              "cosine", nprobe=3)
 
 
 def test_ivf_dist_impls_agree(mixture, spark):

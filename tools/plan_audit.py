@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import time
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -43,10 +44,17 @@ def condensed(df, max_lines: int = 40) -> str:
 
 
 def executed_plans(spark, action) -> list[str]:
-    """Run ``action`` and return the physical plans of the SQL executions it
-    started, read from the session's SQL status store — so the plans of
-    queries a call runs internally (a small batch's candidate collect) show
-    too."""
+    """Run ``action`` and return the final physical plans of the SQL
+    executions it started, read from the session's SQL status store — so the
+    plans of queries a call runs internally (a small batch's candidate
+    collect) show too.
+
+    The status store can still hold an adaptive plan's non-final version
+    after the listener bus is drained: it writes a plan update at most once
+    per ``spark.ui.liveUpdate.period`` and the last, forced write of an
+    ended execution runs asynchronously.  So this polls until no root plan
+    is non-final (nested adaptive plans are indented), and raises
+    ``TimeoutError`` after 60 s."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -59,8 +67,18 @@ def executed_plans(spark, action) -> list[str]:
     seen = max((e.executionId() for e in recent()), default=-1)
     action()
     bus.waitUntilEmpty()
-    return [e.physicalPlanDescription() for e in recent()
-            if e.executionId() > seen]
+    deadline = time.monotonic() + 60
+    while True:
+        plans = {e.executionId(): e.physicalPlanDescription()
+                 for e in recent() if e.executionId() > seen}
+        pending = [i for i, p in plans.items()
+                   if re.search(r"^\+- == Current Plan ==", p, re.M)]
+        if not pending:
+            return list(plans.values())
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"SQL executions {pending} still hold a "
+                               "non-final adaptive plan after 60 s")
+        time.sleep(0.05)
 
 
 def main() -> None:

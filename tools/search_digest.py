@@ -9,15 +9,15 @@ file per case, so a differing plan digest can be read.
 
 The checkout goes first on ``sys.path`` and on ``PYTHONPATH`` before the
 Spark session starts, so the Python workers import the same code as the
-driver.  On a seeded 1200×16 Gaussian mixture the script runs 30 cases:
-``ann.search``, ``ann.search_from_store`` (with the cap on and off) and
-``ivf.search``, each at 10 and 300 queries (both sides of
-``layout.QUERY_CROSSOVER``) and with each of the three verify backends.  It
-prints one line per case: the row count, a sha256 prefix of the sorted
-output rows (distances included, by ``repr``), and one of the physical
-plans of every SQL execution the case ran (``plan_audit.executed_plans``),
-normalized by :func:`normalize`.  A last line gives the forest's
-``model_fingerprint``.
+driver.  On a seeded 1200×16 Gaussian mixture the script runs 36 cases:
+``ann.search`` and ``ann.search_from_store`` (with the cap on and off),
+``ivf.search`` and ``ivf.search_from_store``, each at 10 and 300 queries
+(both sides of ``layout.QUERY_CROSSOVER``) and with each of the three
+verify backends.  It prints one line per case: the row count, a sha256
+prefix of the sorted output rows (distances included, by ``repr``), and one
+of the physical plans of every SQL execution the case ran
+(``plan_audit.executed_plans``), normalized by :func:`normalize`.  A last
+line gives the forest's ``model_fingerprint``.
 """
 
 from __future__ import annotations
@@ -39,15 +39,11 @@ def sha(text: str) -> str:
 
 
 def normalize(plan: str, tmp: str) -> str:
-    """Drop what differs between runs of one checkout: ids, the temp
-    directory, and whether the status store already holds the adaptive
-    plan's final version (its header, flag and size statistics)."""
+    """Drop what differs between runs of one checkout: ids and the temp
+    directory."""
     plan = plan.replace(tmp, "<tmp>")
     plan = re.sub(r"#\d+L?", "#N", plan)
-    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
-    plan = re.sub(r"== (Current|Final) Plan ==", "== Plan ==", plan)
-    plan = re.sub(r"isFinalPlan=(true|false)", "isFinalPlan=?", plan)
-    return re.sub(r", Statistics\([^)]*\)", "", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
 
 
 def main(argv: list[str]) -> None:
@@ -102,6 +98,8 @@ def main(argv: list[str]) -> None:
     store_path = os.path.join(tmp, "store")
     ann.write_bucket_store(buckets, store_path, hash_partitions=8,
                            model=model)
+    list_path = os.path.join(tmp, "list_store")
+    ivf.write_list_store(inv, list_path, centroids=C)
     # materialize every cache first: a cache that fills during a case
     # changes the size estimates, and so the plan, of that case
     for df in (corpus, queries, buckets, inv):
@@ -125,6 +123,9 @@ def main(argv: list[str]) -> None:
             cases.append((f"ivf.search n={n} {impl}",
                           lambda qs=qs, kw=kw: ivf.search(
                               qs, inv, corpus, C, nprobe=3, **kw)))
+            cases.append((f"ivf.search_from_store n={n} {impl}",
+                          lambda qs=qs, kw=kw: ivf.search_from_store(
+                              qs, list_path, corpus, C, nprobe=3, **kw)))
 
     try:
         for name, make in cases:
