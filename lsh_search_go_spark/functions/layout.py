@@ -59,6 +59,9 @@ from pyspark.sql import functions as F
 MAX_SHARE = 0.5          # largest partition's row share above which ...
 MIN_ROWS = 50_000        # ... a relation at least this big is degenerate
 QUERY_CROSSOVER = 256    # query-batch size where a shuffle starts to pay
+# float64 cells (64 MB) a verify may hold at once: the grouped kernel's gram
+# block, and the candidate matrix a small batch verifies on the driver
+VERIFY_CELLS = 1 << 23
 
 # kernel kind → (decision below QUERY_CROSSOVER queries, decision at or
 # above it), for a degenerate input.  The shuffle moves the full payload

@@ -28,19 +28,24 @@ Spark shape: the model is fit driver-side on a corpus *sample* (tiny —
 numpy), broadcast once; corpus hashing runs as one ``mapInArrow`` pass doing
 one matmul-style traversal step per depth level across the whole batch, and
 a query batch is collected and hashed on the driver; buckets and candidate
-verification are DataFrame joins.  A small query batch
-collects its matched bucket rows once and dedups and caps its candidates on
-the driver (:func:`driver_candidates`).
+verification are DataFrame joins.  A small query batch runs in three Spark
+jobs: the query collect, a filtered collect of its probed bucket rows
+(matched, deduped and capped on the driver, :func:`driver_candidates`) and
+a filtered collect of its candidate corpus rows, verified and ranked on
+the driver (:func:`_driver_search`).
 """
 
 from __future__ import annotations
 
 import math
+import operator
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyarrow import compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -671,23 +676,18 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
         T.StructField("tree_id", T.IntegerType()),
         T.StructField("hash_pfx", T.IntegerType())])).parquet(store_path)
     if probed:
-        # EXACT pruning at any probe count: one isin over the combined key
+        # EXACT pruning at any probe count: one IN over the combined key
         # tree_id * P + hash_pfx — an expression of partition columns only,
         # so it is evaluated against the directory values during file
         # listing (PartitionFilters) and selects exactly the probed
         # directories, never a cartesian superset (r2 VERDICT task 6).
-        combined = F.col("tree_id") * F.lit(hash_partitions) + F.col("hash_pfx")
-        pred = combined.isin([t * hash_partitions + p for t, p in probed])
-        store = store.filter(pred)            # reaches the partition listing
-    buckets = store.select(id_col, "tree_id", "hash")
-    cands = candidate_pairs(q, buckets, model, id_col=id_col,
-                            max_candidates=max_candidates,
-                            _collected=collected,
-                            _probe_arrays=probe_arrays,
-                            _grouped=dist_impl == "matmul_grouped")
-    return verify_topk(q, cands, corpus, k, max_dist, metric,
-                       id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
-                       collected=collected)
+        store = store.filter(sql_in(
+            f"`tree_id` * {hash_partitions} + `hash_pfx`",
+            [t * hash_partitions + p for t, p in probed]))
+    return _search_buckets(q, collected, probe_arrays,
+                           store.select(id_col, "tree_id", "hash"), corpus,
+                           model, k, max_dist, metric, id_col, vec_col,
+                           dist_impl, max_candidates)
 
 
 def msb_flip_np(h: np.ndarray) -> np.ndarray:
@@ -745,8 +745,8 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     top-k.
 
     ``dist_impl``: "sql" (JVM fold — bit-identical to the DuckDB oracle),
-    "matmul" (broadcast query matrix + vectorized gather per corpus batch —
-    the benchmark path; candidate rows ship only the corpus vector) or
+    "matmul" (query matrix + vectorized gather per corpus batch — the
+    benchmark path; candidate rows ship only the corpus vector) or
     "matmul_grouped" (candidates grouped per corpus row, one gram matrix per
     batch — for wide vectors and big query batches).  Any other value
     raises ``ValueError`` before a Spark job runs.
@@ -764,26 +764,34 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
       the only hash UDF of the read path is the corpus side's
       (:func:`build_buckets`), and the one collect also feeds the matmul
       verifies;
-    * the probe relation (n_queries × trees × probes rows of three scalars)
-      is **broadcast** into the bucket join — the big corpus bucket relation
-      is never shuffled for a query batch;
-    * the batch size alone picks the candidate plan: a batch of fewer than
-      :data:`layout.QUERY_CROSSOVER` queries collects the matched (query
-      row, neighbor_id, tree_id) rows in ONE Arrow transfer and dedups and
-      caps them in numpy (:func:`driver_candidates`); the candidates come
-      back as a local relation — grouped per neighbor for
-      ``matmul_grouped`` — so no Exchange runs before the verify and only
-      the top-k shuffles;
-    * a larger batch dedups and caps as Spark operators, moving bare
-      (query_id, neighbor_id) ids: query vectors do NOT ride the candidate
-      joins, the (small, broadcast) query relation is re-joined by query_id
-      — shuffles move 8-byte ids, not 512-byte vectors;
-    * the candidate set is broadcast into the corpus verify join, so the
-      corpus is probed hash-side rather than shuffled.
+    * the batch size alone picks the plan.  A batch of fewer than
+      :data:`layout.QUERY_CROSSOVER` queries runs in three Spark jobs (the
+      query collect, then two filtered collects, :func:`_driver_search`):
+      the bucket rows whose hash a probe names (``hash IN (...)``) are
+      matched, deduped and capped in numpy (:func:`driver_candidates`); the
+      candidate corpus rows are verified on the driver by the matmul
+      verify's own per-batch kernel, batch by batch as an executor would
+      see them; the top-k is taken on the driver and returned as a local
+      relation.  No relation is broadcast and nothing shuffles.  ``sql``
+      scores the candidates with its JVM fold (candidates and queries
+      broadcast into the corpus verify, 5 jobs) and takes the top-k on the
+      driver; so do the matmul verifies when the distinct candidates ×
+      dims pass :data:`layout.VERIFY_CELLS` (4 jobs);
+    * a larger batch broadcasts the probe relation (n_queries × trees ×
+      probes rows of three scalars) into the bucket join — the big corpus
+      bucket relation is never shuffled for a query batch — and dedups and
+      caps as Spark operators, moving bare (query_id, neighbor_id) ids:
+      query vectors do NOT ride the candidate joins, the (small, broadcast)
+      query relation is re-joined by query_id — shuffles move 8-byte ids,
+      not 512-byte vectors; the candidate set is broadcast into the corpus
+      verify join, so the corpus is probed hash-side rather than shuffled,
+      and only the top-k shuffles.
 
     The query batch must match the forest: a vector whose width is not
     ``model.cfg.dims`` or that holds a NaN raises ``ValueError`` naming the
-    first offending ``query_id``.
+    first offending ``query_id``.  A candidate corpus vector whose width is
+    not the query batch's or that holds a NaN raises ``ValueError`` naming
+    its corpus id (both matmul verifies).
 
     Returns (query_id, rank, neighbor_id, dist).
     """
@@ -791,12 +799,30 @@ def search(queries: DataFrame, buckets: DataFrame, corpus: DataFrame,
     check_metric(metric)
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("__qvec"))
-    # ONE driver round-trip, shared by probe hashing and the matmul verifies
+    # ONE driver round-trip, shared by probe hashing and the verify
     collected = _collect_queries(q, model.cfg.dims)
+    probe_arrays = driver_probe_arrays(collected[1], model, len(collected[0]))
+    return _search_buckets(q, collected, probe_arrays, buckets, corpus, model,
+                           k, max_dist, metric, id_col, vec_col, dist_impl,
+                           max_candidates)
+
+
+def _search_buckets(q: DataFrame, collected: tuple[list, np.ndarray],
+                    probe_arrays, buckets: DataFrame, corpus: DataFrame,
+                    model: HasherModel, k: int, max_dist: float, metric: str,
+                    id_col: str, vec_col: str, dist_impl: str,
+                    max_candidates: int | None) -> DataFrame:
+    """:func:`search` and :func:`search_from_store` once the batch is
+    collected and hashed."""
+    if on_driver(len(collected[0])):
+        qrow, trees, flat = probe_arrays
+        return _driver_search(
+            q, collected, buckets.withColumnRenamed(id_col, "neighbor_id"),
+            qrow, {"tree_id": trees, "hash": flat}, corpus, k, max_dist,
+            metric, id_col, vec_col, dist_impl, max_candidates)
     cands = candidate_pairs(q, buckets, model, id_col=id_col,
                             max_candidates=max_candidates,
-                            _collected=collected,
-                            _grouped=dist_impl == "matmul_grouped")
+                            _collected=collected, _probe_arrays=probe_arrays)
     return verify_topk(q, cands, corpus, k, max_dist, metric,
                        id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
                        collected=collected)
@@ -809,14 +835,28 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
                 collected: tuple[list, np.ndarray] | None = None) -> DataFrame:
     """Exact-verify + inclusive threshold + top-k over a candidate relation
     (Q5-Q6, /root/reference/lsh/lsh.go:174-198) — shared by the LSH-forest
-    and IVF read paths.  ``q`` is (query_id, __qvec); ``cands`` is
-    (query_id, neighbor_id), or for ``matmul_grouped`` already grouped as
-    (neighbor_id, __qids) by :func:`driver_candidates`."""
-    from lsh_search_go_spark.functions.vector import cosine_dist_expr, l2_dist_expr
+    and IVF read paths of a batch of :data:`layout.QUERY_CROSSOVER` or
+    more queries.  ``q`` is (query_id, __qvec); ``cands`` is (query_id,
+    neighbor_id)."""
     from lsh_search_go_spark.operators.topk import topk_per_query
 
     check_dist_impl(dist_impl)
     check_metric(metric)
+    scored = _score(q, cands, corpus, metric, id_col, vec_col, dist_impl,
+                    collected)
+    scored = scored.filter(F.col("dist") <= max_dist)    # inclusive (lsh/lsh.go:179)
+    return topk_per_query(scored, k).select("query_id", "rank", "neighbor_id", "dist")
+
+
+def _score(q: DataFrame, cands: DataFrame, corpus: DataFrame, metric: str,
+           id_col: str, vec_col: str, dist_impl: str,
+           collected: tuple[list, np.ndarray] | None) -> DataFrame:
+    """The exact distances of a candidate relation as Spark operators →
+    (query_id, neighbor_id, dist); the candidates — (query_id,
+    neighbor_id), or for ``matmul_grouped`` possibly already grouped as
+    (neighbor_id, __qids) — are broadcast into the corpus."""
+    from lsh_search_go_spark.functions.vector import cosine_dist_expr, l2_dist_expr
+
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
     if dist_impl == "matmul_grouped":
         c, _ = layout.plan(c, "gram_verify", key_col="neighbor_id",
@@ -831,10 +871,10 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
         grouped = cands if "__qids" in cands.columns else (
             cands.groupBy("neighbor_id").agg(
                 F.collect_list("query_id").alias("__qids")))
-        scored = _matmul_verify_grouped(
+        return _matmul_verify_grouped(
             q, c.join(F.broadcast(grouped), "neighbor_id"), metric,
             collected=collected)
-    elif dist_impl == "matmul":
+    if dist_impl == "matmul":
         # Benchmark-scale verify: the query MATRIX is broadcast once; each
         # candidate row ships only its corpus vector and the distances come
         # from one vectorized gather per Arrow batch — halves the Arrow
@@ -844,18 +884,15 @@ def verify_topk(q: DataFrame, cands: DataFrame, corpus: DataFrame,
         # kernel is ~0.2 s serial at 400k candidate pairs — an interleaved
         # A/B showed no measurable win from batch-threading it, so the
         # search path stays probe-free.)
-        scored = _matmul_verify(q, c.join(F.broadcast(cands), "neighbor_id"), metric,
-                                collected=collected)
-    else:
-        dist_expr = cosine_dist_expr if metric == "cosine" else l2_dist_expr
-        scored = (
-            c.join(F.broadcast(cands), "neighbor_id")   # corpus stays in place
-            .join(F.broadcast(q), "query_id")           # vectors re-joined late
-            .withColumn("dist", dist_expr("__cvec", "__qvec"))
-            .select("query_id", "neighbor_id", "dist")
-        )
-    scored = scored.filter(F.col("dist") <= max_dist)    # inclusive (lsh/lsh.go:179)
-    return topk_per_query(scored, k).select("query_id", "rank", "neighbor_id", "dist")
+        return _matmul_verify(q, c.join(F.broadcast(cands), "neighbor_id"),
+                              metric, collected=collected)
+    dist_expr = cosine_dist_expr if metric == "cosine" else l2_dist_expr
+    return (
+        c.join(F.broadcast(cands), "neighbor_id")   # corpus stays in place
+        .join(F.broadcast(q), "query_id")           # vectors re-joined late
+        .withColumn("dist", dist_expr("__cvec", "__qvec"))
+        .select("query_id", "neighbor_id", "dist")
+    )
 
 
 def _collect_queries(q: DataFrame, dims: int | None = None
@@ -901,54 +938,103 @@ def driver_probe_arrays(Q: np.ndarray, model: HasherModel,
 
 
 def on_driver(n_queries: int) -> bool:
-    """True when a batch's candidate set is computed on the driver
-    (:func:`driver_candidates`): the batch has fewer than
-    :data:`layout.QUERY_CROSSOVER` queries."""
+    """True when a batch is searched on the driver (:func:`_driver_search`):
+    the batch has fewer than :data:`layout.QUERY_CROSSOVER` queries."""
     return n_queries < layout.QUERY_CROSSOVER
 
 
-def driver_candidates(q: DataFrame, q_ids: list, probes: DataFrame,
-                      lists: DataFrame, key_cols: list[str],
-                      max_candidates: int | None = None,
-                      grouped: bool = False) -> DataFrame:
-    """Small-batch candidate generation: ONE Arrow collect of the matched
-    rows, dedup and cap in numpy on the driver, and the result handed back
-    as an Arrow-built local relation (the JVM parses it; no Python task).
+def sql_in(expr: str, values) -> Column:
+    """``expr IN (values)`` as ONE parsed SQL expression.
 
-    ``probes`` is (__qrow int, *key_cols), ``__qrow`` being the query's row
-    in ``q_ids``; ``lists`` is (neighbor_id, *key_cols[, tree_id]) — the
-    bucket relation or IVF's inverted lists.  The probes are broadcast into
-    ``lists`` and the matched (__qrow, neighbor_id[, tree_id]) rows come
-    back in one ``toArrow``.  Returns the distinct (query_id, neighbor_id)
-    pairs, or with ``grouped`` one (neighbor_id, __qids) row per neighbor —
-    the form the ``matmul_grouped`` verify consumes, so no ``collect_list``
-    shuffle runs.
+    ``Column.isin`` makes one Py4J call per literal (measured at 3,000
+    literals: 1,165 ms, against 113 ms for the parsed expression); the
+    parse is one call whatever the count.  ``expr`` is SQL text (quote a
+    column name with backticks).  Integers are written as decimal
+    literals, so Spark types them as it types ``isin``'s Python ints (INT
+    when they fit, else BIGINT) and the predicate is the same.  A string is
+    written as the cast of its UTF-8 bytes in hex, ``CAST(X'…' AS
+    STRING)``, which constant folding turns back into the string: no
+    character, ``'`` and ``\\`` included, needs escaping, whatever the
+    parser's escape settings.  No values gives ``false``."""
+    lits = [f"CAST(X'{v.encode().hex()}' AS STRING)" if isinstance(v, str)
+            else str(operator.index(v)) for v in values]
+    if not lits:
+        return F.lit(False)
+    return F.expr(f"{expr} IN ({', '.join(lits)})")
+
+
+def _id_in(expr: str, ids: pa.Array) -> Column:
+    """``expr IN (ids)`` with the fewest literals: integer ids that fill
+    most of their range ``[lo, hi]`` become ``expr BETWEEN lo AND hi AND
+    NOT expr IN (<the ids missing from the range>)``, the same rows.  A
+    candidate set is often most of a dense-id corpus (the whole of it for
+    the 100-query batch of a 3,000-row corpus), and Spark's analysis of an
+    IN list costs about 30 μs a literal."""
+    if pa.types.is_integer(ids.type) and len(ids):
+        v = ids.to_numpy()
+        lo, hi = int(v.min()), int(v.max())
+        if hi - lo + 1 < 2 * len(v):
+            gaps = np.setdiff1d(np.arange(lo, hi + 1), v)
+            inside = F.expr(f"{expr} BETWEEN {lo} AND {hi}")
+            return inside & ~sql_in(expr, gaps) if len(gaps) else inside
+    return sql_in(expr, ids.to_pylist())
+
+
+class Candidates(NamedTuple):
+    """A small batch's candidate set on the driver, grouped per neighbor:
+    ``ids`` holds the distinct neighbor ids in Spark's order, and the query
+    rows of neighbor ``i`` are ``qrow[offsets[i]:offsets[i + 1]]``,
+    ascending."""
+    ids: pa.Array
+    offsets: np.ndarray
+    qrow: np.ndarray
+
+
+def driver_candidates(lists: DataFrame, q_ids: list, qrow: np.ndarray,
+                      keys: dict[str, np.ndarray],
+                      max_candidates: int | None = None) -> Candidates:
+    """Small-batch candidate generation: ONE filtered Arrow collect of the
+    list rows the probes name, then the match, the dedup and the cap in
+    numpy on the driver.
+
+    Probe ``i`` is row ``qrow[i]`` of the query batch ``q_ids`` with the
+    key values ``keys[c][i]``; query rows with equal ids count as one
+    query, the row the verify kernels' id lookup picks, as in the Spark
+    plan.  ``lists`` is (neighbor_id, *keys) — the bucket relation (keys
+    ``tree_id``, ``hash``) or IVF's inverted lists (``centroid_id``).  The
+    collect filters ``lists`` on its last key (``<key> IN (<probed
+    values>)``, :func:`sql_in`), and numpy matches the rows whose every key
+    a probe names, so no probe relation is broadcast.
 
     Ordering matches Spark's: ``np.unique`` ranks integer ids numerically
     and string ids in Python ``str`` order, which is UTF-8 byte order,
-    Spark's string order.  With ``max_candidates`` each query keeps its
-    first ``max_candidates`` neighbors by ``(first_tree, neighbor_id)``,
-    ``first_tree`` being the smallest tree that matched the pair — the
-    window the distributed path of :func:`candidate_pairs` runs.
+    Spark's string order.  With ``max_candidates`` (keys must include
+    ``tree_id``) each query row keeps its first ``max_candidates``
+    neighbors by ``(first_tree, neighbor_id)``, ``first_tree`` being the
+    smallest tree that matched the pair — the window the distributed path
+    of :func:`candidate_pairs` runs.
 
-    Driver memory: the collect holds up to ``n_queries × n_trees × (1 +
-    multiprobe) × bucket size`` rows of three narrow columns (the
-    broadcast-probe plan already pulled the deduped set through the driver
-    as a broadcast).  A degenerate bucket makes the collect fail loudly at
-    ``spark.driver.maxResultSize`` instead of exhausting driver memory."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    capped = max_candidates is not None
-    cols = ["__qrow", "neighbor_id"] + (["tree_id"] if capped else [])
-    tbl = F.broadcast(probes).join(lists, key_cols).select(*cols).toArrow()
-    qrow = tbl.column("__qrow").to_numpy().astype(np.int64)
+    Driver memory: the collect holds every list row whose last key a probe
+    names — up to ``n_queries × n_trees × (1 + multiprobe) × bucket size``
+    rows of three narrow columns for the forest, the probed lists' rows of
+    two for IVF — and the match as many index pairs.  A degenerate bucket
+    makes the collect fail loudly at ``spark.driver.maxResultSize`` instead
+    of exhausting driver memory."""
+    names = list(keys)
+    tbl = (lists.filter(sql_in(f"`{names[-1]}`", np.unique(keys[names[-1]])))
+           .select("neighbor_id", *names).toArrow())
+    lrow, probe = _equi_join([keys[c] for c in names],
+                             [tbl.column(c).to_numpy() for c in names])
+    canon = AM.id_index_lookup(q_ids)(np.asarray(q_ids))
+    qr = canon[np.asarray(qrow)[probe]]
     nbr = tbl.column("neighbor_id").combine_chunks()
     _, first, code = np.unique(nbr.to_numpy(zero_copy_only=False),
                                return_index=True, return_inverse=True)
+    code = code[lrow]
     n_u = max(len(first), 1)
-    key = qrow * n_u + code            # (query row, neighbor rank) as one int
-    if capped:
-        tree = tbl.column("tree_id").to_numpy()
+    key = qr * n_u + code              # (query row, neighbor rank) as one int
+    if max_candidates is not None:
+        tree = tbl.column("tree_id").to_numpy()[lrow]
         order = np.lexsort((tree, key))
         key, tree = key[order], tree[order]
         head = _run_starts(key)
@@ -959,27 +1045,38 @@ def driver_candidates(q: DataFrame, q_ids: list, probes: DataFrame,
         key = key[rank < max_candidates]
     else:
         key = np.unique(key)
-    code, qrow = key % n_u, key // n_u
-    order = np.lexsort((qrow, code))               # by neighbor, then query
-    code, qrow = code[order], qrow[order]
-
-    qf = q.schema["query_id"]
-    nf = lists.schema["neighbor_id"]
-    qids = AM.take(pa.array(q_ids, to_arrow_type(qf.dataType)), qrow)
-    spark = q.sparkSession
-    if not grouped:
-        return spark.createDataFrame(
-            pa.table({"query_id": qids,
-                      "neighbor_id": AM.take(nbr, first[code])}),
-            T.StructType([T.StructField("query_id", qf.dataType),
-                          T.StructField("neighbor_id", nf.dataType)]))
+    code, qr = key % n_u, key // n_u
+    order = np.lexsort((qr, code))                 # by neighbor, then query
+    code, qr = code[order], qr[order]
     head = _run_starts(code)
-    offsets = pa.array(np.r_[head, len(code)].astype(np.int32))
-    return spark.createDataFrame(
-        pa.table({"neighbor_id": AM.take(nbr, first[code[head]]),
-                  "__qids": pa.ListArray.from_arrays(offsets, qids)}),
-        T.StructType([T.StructField("neighbor_id", nf.dataType),
-                      T.StructField("__qids", T.ArrayType(qf.dataType))]))
+    return Candidates(AM.take(nbr, first[code[head]]),
+                      np.r_[head, len(code)].astype(np.int64), qr)
+
+
+def _equi_join(probe_cols: list[np.ndarray], list_cols: list[np.ndarray]
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """Every (list row, probe) index pair whose key columns are all equal.
+    Each column is ranked over both sides' values, the ranks combine into
+    one int64 key, and each list row finds its probes by binary search in
+    the sorted probe keys."""
+    pk = np.zeros(len(probe_cols[0]), np.int64)
+    lk = np.zeros(len(list_cols[0]), np.int64)
+    for p, c in zip(probe_cols, list_cols):
+        u, inv = np.unique(np.concatenate([p, c]), return_inverse=True)
+        pk = pk * len(u) + inv[:len(p)]
+        lk = lk * len(u) + inv[len(p):]
+    order = np.argsort(pk, kind="stable")
+    pk = pk[order]
+    lo = np.searchsorted(pk, lk, "left")
+    count = np.searchsorted(pk, lk, "right") - lo
+    return np.repeat(np.arange(len(lk)), count), order[_spans(lo, count)]
+
+
+def _spans(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The ranges ``[starts[i], starts[i] + counts[i])``, concatenated."""
+    ends = np.cumsum(counts)
+    return (np.repeat(starts - ends + counts, counts)
+            + np.arange(ends[-1] if len(ends) else 0))
 
 
 def _run_starts(a: np.ndarray) -> np.ndarray:
@@ -987,11 +1084,155 @@ def _run_starts(a: np.ndarray) -> np.ndarray:
     return np.flatnonzero(np.r_[True, a[1:] != a[:-1]][:len(a)])
 
 
+def _driver_search(q: DataFrame, collected: tuple[list, np.ndarray],
+                   lists: DataFrame, qrow: np.ndarray,
+                   keys: dict[str, np.ndarray], corpus: DataFrame, k: int,
+                   max_dist: float, metric: str, id_col: str, vec_col: str,
+                   dist_impl: str, max_candidates: int | None = None
+                   ) -> DataFrame:
+    """The read path of a batch of fewer than :data:`layout.QUERY_CROSSOVER`
+    queries, shared by the forest and IVF: after the caller's query
+    collect, ONE filtered collect of the probed list rows
+    (:func:`driver_candidates`) and ONE filtered collect of the candidate
+    corpus rows (:func:`_driver_verify`); the inclusive threshold and the
+    top-k run on the driver (:func:`_topk_relation`).
+
+    ``sql`` and a candidate set whose distinct ids × dims pass
+    :data:`layout.VERIFY_CELLS` are scored by the Spark verify
+    (:func:`_score`) instead, collected and ranked on the driver.  Driver
+    memory: the candidate corpus matrix, at most ``VERIFY_CELLS`` float64
+    cells, and the scored pairs."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    q_ids, Q = collected
+    spark = q.sparkSession
+    qtype = q.schema["query_id"].dataType
+    ntype = corpus.schema[id_col].dataType
+    q_pa = pa.array(q_ids, to_arrow_type(qtype))
+    scored = pa.schema([("query_id", q_pa.type),
+                        ("neighbor_id", to_arrow_type(ntype)),
+                        ("dist", pa.float64())]).empty_table()
+    if q_ids:
+        cands = driver_candidates(lists, q_ids, qrow, keys, max_candidates)
+        grouped = dist_impl == "matmul_grouped"
+        fits = len(cands.ids) * Q.shape[1] <= layout.VERIFY_CELLS
+        if len(cands.ids) and fits and dist_impl != "sql":
+            scored = _driver_verify(cands, corpus, collected, q_pa, metric,
+                                    id_col, vec_col, grouped, scored.schema)
+        elif len(cands.ids):                    # else no corpus row to fetch
+            cdf = _candidate_relation(spark, cands, q_pa, qtype, grouped)
+            scored = (_score(q, cdf, corpus, metric, id_col, vec_col,
+                             dist_impl, collected)
+                      .filter(F.col("dist") <= max_dist).toArrow())
+    return _topk_relation(spark, scored, k, max_dist, T.StructType([
+        T.StructField("query_id", qtype),
+        T.StructField("rank", T.IntegerType(), False),
+        T.StructField("neighbor_id", ntype),
+        T.StructField("dist", T.DoubleType())]))
+
+
+def _driver_verify(cands: Candidates, corpus: DataFrame,
+                   collected: tuple[list, np.ndarray], q_pa: pa.Array,
+                   metric: str, id_col: str, vec_col: str, grouped: bool,
+                   schema: pa.Schema) -> pa.Table:
+    """The matmul verify of a small batch on the driver → (query_id,
+    neighbor_id, dist) rows.  The candidate corpus rows come back in ONE
+    filtered ``toArrow`` (``neighbor_id IN (<candidate ids>)``), in the
+    record batches an executor's verify would receive — the corpus
+    partitions in order, each cut at ``maxRecordsPerBatch`` rows — and each
+    batch goes, unchanged and in order, through the per-batch kernel of
+    the ``mapInArrow`` verify (:func:`_grouped_kernel`, :func:`_pair_kernel`)
+    with the columns the candidate join would have added, so the distances
+    are the Spark plan's bit for bit."""
+    q_ids, Q = collected
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).alias("__cvec"))
+    tbl = c.filter(_id_in("`neighbor_id`", cands.ids)).toArrow()
+    counts = np.diff(cands.offsets)
+    if grouped:
+        compute = _grouped_kernel(q_ids, Q, q_pa.type, metric)
+    else:
+        compute = _pair_kernel(q_ids, Q, metric)
+    step = max(1, layout.VERIFY_CELLS // max(Q.shape[1], 1))
+    out = []
+    for batch in tbl.to_batches():
+        if not batch.num_rows:
+            continue
+        nbr = AM.batch_column(batch, "neighbor_id")
+        vecs = AM.batch_column(batch, "__cvec")
+        code = np.asarray(pc.index_in(nbr, value_set=cands.ids))
+        n_q = counts[code]
+        qids = AM.take(q_pa, cands.qrow[_spans(cands.offsets[code], n_q)])
+        if grouped:
+            offsets = pa.array(np.r_[0, np.cumsum(n_q)].astype(np.int32))
+            out.append(compute(pa.RecordBatch.from_arrays(
+                [nbr, vecs, pa.ListArray.from_arrays(offsets, qids)],
+                names=["neighbor_id", "__cvec", "__qids"])))
+            continue
+        # one row per pair, as the pairwise join emits them; the kernel is
+        # row by row, so cutting the pairs into chunks changes no bit
+        rows = np.repeat(np.arange(batch.num_rows), n_q)
+        for s in range(0, len(rows), step):
+            r = rows[s:s + step]
+            out.append(compute(pa.RecordBatch.from_arrays(
+                [qids[s:s + step], AM.take(nbr, r), AM.take(vecs, r)],
+                names=["query_id", "neighbor_id", "__cvec"])))
+    return pa.Table.from_batches(out, schema)
+
+
+def _candidate_relation(spark, cands: Candidates, q_pa: pa.Array, qtype,
+                        grouped: bool) -> DataFrame:
+    """A driver candidate set as an Arrow-built local relation (the JVM
+    parses it; no Python task): the distinct (query_id, neighbor_id) pairs,
+    or with ``grouped`` one (neighbor_id, __qids) row per neighbor — the
+    form the ``matmul_grouped`` verify consumes, so no ``collect_list``
+    shuffle runs."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    nf = T.StructField("neighbor_id", from_arrow_type(cands.ids.type))
+    qids = AM.take(q_pa, cands.qrow)
+    if not grouped:
+        return spark.createDataFrame(
+            pa.table({"query_id": qids,
+                      "neighbor_id": AM.take(cands.ids, np.repeat(
+                          np.arange(len(cands.ids)), np.diff(cands.offsets)))}),
+            T.StructType([T.StructField("query_id", qtype), nf]))
+    return spark.createDataFrame(
+        pa.table({"neighbor_id": cands.ids,
+                  "__qids": pa.ListArray.from_arrays(
+                      pa.array(cands.offsets.astype(np.int32)), qids)}),
+        T.StructType([nf, T.StructField("__qids", T.ArrayType(qtype))]))
+
+
+def _topk_relation(spark, scored: pa.Table, k: int, max_dist: float,
+                   schema: T.StructType) -> DataFrame:
+    """The inclusive threshold and the top-k of (query_id, neighbor_id,
+    dist) rows on the driver, as an Arrow-built local relation (query_id,
+    rank, neighbor_id, dist).  The order is :func:`topk.topk_per_query`'s:
+    per query by ``(dist, neighbor_id)`` — Arrow compares strings byte by
+    byte, Spark's order, and -0.0 equal to 0.0 as Spark does — and ``rank``
+    counts from 1."""
+    scored = scored.filter(pc.less_equal(scored["dist"], max_dist))
+    scored = scored.sort_by([("query_id", "ascending"), ("dist", "ascending"),
+                             ("neighbor_id", "ascending")])
+    qid = pc.dictionary_encode(scored["query_id"].combine_chunks(),
+                               null_encoding="encode")
+    codes = np.asarray(qid.indices)
+    head = _run_starts(codes)
+    rank = np.arange(len(codes)) - np.repeat(head, np.diff(np.r_[head, len(codes)]))
+    keep = np.flatnonzero(rank < k)
+    return spark.createDataFrame(pa.table({
+        "query_id": scored["query_id"].take(keep),
+        "rank": (rank[keep] + 1).astype(np.int32),
+        "neighbor_id": scored["neighbor_id"].take(keep),
+        "dist": scored["dist"].take(keep)}), schema)
+
+
 def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
                     id_col: str = "id",
                     max_candidates: int | None = None,
                     _collected: tuple[list, np.ndarray] | None = None,
-                    _probe_arrays=None, _grouped: bool = False) -> DataFrame:
+                    _probe_arrays=None) -> DataFrame:
     """Candidate generation: q(query_id, __qvec) × buckets → deduped
     (query_id, neighbor_id) pairs (Q1-Q4, /root/reference/lsh/lsh.go:140-172).
     Public so benchmarks/metrics can count the pruned candidate set.
@@ -1001,10 +1242,12 @@ def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
     :data:`layout.QUERY_CROSSOVER` queries get their candidates from
     :func:`driver_candidates`, as a local relation; a larger batch runs the
     broadcast probe join, dedup and cap as Spark operators.  ``_collected``:
-    pre-collected (ids, matrix) from :func:`_collect_queries` so ``search``
+    pre-collected (ids, matrix) from :func:`_collect_queries` so a caller
     pays one driver round-trip, not two (without it the batch is collected
-    here, under :func:`search`'s query-batch contract); ``_grouped``:
-    return a driver result grouped per neighbor (:func:`driver_candidates`)."""
+    here, under :func:`search`'s query-batch contract); ``_probe_arrays``:
+    the batch's :func:`driver_probe_arrays`."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     lists = buckets.withColumnRenamed(id_col, "neighbor_id")
     spark = q.sparkSession
     q_ids, Q = (_collected if _collected is not None
@@ -1013,19 +1256,19 @@ def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
         ids_rep, trees, flat = _probe_arrays
     else:
         ids_rep, trees, flat = driver_probe_arrays(Q, model, len(q_ids))
+    if on_driver(len(q_ids)):
+        qtype = q.schema["query_id"].dataType
+        cands = driver_candidates(lists, q_ids, ids_rep,
+                                  {"tree_id": trees, "hash": flat},
+                                  max_candidates)
+        return _candidate_relation(spark, cands,
+                                   pa.array(q_ids, to_arrow_type(qtype)),
+                                   qtype, grouped=False)
+    qtype = dict(q.dtypes)["query_id"]
     # built from Arrow, not a Python list-of-tuples (per-row Py4J
     # serialization at mid-size batches, r3 ADVICE) nor pandas (a
     # PythonRDD when the session's Arrow conversion is off): the JVM
     # parses it, so no Python task runs
-    if on_driver(len(q_ids)):
-        probes = spark.createDataFrame(
-            pa.table({"__qrow": ids_rep.astype(np.int32),
-                      "tree_id": trees.astype(np.int32), "hash": flat}),
-            schema="__qrow int, tree_id int, hash long")
-        return driver_candidates(q, q_ids, probes, lists,
-                                 ["tree_id", "hash"], max_candidates,
-                                 grouped=_grouped)
-    qtype = dict(q.dtypes)["query_id"]
     probes = spark.createDataFrame(
         pa.table({"query_id": AM.take(pa.array(q_ids), ids_rep),
                   "tree_id": trees.astype(np.int32),
@@ -1059,14 +1302,70 @@ def candidate_pairs(q: DataFrame, buckets: DataFrame, model: HasherModel,
             .select("query_id", "neighbor_id"))
 
 
+def _candidate_matrix(batch: pa.RecordBatch, dims: int) -> np.ndarray:
+    """A verify batch's corpus vectors (``__cvec``) as a (rows, dims)
+    float64 matrix — the corpus side of the vector contract, checked in
+    the batch that is verified anyway, so it costs no job: a vector that is
+    not ``dims`` wide (the query batch's width) or that holds a NaN raises
+    ``ValueError`` naming its corpus id (``neighbor_id``)."""
+    vecs = AM.batch_column(batch, "__cvec")
+    ids = AM.batch_column(batch, "neighbor_id")
+    if pa.types.is_fixed_size_list(vecs.type):
+        widths = np.full(len(vecs), vecs.type.list_size)
+    else:
+        widths = np.diff(np.asarray(vecs.offsets))
+    bad = widths != dims
+    if vecs.null_count:
+        bad &= ~np.asarray(vecs.is_null())   # matrix_from_column names those
+    if bad.any():
+        i = int(bad.argmax())
+        raise ValueError(f"corpus vector {ids[i].as_py()!r} has {widths[i]} "
+                         f"elements; the query batch has {dims}")
+    C = AM.matrix_from_column(vecs)
+    if np.isnan(C).any():
+        i = int(np.isnan(C).any(axis=1).argmax())
+        raise ValueError(f"corpus vector {ids[i].as_py()!r} has a NaN element")
+    return C
+
+
+def _pair_kernel(q_ids: list, Q: np.ndarray, metric: str):
+    """The per-batch kernel of the ``matmul`` verify: a (query_id,
+    neighbor_id, __cvec) batch of candidate pairs → (query_id, neighbor_id,
+    dist), one numpy gather against the query matrix.  The ``mapInArrow``
+    op and the driver path (:func:`_driver_verify`) both run it."""
+    Qm = np.asarray(Q)
+    lookup = AM.id_index_lookup(q_ids)
+    if metric == "cosine":
+        qn = np.linalg.norm(Qm, axis=1, keepdims=True)
+        Qn = Qm / np.where(qn > TOL, qn, 1.0)
+
+    def compute(batch):
+        qid_col = AM.batch_column(batch, "query_id")
+        C = _candidate_matrix(batch, Qm.shape[1])
+        qi = lookup(np.asarray(qid_col))
+        if metric == "l2":
+            d = np.linalg.norm(C - Qm[qi], axis=1)
+        else:
+            cn = np.linalg.norm(C, axis=1, keepdims=True)
+            Cn = C / np.where(cn > TOL, cn, 1.0)
+            d = 1.0 - np.einsum("ij,ij->i", Cn, Qn[qi])
+            zero = (cn[:, 0] <= TOL) | (qn[qi, 0] <= TOL)
+            d[zero] = 1.0                       # zero-vector guard (helpers.go:224-231)
+            d[d < TOL] = 0.0                    # clamp (helpers.go:232-233)
+        # id columns pass through untouched (no pandas re-boxing)
+        return pa.RecordBatch.from_arrays(
+            [qid_col, AM.batch_column(batch, "neighbor_id"), pa.array(d)],
+            names=["query_id", "neighbor_id", "dist"])
+
+    return compute
+
+
 def _matmul_verify(q: DataFrame, joined: DataFrame, metric: str,
                    collected: tuple[list, np.ndarray] | None = None) -> DataFrame:
     """(query_id, __qvec) queries × (neighbor_id, __cvec, query_id) candidate
     rows → (query_id, neighbor_id, dist): distances via one numpy gather per
     Arrow batch against the broadcast query matrix (NNMock-with-BLAS shape,
-    /root/reference/annbench/annbench.go:83-125)."""
-    from lsh_search_go_spark.config import TOL
-
+    /root/reference/annbench/annbench.go:83-125), :func:`_pair_kernel`."""
     spark = q.sparkSession
     q_ids, Q = collected if collected is not None else _collect_queries(q)
     bc = spark.sparkContext.broadcast((q_ids, Q))
@@ -1075,51 +1374,101 @@ def _matmul_verify(q: DataFrame, joined: DataFrame, metric: str,
     schema = f"query_id {qtype}, neighbor_id {ctype}, dist double"
 
     def op(batches):
-        q_ids_l, Qm = bc.value
-        Qm = np.asarray(Qm)
-        lookup = AM.id_index_lookup(q_ids_l)
-        if metric == "cosine":
-            qn = np.linalg.norm(Qm, axis=1, keepdims=True)
-            Qn = Qm / np.where(qn > TOL, qn, 1.0)
-
-        def compute(batch):
-            qid_col = AM.batch_column(batch, "query_id")
-            C = AM.matrix_from_column(AM.batch_column(batch, "__cvec"))
-            qi = lookup(np.asarray(qid_col))
-            if metric == "l2":
-                d = np.linalg.norm(C - Qm[qi], axis=1)
-            else:
-                cn = np.linalg.norm(C, axis=1, keepdims=True)
-                Cn = C / np.where(cn > TOL, cn, 1.0)
-                d = 1.0 - np.einsum("ij,ij->i", Cn, Qn[qi])
-                zero = (cn[:, 0] <= TOL) | (qn[qi, 0] <= TOL)
-                d[zero] = 1.0                       # zero-vector guard (helpers.go:224-231)
-                d[d < TOL] = 0.0                    # clamp (helpers.go:232-233)
-            # id columns pass through untouched (no pandas re-boxing)
-            return pa.RecordBatch.from_arrays(
-                [qid_col, AM.batch_column(batch, "neighbor_id"), pa.array(d)],
-                names=["query_id", "neighbor_id", "dist"])
-
-        yield from AM.map_batches(batches, compute, threaded=False)
+        yield from AM.map_batches(batches, _pair_kernel(*bc.value, metric),
+                                  threaded=False)
 
     return joined.select("query_id", "neighbor_id", "__cvec").mapInArrow(op, schema)
+
+
+def _grouped_kernel(q_ids: list, Q: np.ndarray, q_type: pa.DataType,
+                    metric: str):
+    """The per-batch kernel of the ``matmul_grouped`` verify: a
+    (neighbor_id, __cvec, __qids array) batch → (query_id, neighbor_id,
+    dist), one corpus-vector transfer per touched row.  The ``mapInArrow``
+    op and the driver path (:func:`_driver_verify`) both run it.
+
+    Memory-bounded (r3 ADVICE): when the pair list is sparse relative to the
+    full |rows|×|queries| gram, distances come from a per-pair gathered
+    einsum; otherwise the gram is computed in row blocks of at most
+    :data:`layout.VERIFY_CELLS` cells — a 10k-row Arrow batch against a
+    100k-query broadcast can never materialize the naive 8 GB matrix this
+    backend is meant for.  Which branch runs, and so the last bits of a
+    distance, depends on the batch's composition."""
+    Qm = np.asarray(Q)
+    lookup = AM.id_index_lookup(q_ids)
+    q_pa = pa.array(q_ids, type=q_type)        # the declared id type
+    qn = np.linalg.norm(Qm, axis=1)
+    qsq = (Qm * Qm).sum(1)                      # fixed per task, not per batch
+    if metric == "cosine":
+        Qn = Qm / np.where(qn > TOL, qn, 1.0)[:, None]
+    budget = layout.VERIFY_CELLS
+
+    def compute(batch):
+        C = _candidate_matrix(batch, Qm.shape[1])
+        qids_col = AM.batch_column(batch, "__qids")
+        counts = np.diff(np.asarray(qids_col.offsets).astype(np.int64))
+        flat_q = lookup(np.asarray(qids_col.flatten()))
+        rows = np.repeat(np.arange(batch.num_rows, dtype=np.int64), counts)
+        nrows = batch.num_rows
+        npairs, nq, dims = len(rows), Qm.shape[0], Qm.shape[1]
+        if metric == "l2":
+            csq = (C * C).sum(1)
+            d = np.empty(npairs)
+            if npairs * dims <= nrows * nq:
+                # sparse pairs: gathered per-pair dots, chunked
+                step = max(1, budget // max(dims, 1))
+                for s in range(0, npairs, step):
+                    rr, qq = rows[s:s + step], flat_q[s:s + step]
+                    g = np.einsum("pd,pd->p", C[rr], Qm[qq])
+                    d[s:s + step] = np.sqrt(np.maximum(
+                        csq[rr] + qsq[qq] - 2.0 * g, 0.0))
+            else:
+                # dense pairs: gram in row blocks (rows are sorted, so
+                # each block's pair span is a contiguous slice)
+                step = max(1, budget // max(nq, 1))
+                for s in range(0, nrows, step):
+                    e = min(s + step, nrows)
+                    lo, hi = np.searchsorted(rows, [s, e])
+                    d2 = ((C[s:e] * C[s:e]).sum(1)[:, None] + qsq[None, :]
+                          - 2.0 * (C[s:e] @ Qm.T))
+                    d[lo:hi] = np.sqrt(np.maximum(
+                        d2[rows[lo:hi] - s, flat_q[lo:hi]], 0.0))
+        else:
+            cn = np.linalg.norm(C, axis=1)
+            Cn = C / np.where(cn > TOL, cn, 1.0)[:, None]
+            d = np.empty(npairs)
+            if npairs * dims <= nrows * nq:
+                step = max(1, budget // max(dims, 1))
+                for s in range(0, npairs, step):
+                    rr, qq = rows[s:s + step], flat_q[s:s + step]
+                    d[s:s + step] = 1.0 - np.einsum(
+                        "pd,pd->p", Cn[rr], Qn[qq])
+            else:
+                step = max(1, budget // max(nq, 1))
+                for s in range(0, nrows, step):
+                    e = min(s + step, nrows)
+                    lo, hi = np.searchsorted(rows, [s, e])
+                    dmat = 1.0 - Cn[s:e] @ Qn.T
+                    d[lo:hi] = dmat[rows[lo:hi] - s, flat_q[lo:hi]]
+            zero = (cn[rows] <= TOL) | (qn[flat_q] <= TOL)
+            d[zero] = 1.0                       # zero-vector guard (helpers.go:224-231)
+            d[d < TOL] = 0.0                    # clamp (helpers.go:232-233)
+        return pa.RecordBatch.from_arrays(
+            [AM.take(q_pa, flat_q),
+             AM.take(AM.batch_column(batch, "neighbor_id"), rows),
+             pa.array(d)],
+            names=["query_id", "neighbor_id", "dist"])
+
+    return compute
 
 
 def _matmul_verify_grouped(q: DataFrame, joined: DataFrame, metric: str,
                            collected: tuple[list, np.ndarray] | None = None
                            ) -> DataFrame:
     """(neighbor_id, __cvec, __qids array) rows → (query_id, neighbor_id,
-    dist): one corpus-vector transfer per touched row, distances against the
-    broadcast query matrix.  O(rows_touched × dims) Arrow traffic instead of
-    O(candidate_pairs × dims).
-
-    Memory-bounded (r3 ADVICE): when the pair list is sparse relative to the
-    full |rows|×|queries| gram, distances come from a per-pair gathered
-    einsum; otherwise the gram is computed in row blocks capped at ~64 MB —
-    a 10k-row Arrow batch against a 100k-query broadcast can never
-    materialize the naive 8 GB matrix this backend is meant for."""
-    from lsh_search_go_spark.config import TOL
-
+    dist) against the broadcast query matrix, :func:`_grouped_kernel`:
+    O(rows_touched × dims) Arrow traffic instead of O(candidate_pairs ×
+    dims)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     spark = q.sparkSession
@@ -1131,71 +1480,8 @@ def _matmul_verify_grouped(q: DataFrame, joined: DataFrame, metric: str,
     q_arrow_type = to_arrow_type(q.schema["query_id"].dataType)
 
     def op(batches):
-        q_ids_l, Qm = bc.value
-        Qm = np.asarray(Qm)
-        lookup = AM.id_index_lookup(q_ids_l)
-        q_pa = pa.array(q_ids_l, type=q_arrow_type)   # the declared id type
-        qn = np.linalg.norm(Qm, axis=1)
-        qsq = (Qm * Qm).sum(1)                  # fixed per task, not per batch
-        if metric == "cosine":
-            Qn = Qm / np.where(qn > TOL, qn, 1.0)[:, None]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            C = AM.matrix_from_column(AM.batch_column(batch, "__cvec"))
-            qids_col = AM.batch_column(batch, "__qids")
-            counts = np.diff(np.asarray(qids_col.offsets).astype(np.int64))
-            flat_q = lookup(np.asarray(qids_col.flatten()))
-            rows = np.repeat(np.arange(batch.num_rows, dtype=np.int64), counts)
-            nrows = batch.num_rows
-            npairs, nq, dims = len(rows), Qm.shape[0], Qm.shape[1]
-            budget = 1 << 23                        # ≤64 MB of float64 cells
-            if metric == "l2":
-                csq = (C * C).sum(1)
-                d = np.empty(npairs)
-                if npairs * dims <= nrows * nq:
-                    # sparse pairs: gathered per-pair dots, chunked
-                    step = max(1, budget // max(dims, 1))
-                    for s in range(0, npairs, step):
-                        rr, qq = rows[s:s + step], flat_q[s:s + step]
-                        g = np.einsum("pd,pd->p", C[rr], Qm[qq])
-                        d[s:s + step] = np.sqrt(np.maximum(
-                            csq[rr] + qsq[qq] - 2.0 * g, 0.0))
-                else:
-                    # dense pairs: gram in row blocks (rows are sorted, so
-                    # each block's pair span is a contiguous slice)
-                    step = max(1, budget // max(nq, 1))
-                    for s in range(0, nrows, step):
-                        e = min(s + step, nrows)
-                        lo, hi = np.searchsorted(rows, [s, e])
-                        d2 = ((C[s:e] * C[s:e]).sum(1)[:, None] + qsq[None, :]
-                              - 2.0 * (C[s:e] @ Qm.T))
-                        d[lo:hi] = np.sqrt(np.maximum(
-                            d2[rows[lo:hi] - s, flat_q[lo:hi]], 0.0))
-            else:
-                cn = np.linalg.norm(C, axis=1)
-                Cn = C / np.where(cn > TOL, cn, 1.0)[:, None]
-                d = np.empty(npairs)
-                if npairs * dims <= nrows * nq:
-                    step = max(1, budget // max(dims, 1))
-                    for s in range(0, npairs, step):
-                        rr, qq = rows[s:s + step], flat_q[s:s + step]
-                        d[s:s + step] = 1.0 - np.einsum(
-                            "pd,pd->p", Cn[rr], Qn[qq])
-                else:
-                    step = max(1, budget // max(nq, 1))
-                    for s in range(0, nrows, step):
-                        e = min(s + step, nrows)
-                        lo, hi = np.searchsorted(rows, [s, e])
-                        dmat = 1.0 - Cn[s:e] @ Qn.T
-                        d[lo:hi] = dmat[rows[lo:hi] - s, flat_q[lo:hi]]
-                zero = (cn[rows] <= TOL) | (qn[flat_q] <= TOL)
-                d[zero] = 1.0                       # zero-vector guard (helpers.go:224-231)
-                d[d < TOL] = 0.0                    # clamp (helpers.go:232-233)
-            yield pa.RecordBatch.from_arrays(
-                [AM.take(q_pa, flat_q),
-                 AM.take(AM.batch_column(batch, "neighbor_id"), rows),
-                 pa.array(d)],
-                names=["query_id", "neighbor_id", "dist"])
+        yield from AM.map_batches(
+            batches, _grouped_kernel(*bc.value, q_arrow_type, metric),
+            threaded=False)
 
     return joined.select("neighbor_id", "__cvec", "__qids").mapInArrow(op, schema)

@@ -13,10 +13,10 @@ candidate generator):
   ``(id, centroid_id)`` (the analog of the bucket table,
   /root/reference/store/kv/store.go:64-73);
 * ``search`` — queries ranked against centroids on the driver, top-``nprobe``
-  lists probed via a broadcast join (collected and grouped on the driver for
-  a small batch, ``ann.driver_candidates``), then the shared exact-verify +
-  top-k (ann.verify_topk — Q5/Q6 of the reference read path,
-  /root/reference/lsh/lsh.go:174-198).
+  lists probed via a broadcast join, then the shared exact-verify + top-k
+  (ann.verify_topk — Q5/Q6 of the reference read path,
+  /root/reference/lsh/lsh.go:174-198); a small batch runs the forest's
+  three-job driver path instead (``ann._driver_search``).
 
 At 100 TB the inverted-list relation is as narrow as the LSH bucket table
 (two ints per row, no duplication across trees — 10× smaller than a 10-tree
@@ -205,6 +205,7 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     ``corpus``'s id field, so neither read starts a job.  A store whose
     meta is missing, has no centroid fingerprint, or names other centroids
     than ``centroids`` raises ``ValueError``."""
+    from lsh_search_go_spark.operators.ann import sql_in
     from lsh_search_go_spark.sources import io
 
     spark = queries.sparkSession
@@ -216,9 +217,9 @@ def search_from_store(queries: DataFrame, store_path: str, corpus: DataFrame,
     inverted = spark.read.schema(T.StructType([
         corpus.schema[id_col],
         T.StructField("centroid_id", T.IntegerType())])).parquet(store_path)
-    probed = np.unique(probes_np).tolist()
-    if probed:
-        inverted = inverted.filter(F.col("centroid_id").isin(probed))
+    probed = np.unique(probes_np)
+    if len(probed):
+        inverted = inverted.filter(sql_in("`centroid_id`", probed.tolist()))
     return _search_probed(q, collected, probes_np, inverted, corpus, k,
                           max_dist, metric, id_col, vec_col, dist_impl)
 
@@ -252,16 +253,23 @@ def search(queries: DataFrame, inverted: DataFrame, corpus: DataFrame,
            id_col: str = "id", vec_col: str = "vec",
            query_id_col: str = "query_id", query_vec_col: str = "vec",
            dist_impl: str = "sql") -> DataFrame:
-    """Batch IVF search: rank centroids driver-side → broadcast the
-    (query_id, centroid_id) probe relation into the inverted-list join →
-    shared exact verify + inclusive threshold + top-k.
+    """Batch IVF search: rank centroids driver-side → the probed lists'
+    rows → shared exact verify + inclusive threshold + top-k.
 
-    A batch of fewer than ``layout.QUERY_CROSSOVER`` queries collects the
-    matched (query row, neighbor_id) rows in one Arrow transfer and hands
-    them to the verify as a local relation (``ann.driver_candidates``; the
-    lists are disjoint, so it only groups them).  A query vector whose
-    width is not the centroids' or that holds a NaN raises ``ValueError``
-    naming the first offending ``query_id``.
+    Physical-plan contract: a batch of fewer than
+    ``layout.QUERY_CROSSOVER`` queries runs ``ann.search``'s driver path in
+    three Spark jobs — the query collect, one filtered collect of the
+    probed lists' rows (``centroid_id IN (...)``), grouped per neighbor on
+    the driver (``ann.driver_candidates``; the lists are disjoint, so
+    nothing is deduped), and one filtered collect of the candidate corpus
+    rows, verified by the matmul verify's per-batch kernel and ranked on
+    the driver, with ``sql`` and the over-budget fallback of
+    ``ann.search``.  A larger batch broadcasts the (query_id, centroid_id)
+    probes into the lists and runs ``ann.verify_topk``.  A query vector
+    whose width is not the centroids' or that holds a NaN raises
+    ``ValueError`` naming the first offending ``query_id``; a candidate
+    corpus vector whose width is not the query batch's or that holds a NaN
+    raises ``ValueError`` naming its corpus id (both matmul verifies).
 
     Returns (query_id, rank, neighbor_id, dist)."""
     q, collected, probes_np = _probe(queries, centroids, nprobe, metric,
@@ -275,36 +283,31 @@ def _search_probed(q: DataFrame, collected: tuple[list, np.ndarray],
                    corpus: DataFrame, k: int, max_dist: float, metric: str,
                    id_col: str, vec_col: str, dist_impl: str) -> DataFrame:
     """:func:`search` after :func:`_probe`."""
-    from lsh_search_go_spark.operators.ann import (driver_candidates,
-                                                   on_driver, verify_topk)
+    from lsh_search_go_spark.operators.ann import (_driver_search, on_driver,
+                                                   verify_topk)
 
     q_ids, _ = collected
-    spark = q.sparkSession
-    qtype = dict(q.dtypes)["query_id"]
     qrow = np.repeat(np.arange(len(q_ids)), probes_np.shape[1])
     centroid_id = probes_np.reshape(-1).astype(np.int32)
     lists = inverted.withColumnRenamed(id_col, "neighbor_id")
+    if on_driver(len(q_ids)):
+        # the lists are disjoint, so the driver only groups the candidates
+        return _driver_search(q, collected, lists, qrow,
+                              {"centroid_id": centroid_id}, corpus, k,
+                              max_dist, metric, id_col, vec_col, dist_impl)
     # built from Arrow, mirroring ann.candidate_pairs (r4 VERDICT task 4):
     # the JVM parses it, so no Python task runs
-    if on_driver(len(q_ids)):
-        probes = spark.createDataFrame(
-            pa.table({"__qrow": qrow.astype(np.int32),
-                      "centroid_id": centroid_id}),
-            schema="__qrow int, centroid_id int")
-        cands = driver_candidates(q, q_ids, probes, lists, ["centroid_id"],
-                                  grouped=dist_impl == "matmul_grouped")
-    else:
-        probes = spark.createDataFrame(
-            pa.table({"query_id": AM.take(pa.array(q_ids), qrow),
-                      "centroid_id": centroid_id}),
-            schema=f"query_id {qtype}, centroid_id int",
-        )
-        cands = (
-            F.broadcast(probes).join(lists, "centroid_id")
-            .select("query_id", "neighbor_id")
-            # lists are disjoint (one centroid per vector) → pairs are
-            # already distinct; no dedup shuffle needed, unlike the forest
-        )
+    probes = q.sparkSession.createDataFrame(
+        pa.table({"query_id": AM.take(pa.array(q_ids), qrow),
+                  "centroid_id": centroid_id}),
+        schema=f"query_id {dict(q.dtypes)['query_id']}, centroid_id int",
+    )
+    cands = (
+        F.broadcast(probes).join(lists, "centroid_id")
+        .select("query_id", "neighbor_id")
+        # lists are disjoint (one centroid per vector) → pairs are
+        # already distinct; no dedup shuffle needed, unlike the forest
+    )
     return verify_topk(q, cands, corpus, k, max_dist, metric,
                        id_col=id_col, vec_col=vec_col, dist_impl=dist_impl,
                        collected=collected)

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from lsh_search_go_spark.functions import layout
 from lsh_search_go_spark.operators import ivf
 from lsh_search_go_spark.operators.bruteforce import brute_force_topk
 from lsh_search_go_spark.sources import io
@@ -56,12 +57,14 @@ def test_ivf_recall_vs_bruteforce(mixture, spark, metric, max_dist):
     assert recall >= 0.9, f"{metric}: recall {recall}"
 
 
-def test_ivf_hot_centroid_skew(spark):
+def test_ivf_hot_centroid_skew(spark, monkeypatch):
     """One centroid holding ~30% of corpus mass (the real-corpus hot-list
     shape, r2 VERDICT task 4): recall must hold for queries inside AND
     outside the hot region, and the physical plan must show the skew-proof
     shape — broadcast probe join (no shuffle for a hot list to skew) and
-    WindowGroupLimit bounding the per-query top-k shuffle."""
+    WindowGroupLimit bounding the per-query top-k shuffle — in the Spark
+    plan of a batch of ``layout.QUERY_CROSSOVER`` or more queries; a
+    smaller batch is ranked on the driver and shuffles nothing."""
     rng = np.random.default_rng(3)
     centers = rng.normal(scale=10.0, size=(16, 16))
     hot = centers[0] + rng.normal(scale=0.5, size=(2400, 16))
@@ -97,9 +100,14 @@ def test_ivf_hot_centroid_skew(spark):
     recall = len(p & g) / len(g)
     assert recall >= 0.95, f"hot-centroid recall {recall}"
 
-    plan = (ivf.search(queries, inv, corpus, C, k=10, max_dist=1e9,
-                       metric="l2", nprobe=3)
-            ._jdf.queryExecution().executedPlan().toString())
+    def plan():
+        return (ivf.search(queries, inv, corpus, C, k=10, max_dist=1e9,
+                           metric="l2", nprobe=3)
+                ._jdf.queryExecution().executedPlan().toString())
+
+    assert "Exchange" not in plan()
+    monkeypatch.setattr(layout, "QUERY_CROSSOVER", 0)
+    plan = plan()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "hot list would concentrate a shuffle"
     assert "WindowGroupLimit" in plan, "top-k must pre-limit per partition"

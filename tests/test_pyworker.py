@@ -86,8 +86,8 @@ def test_guard_runs_in_workers_and_driver_relations_skip_them(spark):
 
 
 def test_search_relations_skip_python_workers_with_arrow_off(spark, monkeypatch):
-    """The driver bucket build, the ANN and IVF probe frames and the small
-    batches' candidate relations are built from Arrow tables: with the
+    """The driver bucket build and the small batches' candidate and result
+    relations are built from Arrow tables: with the
     session's Arrow conversion off none of them plans a PythonRDD, and the
     top-k equals the Arrow-on one."""
     rng = np.random.default_rng(11)
@@ -130,7 +130,7 @@ def test_search_relations_skip_python_workers_with_arrow_off(spark, monkeypatch)
         spark.conf.set(key, before)
     inverted.unpersist()
     assert on == off and all(on[:2]) and on[2] == []
-    # bucket build + three probe frames + the three small batches' local
-    # candidate relations
-    assert len(made) == 7
+    # bucket build, the three small batches' local result relations and the
+    # sql verify's candidate relation (no probe frame: small batches filter)
+    assert len(made) == 5
     assert not any(_python_rdd(df) for df in made)

@@ -9,10 +9,9 @@ Checks, per operator:
 - the candidate self-join and verify joins pick broadcast where one side is
   small, and stay inside WholeStageCodegen elsewhere;
 - the ANN search probe join broadcasts the query side;
-- a small ANN/IVF batch (fewer than ``layout.QUERY_CROSSOVER`` queries)
-  broadcasts its driver-built local candidate relation into the corpus
-  verify with no Exchange before the verify; a batch of 256 or more keeps
-  the distributed dedup / cap plan.
+- a small ANN/IVF batch (fewer than ``layout.QUERY_CROSSOVER`` queries) is
+  searched on the driver and returns a local relation (one LocalTableScan);
+  a batch of 256 or more keeps the distributed dedup / cap plan.
 """
 
 from __future__ import annotations
@@ -167,9 +166,9 @@ def main() -> None:
     b = ann.build_buckets(emb, model, "id", "vec")
     s = ann.search(queries, b, emb, model, k=5, max_dist=2.0, metric="cosine",
                    dist_impl="matmul_grouped", max_candidates=50)
-    print("## ANN LSH search, 10 queries (candidates deduped and capped on the "
-          "driver: the local grouped relation is broadcast into the corpus "
-          "verify — no Exchange before the verify, only the top-k shuffles)\n")
+    print("## ANN LSH search, 10 queries (bucket and candidate corpus rows "
+          "collected by filtered scans, verified and ranked on the driver: "
+          "the result is a local relation)\n")
     print("```")
     print(condensed(s))
     print("```\n")
@@ -190,9 +189,9 @@ def main() -> None:
     inv = ivf.assign(emb, C, "cosine")
     si = ivf.search(queries, inv, emb, C, k=5, max_dist=2.0, metric="cosine",
                     nprobe=3)
-    print("## IVF search, 10 queries (list rows matched and collected on the "
-          "driver; the local candidate relation is broadcast into the verify "
-          "→ window top-k)\n")
+    print("## IVF search, 10 queries (list rows collected by a filtered scan "
+          "and grouped on the driver; the sql verify scores them in Spark, the "
+          "top-k is taken on the driver: the result is a local relation)\n")
     print("```")
     print(condensed(si))
     print("```\n")

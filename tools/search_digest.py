@@ -9,11 +9,13 @@ file per case, so a differing plan digest can be read.
 
 The checkout goes first on ``sys.path`` and on ``PYTHONPATH`` before the
 Spark session starts, so the Python workers import the same code as the
-driver.  On a seeded 1200×16 Gaussian mixture the script runs 36 cases:
+driver.  On a seeded 1200×16 Gaussian mixture the script runs 48 cases:
 ``ann.search`` and ``ann.search_from_store`` (with the cap on and off),
 ``ivf.search`` and ``ivf.search_from_store``, each at 10 and 300 queries
 (both sides of ``layout.QUERY_CROSSOVER``) and with each of the three
-verify backends.  It prints one line per case: the row count, a sha256
+verify backends; then ``ann.search`` and ``ivf.search`` at 10 queries with
+the cosine metric (an angular forest and spherical centroids) and with
+string ids, with each backend.  It prints one line per case: the row count, a sha256
 prefix of the sorted output rows (distances included, by ``repr``), and one
 of the physical plans of every SQL execution the case ran
 (``plan_audit.executed_plans``), normalized by :func:`normalize`.  A last
@@ -81,11 +83,14 @@ def main(argv: list[str]) -> None:
     qv = (train[rng.integers(0, len(train), max(SIZES))]
           + rng.normal(scale=0.3, size=(max(SIZES), 16)))
 
-    def frame(id_name, X, first_id=0):
+    def frame(id_name, X, first_id=0, strings=False):
+        ids = np.arange(first_id, first_id + len(X))
+        if strings:     # Python order differs from numeric; multi-byte
+            ids = [f"{'é' if i % 3 else 'z'}{i % 7}-{i}" for i in ids]
         return spark.createDataFrame(
-            pa.table({id_name: np.arange(first_id, first_id + len(X)),
+            pa.table({id_name: ids,
                       "vec": pa.array(X.tolist(), pa.list_(pa.float64()))}),
-            f"{id_name} long, vec array<double>")
+            f"{id_name} {'string' if strings else 'long'}, vec array<double>")
 
     corpus = frame("id", train).cache()
     queries = frame("query_id", qv, 10_000).cache()
@@ -94,6 +99,15 @@ def main(argv: list[str]) -> None:
     buckets = ann.build_buckets(corpus, model).cache()
     C = ivf.fit_centroids(train, 16, "l2", seed=3)
     inv = ivf.assign(corpus, C, "l2").cache()
+    cos_model = ann.fit(train, AnnConfig(n_trees=8, k_min_vecs=40, dims=16,
+                                         seed=3, is_angular=True))
+    cos_buckets = ann.build_buckets(corpus, cos_model).cache()
+    cos_C = ivf.fit_centroids(train, 16, "cosine", seed=3)
+    cos_inv = ivf.assign(corpus, cos_C, "cosine").cache()
+    s_corpus = frame("id", train, strings=True).cache()
+    s_queries = frame("query_id", qv[:min(SIZES)], 10_000, strings=True).cache()
+    s_buckets = ann.build_buckets(s_corpus, model).cache()
+    s_inv = ivf.assign(s_corpus, C, "l2").cache()
     tmp = tempfile.mkdtemp(prefix="search_digest_")
     store_path = os.path.join(tmp, "store")
     ann.write_bucket_store(buckets, store_path, hash_partitions=8,
@@ -102,7 +116,8 @@ def main(argv: list[str]) -> None:
     ivf.write_list_store(inv, list_path, centroids=C)
     # materialize every cache first: a cache that fills during a case
     # changes the size estimates, and so the plan, of that case
-    for df in (corpus, queries, buckets, inv):
+    for df in (corpus, queries, buckets, inv, cos_buckets, cos_inv, s_corpus,
+               s_queries, s_buckets, s_inv):
         df.count()
 
     cases = []
@@ -126,6 +141,24 @@ def main(argv: list[str]) -> None:
             cases.append((f"ivf.search_from_store n={n} {impl}",
                           lambda qs=qs, kw=kw: ivf.search_from_store(
                               qs, list_path, corpus, C, nprobe=3, **kw)))
+
+    small = queries.filter(F.col("query_id") < 10_000 + min(SIZES))
+    for impl in IMPLS:
+        kw = dict(k=5, max_dist=1e9, dist_impl=impl)
+        cases += [
+            (f"ann.search n={min(SIZES)} {impl} cosine",
+             lambda kw=kw: ann.search(small, cos_buckets, corpus, cos_model,
+                                      metric="cosine", max_candidates=CAP,
+                                      **kw)),
+            (f"ivf.search n={min(SIZES)} {impl} cosine",
+             lambda kw=kw: ivf.search(small, cos_inv, corpus, cos_C,
+                                      metric="cosine", nprobe=3, **kw)),
+            (f"ann.search n={min(SIZES)} {impl} string ids",
+             lambda kw=kw: ann.search(s_queries, s_buckets, s_corpus, model,
+                                      metric="l2", max_candidates=CAP, **kw)),
+            (f"ivf.search n={min(SIZES)} {impl} string ids",
+             lambda kw=kw: ivf.search(s_queries, s_inv, s_corpus, C,
+                                      metric="l2", nprobe=3, **kw))]
 
     try:
         for name, make in cases:
